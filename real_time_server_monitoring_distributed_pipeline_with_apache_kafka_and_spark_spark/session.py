@@ -5,6 +5,24 @@ we centralize session policy so every entry point (tests, bench, driver
 contract) runs with the same scale-oriented settings: AQE on, explicit UTC
 timezone (oracle comparison), Arrow for any pandas interchange, shuffle
 partitions sized to the machine instead of the 200 default.
+
+Shuffle partitions come in two regimes, sized separately:
+
+- Streaming state: ``spark.sql.shuffle.partitions`` = the task-slot count.
+  Structured Streaming turns AQE off, so this value alone fixes how many
+  state partitions a new stateful query gets, and every trigger loads and
+  commits one state store per partition per stateful operator (four per
+  partition for a stream-stream join). A commit costs about 50-80 ms per
+  store instance, whatever the micro-batch size, so the cheapest trigger
+  is one wave of slot-count tasks; the batch count of 2x slots made it
+  three waves at ``local[3]`` (40 stores instead of 15 for the
+  join-then-window alert jobs). A restarted query keeps the count
+  recorded in its checkpoint's offset log, so checkpoints written at
+  another count keep working.
+- Batch: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` =
+  ``max(2 x slots, 8)``. With AQE and partition coalescing on, Spark plans
+  batch shuffles at this count and coalesces them at run time, so batch
+  plans keep their former 2x-slots layout.
 """
 
 from __future__ import annotations
@@ -65,28 +83,46 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+INITIAL_PARTITION_NUM = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
+def partition_confs(slots: int, batch_partitions: int | None = None) -> dict[str, str]:
+    """The two shuffle regimes for ``slots`` task slots: state partitions
+    = ``slots``, batch shuffles planned at ``batch_partitions`` (default
+    ``max(2 x slots, 8)``) and coalesced by AQE."""
+    if batch_partitions is None:
+        batch_partitions = max(2 * slots, 8)
+    return {
+        "spark.sql.shuffle.partitions": str(slots),
+        INITIAL_PARTITION_NUM: str(batch_partitions),
+    }
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
 
     Shuffle parallelism: ONLY when the session still carries Spark's
     untouched 200-partition default (the external verification driver
     builds a bare session — 200 schedules ~3x more tasks than local
-    cores, pure overhead at small SF) is it resized to the machine. A
-    session whose owner SET shuffle partitions (a real cluster sized for
-    1000 executors) is respected — clobbering that to 2x driver cores
-    would be the real scale bug. An owner who DELIBERATELY wants exactly
-    200 (indistinguishable from the untouched default through the conf
-    API) opts out with SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1. Results
-    are partition-count-invariant either way (decimal sums, lattice
-    rounding — pinned by the partition-invariance property tests).
+    cores, pure overhead at small SF) is it resized, to the session's own
+    task slots (``defaultParallelism``, not the machine's cores: a
+    ``local[3]`` session on a 16-core box has 3 slots) in the two regimes
+    of :func:`partition_confs`. A session whose owner SET shuffle
+    partitions (a real cluster sized for 1000 executors) is respected and
+    gets no ``initialPartitionNum``, so the owner's count still governs
+    both batch and state — clobbering it to driver cores would be the
+    real scale bug. An owner who DELIBERATELY wants exactly 200
+    (indistinguishable from the untouched default through the conf API)
+    opts out with SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1. Results are
+    partition-count-invariant either way (decimal sums, lattice rounding
+    — pinned by the partition-invariance property tests).
     """
     for key, value in RUNTIME_CONFS.items():
         spark.conf.set(key, value)
     keep = os.environ.get("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS", "") == "1"
     if not keep and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(2 * (os.cpu_count() or 4), 8))
-        )
+        for key, value in partition_confs(spark.sparkContext.defaultParallelism).items():
+            spark.conf.set(key, value)
     return spark
 
 
@@ -97,18 +133,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a local session with engine defaults.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
-    default to 2x cores for local mode (at cluster scale this is instead
-    governed by AQE's target advisory size).
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Stateful streaming
+    queries get ``cpus`` state partitions (one wave of state-store commits
+    per trigger); batch shuffles are planned at ``shuffle_partitions``
+    (default ``max(2 x cpus, 8)``) and coalesced by AQE. See the module
+    docstring for why the two differ. A running session is fetched with
+    its partition counts untouched.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -116,6 +152,11 @@ def get_spark(
         # bench driver parses the last stdout line as JSON).
         .config("spark.ui.showConsoleProgress", "false")
     )
+    # A fetched session keeps its partition counts: its master (and so
+    # its task slots) is already fixed and need not be ``cpus``, and
+    # getOrCreate would otherwise overwrite its owner's counts.
+    if SparkSession.getActiveSession() is None:
+        builder = builder.config(map=partition_confs(cpus, shuffle_partitions))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_confs(spark)

@@ -42,22 +42,30 @@ def test_cache_scope_clears_everything(spark):
 
 
 def test_runtime_confs_respect_user_shuffle_partitions(spark):
-    """apply_runtime_confs resizes ONLY the untouched 200 default: a
-    session whose owner set shuffle partitions (a sized cluster) must
-    never be clobbered to 2x local cores."""
+    """apply_runtime_confs resizes ONLY the untouched 200 default, to the
+    session's task slots (state) and 2x slots (batch, initialPartitionNum):
+    a session whose owner set shuffle partitions (a sized cluster) must
+    never be clobbered, and gets no initialPartitionNum, so the owner's
+    count governs batch and state alike."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        INITIAL_PARTITION_NUM,
         apply_runtime_confs,
     )
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_initial = spark.conf.get(INITIAL_PARTITION_NUM, None)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "200")
         apply_runtime_confs(spark)
-        assert spark.conf.get("spark.sql.shuffle.partitions") != "200"
+        slots = spark.sparkContext.defaultParallelism
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(slots)
+        assert spark.conf.get(INITIAL_PARTITION_NUM) == str(max(2 * slots, 8))
 
+        spark.conf.unset(INITIAL_PARTITION_NUM)
         spark.conf.set("spark.sql.shuffle.partitions", "1000")
         apply_runtime_confs(spark)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "1000"
+        assert spark.conf.get(INITIAL_PARTITION_NUM, None) is None
 
         # An owner who DELIBERATELY wants exactly 200 (indistinguishable
         # from the untouched default) opts out via env var.
@@ -68,7 +76,27 @@ def test_runtime_confs_respect_user_shuffle_partitions(spark):
         try:
             apply_runtime_confs(spark)
             assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+            assert spark.conf.get(INITIAL_PARTITION_NUM, None) is None
         finally:
             del _os.environ["SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS"]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if prev_initial is None:
+            spark.conf.unset(INITIAL_PARTITION_NUM)
+        else:
+            spark.conf.set(INITIAL_PARTITION_NUM, prev_initial)
+
+
+def test_get_spark_keeps_a_fetched_sessions_partition_counts(spark):
+    """get_spark on a running session (the CLI roles call it in-process)
+    fetches it without resizing: its master, and so its task slots, is
+    already fixed, and its owner's partition counts stay."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        INITIAL_PARTITION_NUM,
+        get_spark,
+    )
+
+    keys = ("spark.sql.shuffle.partitions", INITIAL_PARTITION_NUM)
+    before = [spark.conf.get(k) for k in keys]
+    assert get_spark("rtsm-refetch", cpus=2, shuffle_partitions=3) is spark
+    assert [spark.conf.get(k) for k in keys] == before

@@ -4,8 +4,11 @@ file/memory streams (no broker in this environment)."""
 
 from __future__ import annotations
 
+import re
 import shutil
 import time
+from contextlib import contextmanager
+from datetime import timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,7 +27,7 @@ from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spar
     parse,
 )
 
-from .fixtures import metrics_wide_df, narrow_splits, write_csv_batch
+from .fixtures import BASE_TS, metrics_wide_df, narrow_splits, write_csv_batch
 
 
 def test_parse_and_demux_kafka_shape(spark):
@@ -2620,6 +2623,143 @@ def test_state_store_reader_exposes_live_state(spark, tmp_path):
         for r in read_state_store(spark, ckpt).collect()
     }
     assert len(set(pids.values())) >= 2 or n_parts == 1
+
+
+@contextmanager
+def _session_confs(spark, confs: dict[str, str]):
+    """Set session confs for the block, then restore (or unset) each one
+    so nothing leaks into later tests sharing the session."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _cpu_mem_streams(spark, cpu_src, mem_src):
+    return (
+        spark.readStream.schema(schemas.METRICS_CPU).csv(cpu_src),
+        spark.readStream.schema(schemas.METRICS_MEM).csv(mem_src),
+    )
+
+
+def test_state_and_batch_shuffles_take_separate_partition_counts(spark, tmp_path):
+    """The session's two shuffle regimes (session.partition_confs) rest
+    on this Spark behaviour: a NEW stateful query takes its state
+    partition count from spark.sql.shuffle.partitions (streaming runs
+    with AQE off), while a batch plan under AQE + partition coalescing
+    plans its shuffles at initialPartitionNum."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
+        cpu_mem_job,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.inspect import (
+        formatted_plan,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        INITIAL_PARTITION_NUM,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.metrics import (
+        read_state_metadata,
+    )
+
+    cpu, mem, _, _ = narrow_splits(metrics_wide_df(spark))
+    cpu_src, mem_src = str(tmp_path / "cpu"), str(tmp_path / "mem")
+    ckpt = str(tmp_path / "ckpt")
+    write_csv_batch(cpu, cpu_src)
+    write_csv_batch(mem, mem_src)
+    with _session_confs(
+        spark, {"spark.sql.shuffle.partitions": "3", INITIAL_PARTITION_NUM: "8"}
+    ):
+        q = (
+            jobs.streaming_cpu_mem_job(*_cpu_mem_streams(spark, cpu_src, mem_src))
+            .writeStream.outputMode("append")
+            .format("noop")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        plan = formatted_plan(cpu_mem_job(cpu, mem))
+    meta = read_state_metadata(spark, ckpt).collect()
+    # the join's four stores and the window aggregate's store
+    assert {r.operatorName for r in meta} == {"symmetricHashJoin", "stateStoreSave"}, meta
+    assert all(r.numPartitions == 3 for r in meta), meta
+    batch_parts = re.findall(r"(?:hash|range)partitioning\(.*, (\d+)\)", plan)
+    assert batch_parts and set(batch_parts) == {"8"}, plan
+
+
+def test_stateful_restart_keeps_recorded_partition_count(spark, tmp_path):
+    """A checkpoint written at 8 state partitions restarts under
+    shuffle.partitions=3 with its recorded 8 (Spark restores the count
+    from the offset log), its join and window state intact: the output
+    across the restart equals the batch job's. Resizing the session's
+    state partitions must never break a deployed checkpoint.
+
+    The split leaves mem rows of the first 30 s after the cut waiting in
+    join state across the restart, and windows straddling the cut in
+    the aggregate's state; a far-future sentinel pair advances the
+    watermark past every real window so all of them close."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
+        cpu_mem_job,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.metrics import (
+        read_state_metadata,
+    )
+
+    cpu, mem, _, _ = narrow_splits(metrics_wide_df(spark))
+    cut = BASE_TS + timedelta(minutes=5)
+    cpu_src, mem_src = str(tmp_path / "cpu"), str(tmp_path / "mem")
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    write_csv_batch(cpu.filter(F.col("ts") < cut), cpu_src)
+    write_csv_batch(mem.filter(F.col("ts") < cut + timedelta(seconds=30)), mem_src)
+
+    def run(partitions: str):
+        with _session_confs(spark, {"spark.sql.shuffle.partitions": partitions}):
+            q = (
+                jobs.streaming_cpu_mem_job(*_cpu_mem_streams(spark, cpu_src, mem_src))
+                .writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        return {r.numPartitions for r in read_state_metadata(spark, ckpt).collect()}
+
+    assert run("8") == {8}
+    n_first = spark.read.parquet(sink).count()
+    write_csv_batch(cpu.filter(F.col("ts") >= cut), cpu_src)
+    write_csv_batch(mem.filter(F.col("ts") >= cut + timedelta(seconds=30)), mem_src)
+    far = BASE_TS + timedelta(hours=1)
+    write_csv_batch(spark.createDataFrame([(far, "sentinel", 0.0)], schemas.METRICS_CPU), cpu_src)
+    write_csv_batch(spark.createDataFrame([(far, "sentinel", 0.0)], schemas.METRICS_MEM), mem_src)
+    assert run("3") == {8}
+
+    def keyed(df):
+        return {
+            (r.server_id, r.window_start, r.window_end, r.alert): (r.avg_cpu, r.avg_mem)
+            for r in df.collect()
+        }
+
+    got = keyed(spark.read.parquet(sink))
+    expected = keyed(cpu_mem_job(cpu, mem))
+    assert 0 < n_first < len(got) == spark.read.parquet(sink).count()
+    assert got.keys() == expected.keys()
+    # averages summed in another order may differ by one rounding unit
+    for k, (a_cpu, a_mem) in expected.items():
+        g_cpu, g_mem = got[k]
+        assert abs(g_cpu - a_cpu) <= 0.011 and abs(g_mem - a_mem) <= 0.011, (k, got[k], expected[k])
 
 
 def test_transform_with_state_v2_matches_v1_and_batch(spark, tmp_path):
