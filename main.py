@@ -29,6 +29,7 @@ Usage: python main.py <role> [--config config.yaml] [--parquet] [--dry-run]
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 
@@ -63,12 +64,11 @@ ROLES = (
     "layout",
 )
 
-# (metric, topic-attr, landed file stem) per consumer, consumer1.py:30-36 /
-# consumer2.py:30-36.
-CONSUMER_TOPICS = {
-    "consumer1": [("cpu", "topic_cpu", "cpu_data"), ("mem", "topic_mem", "mem_data")],
-    "consumer2": [("net", "topic_net", "net_data"), ("disk", "topic_disk", "disk_data")],
-}
+def _pair(role: str) -> ops.AlertPair:
+    """consumerN, spark-jobN and stream-jobN serve the reference's Nth
+    metric pair (consumer1.py / spark_job1.py: cpu+mem; *2: net+disk).
+    Topics, landed stems, outputs and checkpoints derive from its metrics."""
+    return ops.ALERT_PAIRS[int(role[-1]) - 1]
 
 
 def wire_messages(spark, config: cfg.PipelineConfig):
@@ -76,18 +76,10 @@ def wire_messages(spark, config: cfg.PipelineConfig):
     DataFrame: union of per-topic (topic, value) CSV messages."""
     wide = readers.read_metrics_csv(spark, config.paths.data_file, "wide")
     parts = [
-        parse.to_wire(wide.select("ts", "server_id", *cols), metric, getattr(config.kafka, attr))
-        for metric, attr, cols in [
-            ("cpu", "topic_cpu", ["cpu_pct"]),
-            ("mem", "topic_mem", ["mem_pct"]),
-            ("net", "topic_net", ["net_in", "net_out"]),
-            ("disk", "topic_disk", ["disk_io"]),
-        ]
+        parse.to_wire(wide, metric, config.kafka.topic(metric))
+        for metric in schemas.TOPIC_SCHEMAS
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(lambda a, b: a.unionByName(b), parts)
 
 
 def run_producer(spark, config: cfg.PipelineConfig, dry_run: bool) -> dict:
@@ -162,13 +154,14 @@ def run_consumer(spark, config: cfg.PipelineConfig, role: str, parquet: bool = F
     compressed, pruned on read by the downstream jobs).
     """
     kafka_io.require_kafka_connector(spark)
-    topics = CONSUMER_TOPICS[role]
+    metrics = _pair(role).metrics
     records = kafka_io.kafka_source(
-        spark, config.kafka, topics=[getattr(config.kafka, attr) for _, attr, _ in topics]
+        spark, config.kafka, topics=[config.kafka.topic(m) for m in metrics]
     ).load()
     queries = []
-    for metric, attr, stem in topics:
-        landed = parse.demux_topic(records, getattr(config.kafka, attr), metric)
+    for metric in metrics:
+        stem = f"{metric}_data"
+        landed = parse.demux_topic(records, config.kafka.topic(metric), metric)
         writer = (
             landed.writeStream.format("parquet" if parquet else "csv")
             .option("path", os.path.join(config.paths.output_dir, stem))
@@ -184,12 +177,11 @@ def run_consumer(spark, config: cfg.PipelineConfig, role: str, parquet: bool = F
         q.awaitTermination()
 
 
-def _landed(spark, config: cfg.PipelineConfig, stem: str, metric: str):
-    """Read a landed metric table; accepts our directory landing (CSV or
-    parquet, per the consumer's --parquet flag) and the reference's single
-    ``<stem>.csv`` file."""
-    base = config.paths.output_dir
-    path = os.path.join(base, stem)
+def _landed(spark, config: cfg.PipelineConfig, metric: str):
+    """Read a landed metric table; accepts our ``<metric>_data`` directory
+    landing (CSV or parquet, per the consumer's --parquet flag) and the
+    reference's single ``<metric>_data.csv`` file."""
+    path = os.path.join(config.paths.output_dir, f"{metric}_data")
     if not os.path.exists(path) and os.path.exists(path + ".csv"):
         path = path + ".csv"
     schema = schemas.TOPIC_SCHEMAS[metric]
@@ -207,31 +199,23 @@ def run_spark_job(
     parquet: bool,
     float32_parity: bool = False,
 ) -> None:
-    if role == "spark-job1":
-        result = ops.cpu_mem_job(
-            _landed(spark, config, "cpu_data", "cpu"),
-            _landed(spark, config, "mem_data", "mem"),
-            config=config,
-            time_format="HH:mm:ss",
-            float32_parity=float32_parity,
-        )
-        stem, ref_stem = "cpu_mem_alerts", f"team_{config.team_number}_CPU_MEM.csv"
-    else:
-        result = ops.net_disk_job(
-            _landed(spark, config, "net_data", "net"),
-            _landed(spark, config, "disk_data", "disk"),
-            config=config,
-            time_format="HH:mm:ss",
-            float32_parity=float32_parity,
-        )
-        stem, ref_stem = "net_disk_alerts", f"team_{config.team_number}_NET_DISK.csv"
+    pair = _pair(role)
+    result = ops.alert_job(
+        pair,
+        *[_landed(spark, config, m) for m in pair.metrics],
+        config=config,
+        time_format="HH:mm:ss",
+        float32_parity=float32_parity,
+    )
     if parquet:
-        dest = os.path.join(config.paths.output_dir, stem)
+        dest = os.path.join(config.paths.output_dir, f"{pair.name}_alerts")
         readers.write_partitioned_parquet(result, dest)
     else:
         # CSV is the drop-in parity path: reference output naming
         # (spark_job1.py:56-57, team_number from config.yaml:1).
-        dest = os.path.join(config.paths.output_dir, ref_stem)
+        dest = os.path.join(
+            config.paths.output_dir, f"team_{config.team_number}_{pair.name.upper()}.csv"
+        )
         readers.write_single_csv(result, dest)
     print(f"{role}: alerts -> {dest}")
 
@@ -242,22 +226,18 @@ def run_stream_job(spark, config: cfg.PipelineConfig, role: str) -> None:
     )
 
     kafka_io.require_kafka_connector(spark)
-    if role == "stream-job1":
-        topics = (config.kafka.topic_cpu, config.kafka.topic_mem)
-        metrics = ("cpu", "mem")
-        job, stem = jobs.streaming_cpu_mem_job, "cpu_mem_alerts_stream"
-    else:
-        topics = (config.kafka.topic_net, config.kafka.topic_disk)
-        metrics = ("net", "disk")
-        job, stem = jobs.streaming_net_disk_job, "net_disk_alerts_stream"
-    records = kafka_io.kafka_source(spark, config.kafka, topics=list(topics)).load()
-    left = parse.demux_topic(records, topics[0], metrics[0])
-    right = parse.demux_topic(records, topics[1], metrics[1])
-    alerts = job(left, right, config=config)
+    pair = _pair(role)
+    topics = [config.kafka.topic(m) for m in pair.metrics]
+    records = kafka_io.kafka_source(spark, config.kafka, topics=topics).load()
+    alerts = jobs.streaming_alert_job(
+        pair,
+        *[parse.demux_topic(records, t, m) for t, m in zip(topics, pair.metrics)],
+        config=config,
+    )
     (
         alerts.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", os.path.join(config.paths.output_dir, stem))
+        .option("path", os.path.join(config.paths.output_dir, f"{pair.name}_alerts_stream"))
         .option(
             "checkpointLocation",
             os.path.join(config.paths.output_dir, f"_checkpoint_{role}"),
@@ -437,11 +417,11 @@ def main(argv: list[str] | None = None) -> None:
 
     if args.role == "producer":
         run_producer(spark, config, args.dry_run)
-    elif args.role in CONSUMER_TOPICS:
+    elif args.role.startswith("consumer"):
         run_consumer(spark, config, args.role, args.parquet)
-    elif args.role in ("spark-job1", "spark-job2"):
+    elif args.role.startswith("spark-job"):
         run_spark_job(spark, config, args.role, args.parquet, args.float32_parity)
-    elif args.role in ("stream-job1", "stream-job2"):
+    elif args.role.startswith("stream-job"):
         run_stream_job(spark, config, args.role)
     elif args.role == "query":
         run_query(spark, args)

@@ -39,6 +39,10 @@ class KafkaConfig:
     topic_disk: str = "topic-disk"
     starting_offsets: str = "earliest"
 
+    def topic(self, metric: str) -> str:
+        """The topic carrying ``metric`` (cpu, mem, net or disk)."""
+        return getattr(self, f"topic_{metric}")
+
     @property
     def all_topics(self) -> list[str]:
         return [self.topic_cpu, self.topic_mem, self.topic_net, self.topic_disk]

@@ -9,6 +9,14 @@ Reference parity (SURVEY.md SS2):
 Every function is ``DataFrame -> DataFrame`` and works identically on batch
 and streaming inputs (Structured Streaming compiles the same logical plan).
 
+The reference's two jobs are one pair table and one builder: an
+:class:`AlertPair` (``CPU_MEM``, ``NET_DISK`` in ``ALERT_PAIRS``) names the
+metrics, the window aggregate, the input/output columns and the three alert
+labels, and :func:`alert_job` composes J, A, P7 and P1 for any pair.
+``cpu_mem_job``/``net_disk_job`` are the builder bound to each pair; the
+stream jobs (streaming/jobs.py) are it over watermarked inputs, and main.py's
+*1/*2 roles derive topics, files and outputs from the pair's metric names.
+
 Scale notes (100 TB posture):
 - The join shuffles both sides on (ts, entity) - at scale, pre-bucketing the
   landed tables on the entity key or ingesting via one wide Kafka topic
@@ -22,6 +30,10 @@ Scale notes (100 TB posture):
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -203,87 +215,84 @@ def format_window_output(
     return df.select(*cols)
 
 
-def cpu_mem_job(
-    cpu: DataFrame,
-    mem: DataFrame,
+@dataclass(frozen=True)
+class AlertPair:
+    """One of the reference's alert jobs, as data: everything that differs
+    between spark_job1 (cpu+mem, window avg) and spark_job2 (net+disk,
+    window max). Thresholds come from ``config.thresholds`` by input
+    column name; topics, landed files and output names derive from
+    ``metrics`` (main.py)."""
+
+    metrics: tuple[str, str]  # topic keys: schemas.TOPIC_SCHEMAS, KafkaConfig.topic
+    agg: Callable[[str], Column]  # window aggregate, F.avg or F.max
+    inputs: tuple[str, str]  # metric columns joined and aggregated
+    outputs: tuple[str, str]  # aggregated column names
+    labels: tuple[str, str, str]  # alert labels: both, first only, second only
+
+    @property
+    def name(self) -> str:
+        return "_".join(self.metrics)
+
+
+CPU_MEM = AlertPair(
+    ("cpu", "mem"), F.avg, ("cpu_pct", "mem_pct"), ("avg_cpu", "avg_mem"),
+    ("High CPU + Memory stress", "CPU spike suspected", "Memory saturation suspected"),
+)
+NET_DISK = AlertPair(
+    ("net", "disk"), F.max, ("net_in", "disk_io"), ("max_net_in", "max_disk_io"),
+    ("Network flood + Disk thrash suspected", "Possible DDoS", "Disk thrash suspected"),
+)
+# The reference's job 1 and job 2, in that order (main.py's *1/*2 roles).
+ALERT_PAIRS = (CPU_MEM, NET_DISK)
+
+
+def alert_job(
+    pair: AlertPair,
+    left: DataFrame,
+    right: DataFrame,
     config=DEFAULT_CONFIG,
     entity_col: str = "server_id",
-    cpu_col: str = "cpu_pct",
-    mem_col: str = "mem_pct",
     time_format: str | None = None,
     round_fn=None,
     float32_parity: bool = False,
     sliding_agg_fn=None,
 ) -> DataFrame:
-    """Reference spark_job1 end-to-end: join -> window avg -> alert -> format
-    (spark_job1.py:6-54), parameterized over column names so the same
-    operator runs on the reference metric schema and the testdata analog.
+    """A reference alert job end-to-end: join -> sliding-window agg ->
+    CASE alert -> format (spark_job1.py:6-54, spark_job2.py:6-54).
 
-    ``float32_parity=True`` reproduces the reference's pre-avg float
-    downcast (spark_job1.py:20-21): metrics lose precision to float32
-    BEFORE averaging, shifting results in the ~7th significant digit.
-    Default keeps double (deliberate deviation, SURVEY.md SS1.2).
-    ``sliding_agg_fn`` swaps the window-agg implementation (same
-    signature/semantics as :func:`sliding_window_agg`; pass
-    :func:`sliding_window_agg_exploded` for the bucketed zero-exchange
-    layout).
+    Batch and streaming share it: the stream jobs pass watermarked
+    inputs (streaming/jobs.py). ``float32_parity=True`` reproduces the
+    reference's pre-agg float downcast of both inputs (spark_job1.py:20-21,
+    spark_job2.py:20-21; net_out is never cast there and never
+    aggregated): precision drops to float32 BEFORE aggregating, shifting
+    avg results in the ~7th significant digit. Default keeps double
+    (deliberate deviation, SURVEY.md SS1.2). ``sliding_agg_fn`` swaps the
+    window-agg implementation (same signature/semantics as
+    :func:`sliding_window_agg`; pass :func:`sliding_window_agg_exploded`
+    for the bucketed zero-exchange layout).
     """
-    joined = join_metric_streams(cpu, mem, keys=("ts", entity_col))
+    joined = join_metric_streams(left, right, keys=("ts", entity_col))
     if float32_parity:
-        joined = joined.withColumn(cpu_col, F.col(cpu_col).cast("float")).withColumn(
-            mem_col, F.col(mem_col).cast("float")
-        )
+        for c in pair.inputs:
+            joined = joined.withColumn(c, F.col(c).cast("float"))
     agged = (sliding_agg_fn or sliding_window_agg)(
         joined,
-        {"avg_cpu": F.avg(cpu_col), "avg_mem": F.avg(mem_col)},
+        {out: pair.agg(c) for out, c in zip(pair.outputs, pair.inputs)},
         entity_col=entity_col,
         window=config.window,
     )
+    both, first, second = pair.labels
+    (a, b), (out_a, out_b) = pair.inputs, pair.outputs
     alerts = agged.withColumn(
         "alert",
         alert_case(
-            "High CPU + Memory stress",
-            ("avg_cpu", config.thresholds.cpu_pct, "CPU spike suspected"),
-            ("avg_mem", config.thresholds.mem_pct, "Memory saturation suspected"),
+            both,
+            (out_a, getattr(config.thresholds, a), first),
+            (out_b, getattr(config.thresholds, b), second),
         ),
     )
-    return format_window_output(alerts, entity_col, ["avg_cpu", "avg_mem"], time_format, round_fn=round_fn)
+    return format_window_output(alerts, entity_col, list(pair.outputs), time_format, round_fn=round_fn)
 
 
-def net_disk_job(
-    net: DataFrame,
-    disk: DataFrame,
-    config=DEFAULT_CONFIG,
-    entity_col: str = "server_id",
-    net_col: str = "net_in",
-    disk_col: str = "disk_io",
-    time_format: str | None = None,
-    round_fn=None,
-    float32_parity: bool = False,
-    sliding_agg_fn=None,
-) -> DataFrame:
-    """Reference spark_job2 end-to-end: join -> window max -> alert -> format
-    (spark_job2.py:6-54). ``float32_parity`` as in :func:`cpu_mem_job`
-    (reference casts net_in and disk_io, spark_job2.py:20-21; net_out is
-    never cast there and never aggregated). ``sliding_agg_fn`` as in
-    :func:`cpu_mem_job` (bucketed zero-exchange layout)."""
-    joined = join_metric_streams(net, disk, keys=("ts", entity_col))
-    if float32_parity:
-        joined = joined.withColumn(net_col, F.col(net_col).cast("float")).withColumn(
-            disk_col, F.col(disk_col).cast("float")
-        )
-    agged = (sliding_agg_fn or sliding_window_agg)(
-        joined,
-        {"max_net_in": F.max(net_col), "max_disk_io": F.max(disk_col)},
-        entity_col=entity_col,
-        window=config.window,
-    )
-    alerts = agged.withColumn(
-        "alert",
-        alert_case(
-            "Network flood + Disk thrash suspected",
-            ("max_net_in", config.thresholds.net_in, "Possible DDoS"),
-            ("max_disk_io", config.thresholds.disk_io, "Disk thrash suspected"),
-        ),
-    )
-    return format_window_output(alerts, entity_col, ["max_net_in", "max_disk_io"], time_format, round_fn=round_fn)
+cpu_mem_job = partial(alert_job, CPU_MEM)
+net_disk_job = partial(alert_job, NET_DISK)

@@ -1,8 +1,10 @@
 """Streaming analytics legs: the reference jobs under Structured Streaming.
 
-The batch operator library (operators/monitoring.py) is reused verbatim -
-Structured Streaming compiles the same logical plan into an incremental
-one. What streaming adds on top (SURVEY.md SS2.7):
+The reference's two alert jobs are not re-written here: each is one entry
+of the pair table in operators/monitoring.py (``CPU_MEM``, ``NET_DISK``),
+built by ``alert_job``, and :func:`streaming_alert_job` is that builder over
+watermarked inputs - Structured Streaming compiles the same logical plan
+into an incremental one. What streaming adds on top (SURVEY.md SS2.7):
 
 - watermarks (T3): the reference has NO late-data policy (batch emit-once);
   we bound state with ``withWatermark`` so the 30s/10s window state and the
@@ -29,73 +31,46 @@ def watermarked(df: DataFrame, ts_col: str = "ts", delay: str = DEFAULT_WATERMAR
     return df.withWatermark(ts_col, delay)
 
 
-def streaming_cpu_mem_job(
-    cpu: DataFrame,
-    mem: DataFrame,
-    config=DEFAULT_CONFIG,
-    entity_col: str = "server_id",
-    watermark: str = DEFAULT_WATERMARK,
+def streaming_alert_job(
+    pair: ops.AlertPair, left: DataFrame, right: DataFrame, config=DEFAULT_CONFIG
 ) -> DataFrame:
-    """spark_job1 as a continuous pipeline: stream-stream inner join on
-    (ts, entity) -> sliding window avg -> CASE alert.
+    """A reference alert job as a continuous pipeline: the batch
+    :func:`operators.monitoring.alert_job` over watermarked inputs, so the
+    join becomes a stream-stream inner join on (ts, entity) and the
+    sliding-window agg emits each window once the watermark passes it.
 
     The join IS the reference's implicit stream-alignment (SURVEY SS2.3):
     topics interleave arbitrarily, the watermark bounds how long one side
     waits for the other before its join state is evicted.
     """
-    joined = ops.join_metric_streams(
-        watermarked(cpu, delay=watermark),
-        watermarked(mem, delay=watermark),
-        keys=("ts", entity_col),
-    )
-    agged = ops.sliding_window_agg(
-        joined,
-        {"avg_cpu": F.avg("cpu_pct"), "avg_mem": F.avg("mem_pct")},
-        entity_col=entity_col,
-        window=config.window,
-    )
-    alerts = agged.withColumn(
-        "alert",
-        ops.alert_case(
-            "High CPU + Memory stress",
-            ("avg_cpu", config.thresholds.cpu_pct, "CPU spike suspected"),
-            ("avg_mem", config.thresholds.mem_pct, "Memory saturation suspected"),
-        ),
-    )
-    return ops.format_window_output(alerts, entity_col, ["avg_cpu", "avg_mem"])
+    return ops.alert_job(pair, watermarked(left), watermarked(right), config=config)
 
 
-def streaming_net_disk_job(
-    net: DataFrame,
-    disk: DataFrame,
-    config=DEFAULT_CONFIG,
-    entity_col: str = "server_id",
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """spark_job2 as a continuous pipeline: stream-stream inner join on
-    (ts, entity) -> sliding window max -> CASE alert. Mirror of
-    :func:`streaming_cpu_mem_job` on the net/disk metric pair
-    (spark_job2.py:18-44 semantics)."""
-    joined = ops.join_metric_streams(
-        watermarked(net, delay=watermark),
-        watermarked(disk, delay=watermark),
-        keys=("ts", entity_col),
+def streaming_cpu_mem_job(cpu: DataFrame, mem: DataFrame, config=DEFAULT_CONFIG) -> DataFrame:
+    """spark_job1 as a continuous pipeline (:data:`operators.monitoring.CPU_MEM`)."""
+    return streaming_alert_job(ops.CPU_MEM, cpu, mem, config)
+
+
+def streaming_net_disk_job(net: DataFrame, disk: DataFrame, config=DEFAULT_CONFIG) -> DataFrame:
+    """spark_job2 as a continuous pipeline (:data:`operators.monitoring.NET_DISK`)."""
+    return streaming_alert_job(ops.NET_DISK, net, disk, config)
+
+
+def _interval_join(left, right, key_cols, left_ts, right_ts, window_seconds, watermark, how):
+    """The one definition of the interval-join modes' watermarks and
+    predicate: right events in ``(left_ts, left_ts + window_seconds]``
+    with equal keys. Returns the join and both watermarked sides, whose
+    column references pick one key copy."""
+    lw = left.withWatermark(left_ts, watermark)
+    rw = right.withWatermark(right_ts, watermark)
+    cond = (
+        F.col(right_ts) > F.col(left_ts)
+    ) & (
+        F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {int(window_seconds)} SECOND")
     )
-    agged = ops.sliding_window_agg(
-        joined,
-        {"max_net_in": F.max("net_in"), "max_disk_io": F.max("disk_io")},
-        entity_col=entity_col,
-        window=config.window,
-    )
-    alerts = agged.withColumn(
-        "alert",
-        ops.alert_case(
-            "Network flood + Disk thrash suspected",
-            ("max_net_in", config.thresholds.net_in, "Possible DDoS"),
-            ("max_disk_io", config.thresholds.disk_io, "Disk thrash suspected"),
-        ),
-    )
-    return ops.format_window_output(alerts, entity_col, ["max_net_in", "max_disk_io"])
+    for k in key_cols:
+        cond = cond & (lw[k] == rw[k])
+    return lw.join(rw, cond, how), lw, rw
 
 
 def interval_join_stream(
@@ -132,16 +107,9 @@ def interval_join_stream(
             f"interval_join_stream supports how in ('inner', 'left_outer'); got {how!r}"
             " — for full_outer use interval_join_stream_full"
         )
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        F.col(right_ts) > F.col(left_ts)
-    ) & (
-        F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {int(window_seconds)} SECOND")
+    joined, _, rw = _interval_join(
+        left, right, key_cols, left_ts, right_ts, window_seconds, watermark, how
     )
-    for k in key_cols:
-        cond = cond & (lw[k] == rw[k])
-    joined = lw.join(rw, cond, how)
     # Both sides carry the key columns; keep the left copy.
     return joined.drop(*[rw[k] for k in key_cols])
 
@@ -205,16 +173,9 @@ def interval_join_stream_full(
     directions + watermarks); drained-stream == batch full join pinned
     by tests/test_streaming.py::test_interval_join_stream_full_matches_batch.
     """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        F.col(right_ts) > F.col(left_ts)
-    ) & (
-        F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {int(window_seconds)} SECOND")
+    joined, lw, rw = _interval_join(
+        left, right, key_cols, left_ts, right_ts, window_seconds, watermark, "full_outer"
     )
-    for k in key_cols:
-        cond = cond & (lw[k] == rw[k])
-    joined = lw.join(rw, cond, "full_outer")
     left_rest = [c for c in left.columns if c not in key_cols]
     right_rest = [c for c in right.columns if c not in key_cols]
     return joined.select(

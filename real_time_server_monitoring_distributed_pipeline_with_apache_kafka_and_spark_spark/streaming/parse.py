@@ -12,22 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import schemas
 
-# Per-topic value layouts (producer.py:68-71): ts,server_id,then metric cols.
-_WIRE_SCHEMAS: dict[str, T.StructType] = {
-    "cpu": schemas.METRICS_CPU,
-    "mem": schemas.METRICS_MEM,
-    "net": schemas.METRICS_NET,
-    "disk": schemas.METRICS_DISK,
-}
-
 
 def wire_schema_ddl(metric: str) -> str:
-    """DDL string for a topic's CSV value layout (from_csv needs DDL)."""
-    return _WIRE_SCHEMAS[metric].simpleString().removeprefix("struct<").removesuffix(">").replace(
+    """DDL string for a topic's CSV value layout (from_csv needs DDL): the
+    landed schema, ts,server_id then metric cols (producer.py:68-71)."""
+    return schemas.TOPIC_SCHEMAS[metric].simpleString().removeprefix("struct<").removesuffix(">").replace(
         ":", " "
     ).replace(",", ", ")
 
@@ -63,7 +55,7 @@ def to_wire(df: DataFrame, metric: str, topic: str) -> DataFrame:
     Mirrors the producer's f-string formatting (``producer.py:68-71``) with
     ``to_csv``; feeds a Kafka sink's (topic, value) contract.
     """
-    cols = [f.name for f in _WIRE_SCHEMAS[metric].fields]
+    cols = schemas.TOPIC_SCHEMAS[metric].fieldNames()
     return df.select(
         F.lit(topic).alias("topic"),
         F.to_csv(F.struct(*[F.col(c) for c in cols])).alias("value"),

@@ -29,15 +29,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-TRANSITION_SCHEMA = StructType(
-    [
-        StructField("server_id", StringType()),
-        StructField("window_start", TimestampType()),
-        StructField("from_state", StringType()),
-        StructField("to_state", StringType()),
-    ]
-)
-
 _STATE_SCHEMA = StructType(
     [
         StructField("current", StringType()),
@@ -80,7 +71,7 @@ def _advance(pdf: pd.DataFrame, state: tuple, debounce: int, entity) -> tuple[li
     return out_rows, (current, pending, pending_count)
 
 
-def _transition_fn(debounce: int):
+def _transition_fn(debounce: int, names: list[str]):
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -92,7 +83,7 @@ def _transition_fn(debounce: int):
             out_rows.extend(rows)
         state.update(st)
         if out_rows:
-            yield pd.DataFrame(out_rows, columns=[f.name for f in TRANSITION_SCHEMA])
+            yield pd.DataFrame(out_rows, columns=names)
 
     return fn
 
@@ -108,9 +99,10 @@ def track_alert_transitions(
     observed windows; flaps shorter than that are suppressed. ``from_state``
     is NULL for an entity's first established state.
     """
+    schema = _transition_schema(alerts, entity_col)
     return alerts.groupBy(entity_col).applyInPandasWithState(
-        _transition_fn(debounce),
-        outputStructType=TRANSITION_SCHEMA,
+        _transition_fn(debounce, schema.fieldNames()),
+        outputStructType=schema,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -33,8 +33,12 @@
 # both consumers) so a value exported in the caller's shell cannot
 # leak in and silently drop tests.
 #
+# The ninth group runs the benchmark's self-tests (perfbench/tests, its own
+# conftest and local[2] session): they import the alert jobs the engine
+# defines, so a change there must keep the benchmark's gate working.
+#
 # Usage (from the repo root):   bash tests/run_suite.sh
-# Exit code 0 iff all eight groups pass. Logs land in /tmp/rtsm-suite-*.log.
+# Exit code 0 iff all nine groups pass. Logs land in /tmp/rtsm-suite-*.log.
 set -u
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_DRIVER_MEM="${SPARK_GRAFT_DRIVER_MEM:-8g}"
@@ -50,14 +54,15 @@ tests/test_multimodal.py tests/test_scaling_probe.py \
 tests/test_sources.py tests/test_text_ops.py"
 GROUP7="tests/test_streaming_stores.py"
 GROUP8="tests/test_streaming.py tests/test_dedup_similarity.py"
+GROUP9="perfbench/tests"
 
 pids=()
-names=(streaming-a oracle-a oracle-b plans properties misc stores streaming-b)
-groups=("$GROUP1" "$GROUP2" "$GROUP3" "$GROUP4" "$GROUP5" "$GROUP6" "$GROUP7" "$GROUP8")
-shards=("0/2" "0/2" "1/2" "" "" "" "" "1/2")
+names=(streaming-a oracle-a oracle-b plans properties misc stores streaming-b perfbench)
+groups=("$GROUP1" "$GROUP2" "$GROUP3" "$GROUP4" "$GROUP5" "$GROUP6" "$GROUP7" "$GROUP8" "$GROUP9")
+shards=("0/2" "0/2" "1/2" "" "" "" "" "1/2" "")
 shardenvs=(SPARK_GRAFT_FILE_SHARD SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_PARITY_SHARD \
 SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_PARITY_SHARD \
-SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_FILE_SHARD)
+SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_FILE_SHARD SPARK_GRAFT_PARITY_SHARD)
 for i in "${!groups[@]}"; do
     # shellcheck disable=SC2086  # word-splitting the file list is the point
     env SPARK_GRAFT_FILE_SHARD= SPARK_GRAFT_PARITY_SHARD= \

@@ -87,23 +87,40 @@ def test_producer_dry_run_and_spark_jobs(spark, tmp_path):
             os.path.join(config.paths.output_dir, stem), header=True, mode="overwrite"
         )
 
-    # CSV is the drop-in path: reference output naming team_{n}_CPU_MEM.csv
-    # (spark_job1.py:56-57, team_number from config.yaml:1)
-    cli.main(["spark-job1", "--config", config_path])
-    job1 = spark.read.csv(
-        os.path.join(config.paths.output_dir, "team_1_CPU_MEM.csv"), header=True
+    # Every spark-job output holds its pair's batch job rows: CSV under the
+    # reference naming team_{n}_<PAIR>.csv (spark_job1.py:56-57, team_number
+    # from config.yaml:1) and --parquet under <pair>_alerts. Averages summed
+    # in another order may differ by one rounding unit; a max may not.
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators import (
+        monitoring as ops,
     )
-    assert job1.columns == [
-        "server_id", "window_start", "window_end", "avg_cpu", "avg_mem", "alert",
-    ]
-    assert job1.count() > 0
-    labels = {r.alert for r in job1.select("alert").distinct().collect()}
-    assert "High CPU + Memory stress" in labels and "OK" in labels
 
-    cli.main(["spark-job2", "--config", config_path, "--parquet"])
-    job2 = spark.read.parquet(os.path.join(config.paths.output_dir, "net_disk_alerts"))
-    labels2 = {r.alert for r in job2.select("alert").distinct().collect()}
-    assert "Network flood + Disk thrash suspected" in labels2
+    out = config.paths.output_dir
+
+    def keyed(df):  # (entity, window, alert) -> the two aggregates
+        rows = df.collect()
+        out = {(r[0], r[1], r[2], r[5]): (r[3], r[4]) for r in rows}
+        assert len(out) == len(rows)
+        return out
+
+    for role, job, frames, csv_name, parquet_dir, cols, combined, tol in [
+        ("spark-job1", ops.cpu_mem_job, (cpu, mem), "team_1_CPU_MEM.csv", "cpu_mem_alerts",
+         ["avg_cpu", "avg_mem"], "High CPU + Memory stress", 0.011),
+        ("spark-job2", ops.net_disk_job, (net, disk), "team_1_NET_DISK.csv", "net_disk_alerts",
+         ["max_net_in", "max_disk_io"], "Network flood + Disk thrash suspected", 0.0),
+    ]:
+        cli.main([role, "--config", config_path])
+        cli.main([role, "--config", config_path, "--parquet"])
+        parquet = spark.read.parquet(os.path.join(out, parquet_dir))
+        assert parquet.columns == ["server_id", "window_start", "window_end", *cols, "alert"]
+        csv = spark.read.schema(parquet.schema).csv(os.path.join(out, csv_name), header=True)
+        want = keyed(job(*frames, config=config, time_format="HH:mm:ss"))
+        for got in (keyed(parquet), keyed(csv)):
+            assert got.keys() == want.keys(), role
+            for k, (a, b) in got.items():
+                assert abs(a - want[k][0]) <= tol and abs(b - want[k][1]) <= tol, (role, k)
+        labels = {k[-1] for k in want}
+        assert combined in labels and "OK" in labels, (role, labels)
 
 
 def test_producer_stats_reference_dataset_proxy(spark, tmp_path):

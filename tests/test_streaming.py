@@ -473,43 +473,49 @@ def test_rate_replay_backpressure_bounds_batches(spark):
         )
 
 
-def test_streaming_net_disk_job_matches_batch(spark, tmp_path):
-    """stream-job2's plan (stream-stream join -> window max -> CASE) over
-    file streams equals the batch net_disk_job on the same rows."""
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
-        net_disk_job,
+@pytest.mark.parametrize("pair", ["cpu_mem", "net_disk"])
+def test_streaming_alert_job_matches_batch(spark, tmp_path, pair):
+    """stream-job1/2's plan (stream-stream join -> sliding window avg or
+    max -> CASE) over file streams equals the batch job on the same rows."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators import (
+        monitoring as ops,
     )
 
-    wide = metrics_wide_df(spark)
-    _, _, net, disk = narrow_splits(wide)
-    net_src, disk_src = str(tmp_path / "net"), str(tmp_path / "disk")
-    write_csv_batch(net, net_src)
-    write_csv_batch(disk, disk_src)
-    net_s = spark.readStream.schema(schemas.METRICS_NET).csv(net_src)
-    disk_s = spark.readStream.schema(schemas.METRICS_DISK).csv(disk_src)
-    out = jobs.streaming_net_disk_job(net_s, disk_s)
+    # tol: averages summed in another order may differ by one rounding
+    # unit; a max is order-free and must match exactly.
+    stream_job, batch_job, metrics, tol = {
+        "cpu_mem": (jobs.streaming_cpu_mem_job, ops.cpu_mem_job, ("cpu", "mem"), 0.011),
+        "net_disk": (jobs.streaming_net_disk_job, ops.net_disk_job, ("net", "disk"), 0.0),
+    }[pair]
+    narrow = dict(zip(("cpu", "mem", "net", "disk"), narrow_splits(metrics_wide_df(spark))))
+    streams = []
+    for m in metrics:
+        src = str(tmp_path / m)
+        write_csv_batch(narrow[m], src)
+        streams.append(spark.readStream.schema(schemas.TOPIC_SCHEMAS[m]).csv(src))
+    name = f"{pair}_stream"
     q = (
-        out.writeStream.outputMode("append")
+        stream_job(*streams).writeStream.outputMode("append")
         .format("memory")
-        .queryName("nd_stream")
+        .queryName(name)
         .start()
     )
+
+    def keyed(rows):  # (entity, window, alert) -> the two aggregates
+        return {(r[0], r[1], r[2], r[5]): (r[3], r[4]) for r in rows}
+
     try:
         q.processAllAvailable()
-        got = {
-            (r.server_id, r.window_start, r.max_net_in, r.max_disk_io, r.alert)
-            for r in spark.sql("SELECT * FROM nd_stream").collect()
-        }
+        got = keyed(spark.table(name).collect())
     finally:
         q.stop()
-    batch = {
-        (r.server_id, r.window_start, r.max_net_in, r.max_disk_io, r.alert)
-        for r in net_disk_job(net, disk).collect()
-    }
+    batch = keyed(batch_job(*[narrow[m] for m in metrics]).collect())
     # append mode emits only watermark-closed windows; every emitted row
-    # must match batch exactly, and most windows should have closed
-    assert got <= batch
+    # must match batch, and most windows should have closed
+    assert got.keys() <= batch.keys()
     assert len(got) >= 0.8 * len(batch), (len(got), len(batch))
+    for k, (a, b) in got.items():
+        assert abs(a - batch[k][0]) <= tol and abs(b - batch[k][1]) <= tol, (k, got[k], batch[k])
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -723,45 +729,58 @@ def test_alert_transitions_skewed_state(spark, tmp_path):
 
     # streaming: hot history split across 3 micro-batches (state carries
     # over batch boundaries), cold entities all in the first batch
-    src = str(tmp_path / "skew_alert_src")
     cut0 = base + timedelta(seconds=10 * (hot_windows // 3))
     cut1 = base + timedelta(seconds=10 * (2 * hot_windows // 3))
-    batches = [
-        [r for r in rows if r[1] < cut0],
-        [r for r in rows if cut0 <= r[1] < cut1],
-        [r for r in rows if r[1] >= cut1],
-    ]
     import glob as _glob
     import os as _os
 
-    base_mtime = time.time()
-    for i, batch_rows in enumerate(batches):
-        spark.createDataFrame(
-            batch_rows, ["server_id", "window_start", "alert"]
-        ).coalesce(1).write.mode("append").csv(f"{src}/b{i}", header=False)
-        for f in _glob.glob(f"{src}/b{i}/*"):
-            _os.utime(f, (base_mtime + 10 * i, base_mtime + 10 * i))
-    stream = (
-        spark.readStream.schema("server_id string, window_start timestamp, alert string")
-        .option("maxFilesPerTrigger", "1")
-        .csv(f"{src}/b*")
+    def streamed(rows, entity_col, entity_type, name):
+        src = str(tmp_path / f"{name}_src")
+        cols = [entity_col, "window_start", "alert"]
+        batches = [
+            [r for r in rows if r[1] < cut0],
+            [r for r in rows if cut0 <= r[1] < cut1],
+            [r for r in rows if r[1] >= cut1],
+        ]
+        base_mtime = time.time()
+        for i, batch_rows in enumerate(batches):
+            spark.createDataFrame(batch_rows, cols).coalesce(1).write.mode(
+                "append"
+            ).csv(f"{src}/b{i}", header=False)
+            for f in _glob.glob(f"{src}/b{i}/*"):
+                _os.utime(f, (base_mtime + 10 * i, base_mtime + 10 * i))
+        stream = (
+            spark.readStream.schema(
+                f"{entity_col} {entity_type}, window_start timestamp, alert string"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .csv(f"{src}/b*")
+        )
+        q = (
+            track_alert_transitions(stream, entity_col=entity_col, debounce=2)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return set(map(tuple, spark.table(name).collect()))
+        finally:
+            q.stop()
+
+    assert streamed(rows, "server_id", "string", "skew_transitions") == expected
+
+    # The output schema follows the entity column's name and type: the
+    # same history keyed by a long user_id streams to the batch result.
+    ids = {s: i for i, s in enumerate(sorted(by_entity))}
+    long_rows = [(ids[s], w, a) for s, w, a in rows]
+    long_alerts = spark.createDataFrame(long_rows, "user_id long, window_start timestamp, alert string")
+    long_batch = set(
+        map(tuple, track_alert_transitions_batch(long_alerts, entity_col="user_id", debounce=2).collect())
     )
-    q = (
-        track_alert_transitions(stream, debounce=2)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("skew_transitions")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        stream_got = {
-            (r.server_id, r.window_start, r.from_state, r.to_state)
-            for r in spark.sql("SELECT * FROM skew_transitions").collect()
-        }
-    finally:
-        q.stop()
-    assert stream_got == expected
+    assert long_batch == {(ids[s], w, f, t) for s, w, f, t in expected}
+    assert streamed(long_rows, "user_id", "long", "skew_transitions_long") == long_batch
 
 
 def test_stream_dedup_drops_redeliveries(spark, tmp_path):
