@@ -18,10 +18,10 @@ Same roles as ``/root/reference/main.py:13-48`` (``producer``,
                    window agg -> CASE alerts -> CSV (spark_job1.py /
                    spark_job2.py semantics, explicit schemas, no
                    inferSchema).
-- ``stream-job1/2``— bonus: both reference jobs' plans as continuous
-                   pipelines (Kafka -> parse -> stream-stream join ->
-                   windowed agg -> alerts), which the reference's design
-                   doc aspired to but never wired up.
+- ``stream-job1/2``— bonus: both reference jobs as continuous pipelines
+                   (Kafka -> parse -> one windowed agg over both topics,
+                   pairing rows by ts -> alerts), which the reference's
+                   design doc aspired to but never wired up.
 
 Usage: python main.py <role> [--config config.yaml] [--parquet] [--dry-run]
 """
@@ -227,6 +227,8 @@ def run_stream_job(spark, config: cfg.PipelineConfig, role: str) -> None:
 
     kafka_io.require_kafka_connector(spark)
     pair = _pair(role)
+    checkpoint = os.path.join(config.paths.output_dir, f"_checkpoint_{role}")
+    jobs.refuse_join_checkpoint(spark, checkpoint)
     topics = [config.kafka.topic(m) for m in pair.metrics]
     records = kafka_io.kafka_source(spark, config.kafka, topics=topics).load()
     alerts = jobs.streaming_alert_job(
@@ -238,10 +240,7 @@ def run_stream_job(spark, config: cfg.PipelineConfig, role: str) -> None:
         alerts.writeStream.outputMode("append")
         .format("parquet")
         .option("path", os.path.join(config.paths.output_dir, f"{pair.name}_alerts_stream"))
-        .option(
-            "checkpointLocation",
-            os.path.join(config.paths.output_dir, f"_checkpoint_{role}"),
-        )
+        .option("checkpointLocation", checkpoint)
         .start()
         .awaitTermination()
     )
@@ -256,31 +255,7 @@ def run_query(spark, args) -> None:
         all_queries,
     )
 
-    qs = all_queries()
-    df = qs[args.name](spark, args.sf_dir)
-    if args.scale_check:
-        from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.guard import (
-            assert_scale_safe,
-        )
-
-        report = assert_scale_safe(df)
-        print(
-            f"scale-check ok: exchanges={report['exchanges']} "
-            f"broadcast_joins={report['broadcast_joins']} "
-            f"python_stages={report['python_stages']}"
-        )
-    if args.explain:
-        df.explain("formatted")
-        return
-    if args.out:
-        from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.sources.readers import (
-            write_partitioned_parquet,
-        )
-
-        write_partitioned_parquet(df, args.out)
-        print(f"{args.name}: wrote {args.out}")
-    else:
-        df.show(args.show_rows, truncate=False)
+    _finish(all_queries()[args.name](spark, args.sf_dir), args, args.name)
 
 
 def run_sql(spark, args) -> None:
@@ -289,18 +264,20 @@ def run_sql(spark, args) -> None:
     ``--query-file``) runs through the same Catalyst pipeline as the named
     queries — pushdown, pruning, AQE and the optional scale guard all
     apply. The escape hatch for queries the registry doesn't name."""
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.sources.readers import (
-        register_views,
-    )
-
     sql = args.query
     if not sql and args.query_file:
         with open(args.query_file) as fh:
             sql = fh.read()
     if not sql or not sql.strip():
         raise SystemExit("sql: provide a statement via --query or --query-file")
-    register_views(spark, args.sf_dir)
-    df = spark.sql(sql)
+    readers.register_views(spark, args.sf_dir)
+    _finish(spark.sql(sql), args, "sql")
+
+
+def _finish(df, args, label: str) -> None:
+    """The query and sql roles' shared tail: the optional scale check,
+    then the formatted plan (``--explain``), a parquet write (``--out``)
+    or the first rows."""
     if args.scale_check:
         from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.guard import (
             assert_scale_safe,
@@ -314,14 +291,9 @@ def run_sql(spark, args) -> None:
         )
     if args.explain:
         df.explain("formatted")
-        return
-    if args.out:
-        from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.sources.readers import (
-            write_partitioned_parquet,
-        )
-
-        write_partitioned_parquet(df, args.out)
-        print(f"sql: wrote {args.out}")
+    elif args.out:
+        readers.write_partitioned_parquet(df, args.out)
+        print(f"{label}: wrote {args.out}")
     else:
         df.show(args.show_rows, truncate=False)
 

@@ -12,7 +12,8 @@ Layout
   text analysis, multimodal plumbing)
 - ``functions``  : reusable Column-level helpers (vector math, text)
 - ``streaming``  : Structured Streaming legs (Kafka-shaped parse, demux,
-  stream-stream join, windowed aggs with watermarks)
+  the alert jobs as one windowed agg per pair, interval stream-stream
+  joins, watermarks)
 - ``plans``      : plan inspection helpers (explain/pushdown assertions)
 
 Everything is stock DataFrame/SQL compiled by Catalyst: no custom parser,

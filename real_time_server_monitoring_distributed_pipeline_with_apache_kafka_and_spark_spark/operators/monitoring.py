@@ -13,9 +13,12 @@ The reference's two jobs are one pair table and one builder: an
 :class:`AlertPair` (``CPU_MEM``, ``NET_DISK`` in ``ALERT_PAIRS``) names the
 metrics, the window aggregate, the input/output columns and the three alert
 labels, and :func:`alert_job` composes J, A, P7 and P1 for any pair.
-``cpu_mem_job``/``net_disk_job`` are the builder bound to each pair; the
-stream jobs (streaming/jobs.py) are it over watermarked inputs, and main.py's
-*1/*2 roles derive topics, files and outputs from the pair's metric names.
+``cpu_mem_job``/``net_disk_job`` are the builder bound to each pair, and
+main.py's *1/*2 roles derive topics, files and outputs from the pair's
+metric names. The stream jobs (streaming/jobs.py) use
+:func:`fused_alert_job` instead: the same pairs and windows from one
+windowed aggregation, with no join, so a streaming query keeps one stateful
+operator. Both builders end in the same CASE and projection.
 
 Scale notes (100 TB posture):
 - The join shuffles both sides on (ts, entity) - at scale, pre-bucketing the
@@ -260,8 +263,8 @@ def alert_job(
     """A reference alert job end-to-end: join -> sliding-window agg ->
     CASE alert -> format (spark_job1.py:6-54, spark_job2.py:6-54).
 
-    Batch and streaming share it: the stream jobs pass watermarked
-    inputs (streaming/jobs.py). ``float32_parity=True`` reproduces the
+    It is the batch reference answer; the stream jobs build the same
+    windows with :func:`fused_alert_job`. ``float32_parity=True`` reproduces the
     reference's pre-agg float downcast of both inputs (spark_job1.py:20-21,
     spark_job2.py:20-21; net_out is never cast there and never
     aggregated): precision drops to float32 BEFORE aggregating, shifting
@@ -281,6 +284,12 @@ def alert_job(
         entity_col=entity_col,
         window=config.window,
     )
+    return _alert_tail(pair, agged, config, entity_col, time_format, round_fn)
+
+
+def _alert_tail(pair, agged, config, entity_col, time_format=None, round_fn=None) -> DataFrame:
+    """P7 + P1 over a pair's aggregated windows: the CASE alert on the
+    pair's thresholds, then the final projection."""
     both, first, second = pair.labels
     (a, b), (out_a, out_b) = pair.inputs, pair.outputs
     alerts = agged.withColumn(
@@ -296,3 +305,66 @@ def alert_job(
 
 cpu_mem_job = partial(alert_job, CPU_MEM)
 net_disk_job = partial(alert_job, NET_DISK)
+
+
+def _array_avg(values: Column) -> Column:
+    """``F.avg`` over an array: the mean of its non-null entries, null
+    when there are none."""
+    present = F.filter(values, lambda v: v.isNotNull())
+    n = F.size(present)
+    return F.when(n > 0, F.aggregate(present, F.lit(0.0), lambda acc, v: acc + v) / n)
+
+
+# A pair's window aggregate (AlertPair.agg) applied to an array of values.
+_ARRAY_AGGS = {F.avg: _array_avg, F.max: F.array_max}
+
+
+def fused_alert_job(pair: AlertPair, left: DataFrame, right: DataFrame, config=DEFAULT_CONFIG) -> DataFrame:
+    """:func:`alert_job`'s windows from ONE windowed aggregation and no
+    join: a streaming query over it keeps one stateful operator (one state
+    store per partition, one exchange) where join-then-window keeps two.
+
+    Each side is tagged (0 = left, 1 = right) and projected to
+    ``(server_id, ts, side, v)``; the union is grouped by (server, sliding
+    window) into a list of its entries. The final projection rebuilds the
+    inner join's pairs inside each window: every left entry meets every
+    right entry with an equal ``ts`` (a repeated ``(ts, server)`` gives the
+    cross product, a ``ts`` on one side only gives nothing). Windows with
+    no pair are dropped, and each metric is the pair's aggregate over the
+    non-null values of its side of the pairs. Null ``server_id`` rows are
+    dropped up front, as the join drops a null key.
+
+    Streaming inputs carry their own watermarks (streaming/jobs.py), taken
+    per side before the union, so the global watermark is the min of the
+    two, as for the join. Equals :func:`alert_job` as a batch query;
+    averages may differ in the last bit (another summation order).
+    """
+    array_agg = _ARRAY_AGGS.get(pair.agg)
+    if array_agg is None:
+        raise ValueError(f"{pair.name}: window aggregate {pair.agg!r} has no array form")
+    entity_col = "server_id"
+    tagged = [
+        df.select(entity_col, "ts", F.lit(side).alias("side"), F.col(col).alias("v"))
+        for side, (df, col) in enumerate(zip((left, right), pair.inputs))
+    ]
+    windows = sliding_window_agg(
+        tagged[0].unionByName(tagged[1]).filter(F.col(entity_col).isNotNull()),
+        {"entries": F.collect_list(F.struct("ts", "side", "v"))},
+        entity_col=entity_col,
+        window=config.window,
+    )
+    entries = F.col("entries")
+    pairs = F.flatten(F.transform(
+        F.filter(entries, lambda e: e.side == 0),
+        lambda a: F.transform(
+            F.filter(entries, lambda b: (b.side == 1) & (b.ts == a.ts)),
+            lambda b: F.struct(a.v.alias("a"), b.v.alias("b")),
+        ),
+    ))
+    paired = windows.select(entity_col, "window", pairs.alias("pairs")).filter(F.size("pairs") > 0)
+    agged = paired.select(
+        entity_col,
+        "window",
+        *[array_agg(F.col(f"pairs.{f}")).alias(out) for f, out in zip("ab", pair.outputs)],
+    )
+    return _alert_tail(pair, agged, config, entity_col)

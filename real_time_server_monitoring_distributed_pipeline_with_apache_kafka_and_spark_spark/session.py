@@ -12,11 +12,10 @@ Shuffle partitions come in two regimes, sized separately:
   Structured Streaming turns AQE off, so this value alone fixes how many
   state partitions a new stateful query gets, and every trigger loads and
   commits one state store per partition per stateful operator (four per
-  partition for a stream-stream join). A commit costs about 50-80 ms per
-  store instance, whatever the micro-batch size, so the cheapest trigger
-  is one wave of slot-count tasks; the batch count of 2x slots made it
-  three waves at ``local[3]`` (40 stores instead of 15 for the
-  join-then-window alert jobs). A restarted query keeps the count
+  partition for a stream-stream join, one for the alert jobs' window
+  aggregate, so 3 stores per trigger at ``local[3]``). A commit costs
+  about 50-80 ms per store instance, whatever the micro-batch size, so the
+  cheapest trigger is one wave of slot-count tasks. A restarted query keeps the count
   recorded in its checkpoint's offset log, so checkpoints written at
   another count keep working.
 - Batch: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` =

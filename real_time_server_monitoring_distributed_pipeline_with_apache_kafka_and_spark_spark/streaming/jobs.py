@@ -2,13 +2,16 @@
 
 The reference's two alert jobs are not re-written here: each is one entry
 of the pair table in operators/monitoring.py (``CPU_MEM``, ``NET_DISK``),
-built by ``alert_job``, and :func:`streaming_alert_job` is that builder over
-watermarked inputs - Structured Streaming compiles the same logical plan
-into an incremental one. What streaming adds on top (SURVEY.md SS2.7):
+and :func:`streaming_alert_job` builds it with that module's
+``fused_alert_job`` over watermarked inputs: one windowed aggregation over
+the union of the pair's two topics, which pairs rows by ``ts`` inside each
+window, so the continuous query keeps one stateful operator. It emits the
+windows of the batch ``alert_job`` (join -> window), which stays the
+reference answer. What streaming adds on top (SURVEY.md SS2.7):
 
 - watermarks (T3): the reference has NO late-data policy (batch emit-once);
-  we bound state with ``withWatermark`` so the 30s/10s window state and the
-  stream-stream join buffers don't grow forever.
+  we bound state with ``withWatermark`` so the 30s/10s window state
+  doesn't grow forever.
 - output modes: ``append`` emits each window once, after the watermark
   passes its end (closest to the reference's emit-once-at-end semantics,
   continuously).
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG
 from ..operators import monitoring as ops
+from .metrics import read_state_metadata
 
 DEFAULT_WATERMARK = "1 minute"
 
@@ -34,16 +38,38 @@ def watermarked(df: DataFrame, ts_col: str = "ts", delay: str = DEFAULT_WATERMAR
 def streaming_alert_job(
     pair: ops.AlertPair, left: DataFrame, right: DataFrame, config=DEFAULT_CONFIG
 ) -> DataFrame:
-    """A reference alert job as a continuous pipeline: the batch
-    :func:`operators.monitoring.alert_job` over watermarked inputs, so the
-    join becomes a stream-stream inner join on (ts, entity) and the
-    sliding-window agg emits each window once the watermark passes it.
+    """A reference alert job as a continuous pipeline:
+    :func:`operators.monitoring.fused_alert_job` over watermarked inputs.
+    Its one stateful operator, the sliding-window aggregate, holds each
+    (server, window)'s rows from both topics and emits the window once the
+    watermark passes its end.
 
-    The join IS the reference's implicit stream-alignment (SURVEY SS2.3):
-    topics interleave arbitrarily, the watermark bounds how long one side
-    waits for the other before its join state is evicted.
+    Pairing inside the window IS the reference's implicit stream alignment
+    (SURVEY SS2.3): topics interleave arbitrarily, and a row waits in its
+    window's state for its partner until the watermark closes the window.
+    Each side is watermarked before the union, so the global watermark is
+    the min of the two (Spark's default policy). Late-row policy: a row is
+    dropped for the windows the watermark has already closed and kept for
+    the open ones, even when its own ``ts`` is behind the watermark.
     """
-    return ops.alert_job(pair, watermarked(left), watermarked(right), config=config)
+    return ops.fused_alert_job(pair, watermarked(left), watermarked(right), config=config)
+
+
+def refuse_join_checkpoint(spark, checkpoint_dir: str) -> None:
+    """Fail before ``start()`` on a checkpoint written by the former
+    stream-stream join plan of the alert jobs (``symmetricHashJoin`` state),
+    which :func:`streaming_alert_job` cannot resume: Spark would only fail
+    inside the stream thread after start, without naming the fix. A missing
+    checkpoint, or one without state, passes."""
+    operators = {r.operatorName for r in read_state_metadata(spark, checkpoint_dir).collect()}
+    if "symmetricHashJoin" in operators:
+        raise RuntimeError(
+            f"checkpoint {checkpoint_dir} holds stream-stream join state written by an "
+            "older plan of this alert job, which now runs as one windowed aggregation "
+            "and cannot resume it. Move the checkpoint directory aside, with the output "
+            "directory of a file sink (its commit log follows the checkpoint's batch "
+            "ids), and restart."
+        )
 
 
 def streaming_cpu_mem_job(cpu: DataFrame, mem: DataFrame, config=DEFAULT_CONFIG) -> DataFrame:

@@ -10,6 +10,10 @@ The expected side is computed independently in pure Python.
 from __future__ import annotations
 
 from collections import defaultdict
+from dataclasses import replace
+
+import pytest
+from pyspark.sql import functions as F
 
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.config import (
     DEFAULT_CONFIG,
@@ -161,3 +165,33 @@ def test_cpu_mem_job_float32_parity_golden(spark):
         if plain[(r.server_id, r.window_start, r.window_end)] != (r.avg_cpu, r.avg_mem)
     )
     assert diffs > 0, "float32 parity mode should differ from double mode"
+
+
+@pytest.mark.parametrize("pair", ops.ALERT_PAIRS, ids=lambda p: p.name)
+def test_fused_alert_job_equals_alert_job_as_batch(spark, pair):
+    """The stream jobs' one-aggregate builder, run as a batch query, emits
+    the join-then-window job's windows and alerts: averages within one
+    rounding unit (another summation order), maxima exact."""
+    cpu, mem, net, disk = narrow_splits(metrics_wide_df(spark))
+    sides = {"cpu": cpu, "mem": mem, "net": net, "disk": disk}
+    dfs = [sides[m] for m in pair.metrics]
+    tol = 0.011 if pair.agg is F.avg else 0.0
+
+    def keyed(df):  # (entity, window, alert) -> the two aggregates
+        return {(r[0], r[1], r[2], r[5]): (r[3], r[4]) for r in df.collect()}
+
+    fused = ops.fused_alert_job(pair, *dfs)
+    expected = keyed(ops.alert_job(pair, *dfs))
+    got = keyed(fused)
+    assert fused.columns == ["server_id", "window_start", "window_end", *pair.outputs, "alert"]
+    assert got.keys() == expected.keys() and len(got) == 1240
+    for k, (a, b) in expected.items():
+        assert abs(got[k][0] - a) <= tol and abs(got[k][1] - b) <= tol, (k, got[k], expected[k])
+
+
+def test_fused_alert_job_rejects_an_aggregate_without_array_form(spark):
+    """A pair whose window aggregate has no array form fails when the plan
+    is built, not with wrong numbers later."""
+    cpu, mem, _, _ = narrow_splits(metrics_wide_df(spark))
+    with pytest.raises(ValueError, match="no array form"):
+        ops.fused_alert_job(replace(ops.CPU_MEM, agg=F.min), cpu, mem)

@@ -4,6 +4,7 @@ file/memory streams (no broker in this environment)."""
 
 from __future__ import annotations
 
+import os
 import re
 import shutil
 import time
@@ -475,8 +476,9 @@ def test_rate_replay_backpressure_bounds_batches(spark):
 
 @pytest.mark.parametrize("pair", ["cpu_mem", "net_disk"])
 def test_streaming_alert_job_matches_batch(spark, tmp_path, pair):
-    """stream-job1/2's plan (stream-stream join -> sliding window avg or
-    max -> CASE) over file streams equals the batch job on the same rows."""
+    """stream-job1/2's plan (one sliding-window aggregate over both
+    topics, pairing rows by ts -> avg or max -> CASE) over file streams
+    equals the batch job (join -> window) on the same rows."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators import (
         monitoring as ops,
     )
@@ -516,6 +518,137 @@ def test_streaming_alert_job_matches_batch(spark, tmp_path, pair):
     assert len(got) >= 0.8 * len(batch), (len(got), len(batch))
     for k, (a, b) in got.items():
         assert abs(a - batch[k][0]) <= tol and abs(b - batch[k][1]) <= tol, (k, got[k], batch[k])
+
+
+@pytest.mark.parametrize("pair", ["cpu_mem", "net_disk"])
+def test_streaming_alert_job_keeps_join_semantics(spark, tmp_path, pair):
+    """The stream jobs pair rows inside one window aggregate instead of
+    joining them; over four micro-batches of awkward input they emit
+    exactly the windows of the batch job (inner join on (ts, server_id),
+    then window), averages within one rounding unit, maxima exact:
+
+    - a (ts, server) repeated on the first side pairs with the second
+      side's row twice (the join's cross product);
+    - a ts present on the first side only pairs with nothing;
+    - a null metric value is skipped by the avg/max, its pair stays;
+    - rows with a null server_id never pair (a null key never matches);
+    - server_5's first-side rows of 340-395 s arrive a batch late but
+      inside the watermark (at 335 s after the second batch);
+    - server_7's first-side row at 330 s arrives behind the watermark
+      while all three windows holding it are still open. Policy: a row is
+      dropped only for windows the watermark has closed, so it still
+      pairs with its on-time partner. (The former stream-stream join
+      dropped any row behind the watermark.)
+
+    A far-future sentinel pair in the last batch closes every real window.
+    """
+    from pyspark.sql import types as T
+
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators import (
+        monitoring as ops,
+    )
+
+    from .fixtures import WIDE_COLS, metrics_wide_rows
+
+    alert_pair, stream_job = {
+        "cpu_mem": (ops.CPU_MEM, jobs.streaming_cpu_mem_job),
+        "net_disk": (ops.NET_DISK, jobs.streaming_net_disk_job),
+    }[pair]
+    tol = 0.011 if alert_pair.agg is F.avg else 0.0
+
+    def at(sec):
+        return BASE_TS + timedelta(seconds=sec)
+
+    def sec(r):
+        return int((r[0] - BASE_TS).total_seconds())
+
+    topic_schemas = [schemas.TOPIC_SCHEMAS[m] for m in alert_pair.metrics]
+    first, second = (
+        [[w[WIDE_COLS.index(c)] for c in schema.fieldNames()] for w in metrics_wide_rows()]
+        for schema in topic_schemas
+    )
+    dup = next(r for r in first if r[0] == at(50) and r[1] == "server_4")
+    first.append([dup[0], dup[1], *(v + 1.0 for v in dup[2:])])
+    second = [r for r in second if not (r[0] == at(100) and r[1] == "server_6")]
+    next(r for r in first if r[0] == at(150) and r[1] == "server_2")[2] = None
+    for rows in (first, second):
+        rows.append([at(120), None, *[1.0] * (len(rows[0]) - 2)])
+
+    def held(r):  # first-side rows that arrive one batch late
+        return (r[1] == "server_5" and 340 <= sec(r) < 400) or (r[1] == "server_7" and sec(r) == 330)
+
+    def batches(rows, side):
+        on_time = [r for r in rows if side or not held(r)]
+        late = [r for r in rows if not side and held(r)]
+        sentinel = [[at(3600), "sentinel", *[0.0] * (len(rows[0]) - 2)]]
+        return [
+            [r for r in on_time if sec(r) < 200],
+            [r for r in on_time if 200 <= sec(r) < 400],
+            [r for r in on_time if sec(r) >= 400] + late,
+            sentinel,
+        ]
+
+    nullable = [T.StructType([T.StructField(f.name, f.dataType) for f in sc]) for sc in topic_schemas]
+    srcs = [str(tmp_path / m) for m in alert_pair.metrics]
+    for src in srcs:
+        os.makedirs(src)
+    streams = [spark.readStream.schema(sc).csv(src) for sc, src in zip(topic_schemas, srcs)]
+    name = f"{pair}_join_semantics"
+    q = stream_job(*streams).writeStream.outputMode("append").format("memory").queryName(name).start()
+
+    def keyed(rows):  # (entity, window, alert) -> the two aggregates
+        return {(r[0], r[1], r[2], r[5]): (r[3], r[4]) for r in rows}
+
+    try:
+        for parts in zip(*(batches(rows, side) for side, rows in enumerate((first, second)))):
+            for rows, sc, src in zip(parts, nullable, srcs):
+                write_csv_batch(spark.createDataFrame(rows, sc), src)
+            q.processAllAvailable()
+        got = keyed(spark.table(name).collect())
+    finally:
+        q.stop()
+    expected = keyed(ops.alert_job(
+        alert_pair, *[spark.createDataFrame(rows, sc) for rows, sc in zip((first, second), nullable)]
+    ).collect())
+    assert got.keys() == expected.keys()
+    for k, (a, b) in expected.items():
+        assert abs(got[k][0] - a) <= tol and abs(got[k][1] - b) <= tol, (k, got[k], expected[k])
+
+
+def test_join_plan_checkpoint_is_refused_before_start(spark, tmp_path):
+    """A checkpoint written by the alert jobs' former plan (a stream-stream
+    join feeding the window) cannot resume under the one-aggregate plan.
+    ``refuse_join_checkpoint`` names the checkpoint and the fix before
+    ``start()``; a missing checkpoint, or one the current plan wrote,
+    passes."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators import (
+        monitoring as ops,
+    )
+
+    cpu, mem, _, _ = narrow_splits(metrics_wide_df(spark))
+    cpu_src, mem_src = str(tmp_path / "cpu"), str(tmp_path / "mem")
+    write_csv_batch(cpu, cpu_src)
+    write_csv_batch(mem, mem_src)
+    old, new = str(tmp_path / "ckpt_join"), str(tmp_path / "ckpt_fused")
+    for plan, ckpt in (
+        (lambda a, b: ops.alert_job(ops.CPU_MEM, jobs.watermarked(a), jobs.watermarked(b)), old),
+        (jobs.streaming_cpu_mem_job, new),
+    ):
+        q = (
+            plan(*_cpu_mem_streams(spark, cpu_src, mem_src))
+            .writeStream.outputMode("append")
+            .format("noop")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    with pytest.raises(RuntimeError, match=re.escape(old) + ".*Move the checkpoint directory aside"):
+        jobs.refuse_join_checkpoint(spark, old)
+    jobs.refuse_join_checkpoint(spark, new)
+    jobs.refuse_join_checkpoint(spark, str(tmp_path / "missing"))
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -2708,8 +2841,8 @@ def test_state_and_batch_shuffles_take_separate_partition_counts(spark, tmp_path
             q.stop()
         plan = formatted_plan(cpu_mem_job(cpu, mem))
     meta = read_state_metadata(spark, ckpt).collect()
-    # the join's four stores and the window aggregate's store
-    assert {r.operatorName for r in meta} == {"symmetricHashJoin", "stateStoreSave"}, meta
+    # one stateful operator: the window aggregate's store
+    assert {r.operatorName for r in meta} == {"stateStoreSave"}, meta
     assert all(r.numPartitions == 3 for r in meta), meta
     batch_parts = re.findall(r"(?:hash|range)partitioning\(.*, (\d+)\)", plan)
     assert batch_parts and set(batch_parts) == {"8"}, plan
@@ -2718,14 +2851,14 @@ def test_state_and_batch_shuffles_take_separate_partition_counts(spark, tmp_path
 def test_stateful_restart_keeps_recorded_partition_count(spark, tmp_path):
     """A checkpoint written at 8 state partitions restarts under
     shuffle.partitions=3 with its recorded 8 (Spark restores the count
-    from the offset log), its join and window state intact: the output
-    across the restart equals the batch job's. Resizing the session's
-    state partitions must never break a deployed checkpoint.
+    from the offset log), its window state intact: the output across the
+    restart equals the batch job's. Resizing the session's state
+    partitions must never break a deployed checkpoint.
 
     The split leaves mem rows of the first 30 s after the cut waiting in
-    join state across the restart, and windows straddling the cut in
-    the aggregate's state; a far-future sentinel pair advances the
-    watermark past every real window so all of them close."""
+    window state for their cpu partners across the restart, and windows
+    straddling the cut half-filled there; a far-future sentinel pair
+    advances the watermark past every real window so all of them close."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.monitoring import (
         cpu_mem_job,
     )
