@@ -294,8 +294,10 @@ def monitor_ewma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash aggregate collects each user's ordered history (state
     = that user's events, the same bound every per-entity window op here
     has); the fold itself is O(events) inside the group. For unbounded
-    histories use the streaming stateful form (one scalar of state) —
-    the rolling_zscore_stream pattern with acc = EWMA.
+    histories use the streaming twin, streaming.stateful.ewma_stream (one
+    scalar of keyed state, the same fold op order; its last value per
+    user equals this column bitwise), or
+    streaming.reorder.ewma_stream_ordered on a reordering transport.
     """
     ev = load_table(spark, sf_dir, "events")
     arr = F.array_sort(
@@ -333,9 +335,10 @@ def monitor_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one hash aggregate collects each user's ordered history
     (the same per-entity bound every window op here has); both folds
-    are O(events) inside the group. The streaming form is ONE scalar of
-    state per side — the rolling_zscore_stream pattern with acc =
-    (s_hi, s_lo) behind the watermarked reorder buffer.
+    are O(events) inside the group. The streaming twin is
+    streaming.reorder.cusum_stream_ordered: one scalar of keyed state per
+    side (s_hi, s_lo) behind the watermarked reorder buffer, folded
+    against a FIXED target mu instead of the user's full-history mean.
     """
     ev = load_table(spark, sf_dir, "events")
     k, h = 25.0, 200.0
@@ -422,8 +425,11 @@ def monitor_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(NaN)=0 disagree with DuckDB's floor(NaN)=NaN).
     z is floor-rounded to 9 decimals and the anomaly flag
     compares the ROUNDED value, so flag and score are engine-identical.
-    Streaming twin: streaming.stateful.rolling_zscore_stream holds the
-    trailing window as keyed state and emits these rows bitwise.
+    Streaming twins: streaming.stateful.rolling_zscore_stream holds the
+    trailing window as keyed state and emits these rows bitwise when each
+    user's events arrive in event order across micro-batches;
+    streaming.reorder.rolling_zscore_stream_ordered emits them bitwise on
+    a reordering transport.
     """
     from pyspark.sql import Window
 
@@ -581,7 +587,8 @@ def monitor_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 def monitor_alert_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 surface, batch-checkable: tumbling 30s HIGH/OK alerts per user ->
     debounced state transitions via the SAME Arrow state machine the
-    streaming operator runs (streaming/stateful.py `_advance`).
+    streaming operator streaming.stateful.track_alert_transitions runs
+    (`_advance`).
 
     debounce=1 is the oracle-expressible configuration (state machine
     degenerates to lag()-change detection, exactly SQL); debounce>=2 is

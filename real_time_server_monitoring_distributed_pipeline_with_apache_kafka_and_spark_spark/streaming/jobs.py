@@ -109,11 +109,11 @@ def interval_join_stream(
     watermark: str = DEFAULT_WATERMARK,
     how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream TIME-INTERVAL inner join: right events landing in
-    ``(left_ts, left_ts + window_seconds]`` for the same key — the
-    streaming leg of operators.joins.interval_event_join (identical
-    predicate, so an incremental run over a replayed stream produces
-    exactly the batch pair set; pinned by
+    """Stream-stream TIME-INTERVAL join (inner or left-outer): right
+    events landing in ``(left_ts, left_ts + window_seconds]`` for the
+    same key — the streaming leg of operators.joins.interval_event_join
+    (identical predicate, so an incremental run over a replayed stream
+    produces exactly the batch pair set; pinned by
     tests/test_streaming.py::test_interval_join_stream_matches_batch).
 
     Both sides carry a watermark and the join condition bounds right_ts
@@ -123,6 +123,14 @@ def interval_join_stream(
     Without the time bound the state store grows without limit; this is
     the streaming mirror of the batch operator's bucket-bounded shuffle
     state.
+
+    With ``how="left_outer"`` a left row with NO matching right event
+    inside its window still emits, with NULL right columns, once the
+    right watermark passes ``left_ts + window`` and Spark can prove no
+    match can arrive (the "clicks that did NOT error within the hour"
+    leg); those rows lag matched rows by up to the watermark delay. The
+    drained stream equals the batch left join row-for-row (pinned by
+    tests/test_streaming.py::test_interval_join_stream_outer_matches_batch).
     """
     if how not in ("inner", "left_outer"):
         # Keeping only the LEFT key copy (below) is correct for inner and
@@ -138,39 +146,6 @@ def interval_join_stream(
     )
     # Both sides carry the key columns; keep the left copy.
     return joined.drop(*[rw[k] for k in key_cols])
-
-
-def interval_join_stream_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    left_ts: str,
-    right_ts: str,
-    window_seconds: int,
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """LEFT-OUTER stream-stream time-interval join: like
-    :func:`interval_join_stream` (which it delegates to — one predicate
-    definition, two join modes), but a left row with NO matching right
-    event inside its window still emits — with NULL right columns — once
-    the right watermark passes ``left_ts + window`` and Spark can prove
-    no match can arrive anymore. This is the "clicks that did NOT error
-    within the hour" / unmatched-spine leg a funnel-drop or SLA-miss
-    report needs, and it only works because the time bound + watermark
-    make non-matching provable; an unbounded outer stream join could
-    never emit the null row.
-
-    Same eviction contract as the inner leg (state bounded by
-    watermark + window); null-extended rows lag matched rows by up to
-    the watermark delay — the price of proving absence. Emitted pair
-    rows equal the batch left join row-for-row on a drained stream
-    (pinned by tests/test_streaming.py::
-    test_interval_join_stream_outer_matches_batch).
-    """
-    return interval_join_stream(
-        left, right, key_cols, left_ts, right_ts, window_seconds,
-        watermark=watermark, how="left_outer",
-    )
 
 
 def interval_join_stream_full(
@@ -382,16 +357,6 @@ def write_store_partition(df: DataFrame, store_path: str, batch_id: int) -> None
     )
 
 
-def foreach_batch_idempotent_parquet(df: DataFrame, path: str, checkpoint_dir: str):
-    """Raw landing leg: the :func:`ingest_store_stream` contract with no
-    transform — the extension point for destinations without a native
-    streaming sink (JDBC, transactional Kafka, REST).
-
-    Returns the DataStreamWriter (caller starts it).
-    """
-    return ingest_store_stream(df, path, checkpoint_dir)
-
-
 def vector_ingest_stream(
     vectors: DataFrame,
     store_path: str,
@@ -417,7 +382,7 @@ def vector_ingest_stream(
     tests/test_streaming.py::test_vector_ingest_stream_matches_batch).
 
     Delivery: each micro-batch lands in its own ``batch_id=N`` directory
-    with mode=overwrite (the :func:`foreach_batch_idempotent_parquet`
+    with mode=overwrite (the :func:`ingest_store_stream`
     contract) — a replayed batch overwrites its own partial output, so
     checkpoint + idempotent writes give exactly-once into the store.
 
@@ -545,7 +510,7 @@ def minhash_ingest_stream(
     tests/test_streaming.py::test_minhash_ingest_stream_matches_batch.
 
     Delivery: per-micro-batch ``batch_id=N`` directories with
-    mode=overwrite (the :func:`foreach_batch_idempotent_parquet`
+    mode=overwrite (the :func:`ingest_store_stream`
     contract) — replayed batches overwrite their own partial output, so
     checkpoint + idempotent writes give exactly-once into the store.
     Assumes document ids are unique across the stream (re-deliveries of

@@ -3,14 +3,16 @@
 The reference's own transport can reorder deliveries: its producer sends
 asynchronously with up to 5 requests in flight (reference
 ``producer/producer.py:17``), so per-key arrival order across micro-batches
-is NOT guaranteed to match event order. The plain sequence-stateful legs
+is NOT guaranteed to match event order. The arrival-order legs
 (:func:`..streaming.stateful.rolling_zscore_stream`, ``ewma_stream``) fold
-rows in arrival order and would silently compute wrong values on such a
-transport.
+each micro-batch in event order but fold micro-batches in arrival order, and
+would silently compute wrong values on such a transport.
 
 Spark disallows chaining two arbitrary ``applyInPandasWithState`` stages in
 one streaming query, so the buffer cannot be a separate operator. Instead
-it FUSES into the operator's keyed state:
+the ``*_ordered`` legs run the same per-key fold driver as the arrival-order
+legs (``stateful._fold_stream``) with the buffer in front of the fold, its
+fields appended to the keyed state:
 
 - incoming rows park in a per-key pending buffer (columnar arrays in the
   state struct — O(delay x rate) rows per key, bounded by the watermark);
@@ -32,9 +34,9 @@ it FUSES into the operator's keyed state:
   tests/test_streaming.py::test_reorder_buffer_drops_rows_later_than_hwm).
 
 The fold cores are SHARED with the arrival-order legs and the batch
-queries (``_zscore_row``; the ``alpha*x + (1-alpha)*acc`` op order), so an
-out-of-order stream emits rows bitwise identical to the batch window
-aggregate over the same input (pinned by tests/test_streaming.py::
+queries (``_zscore_fold``, ``_ewma_fold``), so an out-of-order stream emits
+rows bitwise identical to the batch window aggregate over the same input
+(pinned by tests/test_streaming.py::
 test_*_stream_ordered_matches_batch_on_out_of_order_input).
 
 At 100 TB scale: state per key = the fold core plus at most
@@ -46,12 +48,12 @@ pending row).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from typing import Any
+import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -62,9 +64,19 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .stateful import _ewma_schemas, _zscore_row, _zscore_schemas
+from .stateful import (
+    _EVENT_ORDER,
+    _EWMA_CORE,
+    _EWMA_SCHEMA,
+    _ZSCORE_CORE,
+    _ZSCORE_SCHEMA,
+    _ewma_fold,
+    _fold_stream,
+    _Fold,
+    _zscore_fold,
+)
 
-_BUF_FIELDS = (
+_BUF_FIELDS = [
     StructField("buf_event_id", ArrayType(LongType())),
     StructField("buf_ts", ArrayType(LongType())),  # event time, micros since epoch
     StructField("buf_value", ArrayType(DoubleType())),
@@ -78,14 +90,15 @@ _BUF_FIELDS = (
     # aggregate operators' global-watermark drop.
     StructField("hwm_ts", LongType()),
     StructField("hwm_eid", LongType()),
-)
+]
+_NO_HWM = -(1 << 62)
 
 
-def _ts_micros(ts: pd.Series) -> list[int]:
+def _ts_micros(ts: pd.Series) -> np.ndarray:
     s = ts
     if getattr(s.dtype, "tz", None) is not None:
         s = s.dt.tz_convert("UTC").dt.tz_localize(None)
-    return [int(x) for x in s.astype("datetime64[us]").astype("int64")]
+    return s.astype("datetime64[us]").astype("int64").to_numpy()
 
 
 _UTC_NAMES = {"UTC", "Etc/UTC", "GMT", "Z", "+00:00"}
@@ -108,102 +121,85 @@ def _require_utc_session(df: DataFrame) -> None:
         )
 
 
-def _buffered_fn(
-    n_core: int,
-    init_core: Callable[[], list],
-    fold: Callable[[list, list[tuple[int, int, float]], Any], tuple[list, list]],
-    out_names: list[str],
-):
-    """Build the applyInPandasWithState function: state = ``n_core`` fold
-    fields followed by the three pending-buffer arrays; ``fold(core,
-    ready_rows, key)`` consumes watermark-ready (event_id, ts_us, value)
-    tuples in event order and returns (out_rows, new_core)."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = state.get
-            core = list(st[:n_core])
-            buf = [list(x) if x is not None else [] for x in st[n_core : n_core + 3]]
-            hwm = (
-                st[n_core + 3] if st[n_core + 3] is not None else -(1 << 62),
-                st[n_core + 4] if st[n_core + 4] is not None else -(1 << 62),
-            )
-        else:
-            core, buf, hwm = init_core(), [[], [], []], (-(1 << 62), -(1 << 62))
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            for eid, ts_us, v in zip(
-                (int(x) for x in pdf["event_id"]),
-                _ts_micros(pdf["ts"]),
-                (float(x) for x in pdf["value"]),
-            ):
-                # Too late: this key already emitted at or past (ts, id).
-                if (ts_us, eid) <= hwm:
-                    continue
-                buf[0].append(eid)
-                buf[1].append(ts_us)
-                buf[2].append(v)
-        wm_ms = state.getCurrentWatermarkMs()
-        pending = sorted(zip(buf[0], buf[1], buf[2]), key=lambda r: (r[1], r[0]))
-        ready = [r for r in pending if r[1] <= wm_ms * 1000]
-        rest = [r for r in pending if r[1] > wm_ms * 1000]
-        out_rows, core = fold(core, ready, key[0])
-        if ready:
-            hwm = (ready[-1][1], ready[-1][0])
-        state.update(
-            tuple(core)
-            + (
-                [r[0] for r in rest],
-                [r[1] for r in rest],
-                [r[2] for r in rest],
-                hwm[0],
-                hwm[1],
-            )
+def _release(
+    arrivals: pd.DataFrame | None, tail: tuple, state: GroupState
+) -> tuple[pd.DataFrame, tuple]:
+    """One trigger of the reorder buffer: park the arrivals that sort after
+    the key's high-water mark with the pending rows of ``tail`` (the
+    ``_BUF_FIELDS`` values, empty for a new key) and release those at or
+    below the watermark. Returns the released rows (``event_id``, ``ts``,
+    ``ts_us``, ``value``) and the new ``_BUF_FIELDS`` values."""
+    eids, ts_us, values, hwm_ts, hwm_eid = tail or ([], [], [], None, None)
+    hwm_ts = _NO_HWM if hwm_ts is None else hwm_ts
+    hwm_eid = _NO_HWM if hwm_eid is None else hwm_eid
+    parked = pd.DataFrame(
+        {
+            "event_id": np.asarray(eids or [], dtype="int64"),
+            "ts_us": np.asarray(ts_us or [], dtype="int64"),
+            "value": np.asarray(values or [], dtype="float64"),
+        }
+    )
+    if arrivals is not None:
+        new = pd.DataFrame(
+            {
+                "event_id": arrivals["event_id"].astype("int64").to_numpy(),
+                "ts_us": _ts_micros(arrivals["ts"]),
+                "value": arrivals["value"].astype("float64").to_numpy(),
+            }
         )
-        if rest:
-            # Wake this key once the watermark passes its earliest pending
-            # row, even if no further data arrives for it. Must be strictly
-            # beyond the current watermark or Spark rejects it.
-            state.setTimeoutTimestamp(max(rest[0][1] // 1000, wm_ms + 1))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_names)
+        # Too late: this key already emitted at or past (ts, id).
+        late = (new["ts_us"] < hwm_ts) | (
+            (new["ts_us"] == hwm_ts) & (new["event_id"] <= hwm_eid)
+        )
+        parked = pd.concat([parked, new[~late]], ignore_index=True)
+    wm_ms = state.getCurrentWatermarkMs()
+    due = parked["ts_us"] <= wm_ms * 1000
+    ready, rest = parked[due], parked[~due]
+    if len(ready):
+        last = np.lexsort((ready["event_id"], ready["ts_us"]))[-1]
+        hwm_ts, hwm_eid = (int(x) for x in ready[["ts_us", "event_id"]].iloc[last])
+    if len(rest):
+        # Wake this key once the watermark passes its earliest pending
+        # row, even if no further data arrives for it. Must be strictly
+        # beyond the current watermark or Spark rejects it.
+        state.setTimeoutTimestamp(max(int(rest["ts_us"].min()) // 1000, wm_ms + 1))
+    return ready.assign(ts=pd.to_datetime(ready["ts_us"], unit="us")), (
+        rest["event_id"].tolist(),
+        rest["ts_us"].tolist(),
+        rest["value"].tolist(),
+        hwm_ts,
+        hwm_eid,
+    )
 
-    return fn
 
-
-def _zscore_fold(window: int):
-    def fold(core, ready, user_id):
-        hist = list(core[0]) if core[0] is not None else []
-        rows = []
-        for eid, ts_us, v in ready:
-            n, z = _zscore_row(v, hist)
-            rows.append(
-                (
-                    eid,
-                    user_id,
-                    pd.Timestamp(ts_us, unit="us"),
-                    v,
-                    n,
-                    z,
-                    None if z is None else abs(z) > 3.0,
-                )
-            )
-            hist.append(v)
-            if len(hist) > window:
-                del hist[: len(hist) - window]
-        return rows, [hist]
-
-    return fold
+def _ordered(
+    events: DataFrame,
+    delay: str,
+    fold: _Fold,
+    init: tuple,
+    out_schema: StructType,
+    core_fields: list[StructField],
+) -> DataFrame:
+    """An ``*_ordered`` leg: ``fold`` per user behind the reorder buffer,
+    with ``withWatermark("ts", delay)`` as the reorder tolerance."""
+    _require_utc_session(events)
+    return _fold_stream(
+        events.withWatermark("ts", delay),
+        "user_id",
+        fold,
+        init,
+        out_schema,
+        [*core_fields, *_BUF_FIELDS],
+        _EVENT_ORDER,
+        buffer=_release,
+    )
 
 
 def rolling_zscore_stream_ordered(
     events: DataFrame, window: int = 12, delay: str = "2 hours"
 ) -> DataFrame:
     """Out-of-order-safe twin of ``stateful.rolling_zscore_stream``: the
-    same trailing-window z-score fold (shared :func:`_zscore_row` core,
+    same trailing-window z-score fold (shared ``_zscore_row`` core,
     bitwise-identical to the batch ``monitor_anomaly_zscore``), preceded
     by the fused watermarked reorder buffer. Applies
     ``withWatermark("ts", delay)`` itself — ``delay`` is the reorder
@@ -212,37 +208,9 @@ def rolling_zscore_stream_ordered(
     arrival by the watermark (a row emits once no earlier row can still
     arrive), the price of correctness on a reordering transport.
     """
-    _require_utc_session(events)
-    out_schema, _ = _zscore_schemas(window)
-    state_schema = StructType(
-        [StructField("window", ArrayType(DoubleType())), *_BUF_FIELDS]
+    return _ordered(
+        events, delay, _zscore_fold(window), ([],), _ZSCORE_SCHEMA, _ZSCORE_CORE
     )
-    return (
-        events.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _buffered_fn(1, lambda: [[]], _zscore_fold(window), [f.name for f in out_schema]),
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def _ewma_fold(alpha: float):
-    def fold(core, ready, user_id):
-        started = bool(core[0]) if core[0] is not None else False
-        ewma = float(core[1]) if core[1] is not None else 0.0
-        rows = []
-        for eid, ts_us, v in ready:
-            # Same op order as the batch fold so floats agree bitwise.
-            ewma = (alpha * v + (1.0 - alpha) * ewma) if started else v
-            started = True
-            rows.append((eid, user_id, pd.Timestamp(ts_us, unit="us"), v, ewma))
-        return rows, [started, ewma]
-
-    return fold
 
 
 def ewma_stream_ordered(
@@ -252,25 +220,8 @@ def ewma_stream_ordered(
     EWMA recursion behind the fused watermarked reorder buffer. See
     :func:`rolling_zscore_stream_ordered` for the buffer contract.
     """
-    _require_utc_session(events)
-    out_schema, _ = _ewma_schemas()
-    state_schema = StructType(
-        [
-            StructField("started", BooleanType()),
-            StructField("ewma", DoubleType()),
-            *_BUF_FIELDS,
-        ]
-    )
-    return (
-        events.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _buffered_fn(2, lambda: [False, 0.0], _ewma_fold(alpha), [f.name for f in out_schema]),
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _ordered(
+        events, delay, _ewma_fold(alpha), (False, 0.0), _EWMA_SCHEMA, _EWMA_CORE
     )
 
 
@@ -287,14 +238,15 @@ _RATE_SPIKE_SCHEMA = StructType(
 )
 
 
-def _rate_spike_fold(threshold: float):
-    import math
-
-    def fold(core, ready, user_id):
+def _rate_spike_fold(threshold: float) -> _Fold:
+    def fold(rows, core, user_id):
         prev_ts = int(core[0]) if core[0] is not None else None
         prev_v = float(core[1]) if core[1] is not None else None
-        rows = []
-        for eid, ts_us, v in ready:
+        out = []
+        for eid, ts, ts_us, v in zip(
+            rows["event_id"], rows["ts"], rows["ts_us"].tolist(), rows["value"]
+        ):
+            v = float(v)
             if prev_ts is not None:
                 delta_us = ts_us - prev_ts
                 if delta_us != 0:
@@ -304,19 +256,9 @@ def _rate_spike_fold(threshold: float):
                     rate = (v - prev_v) / (delta_us / 1e6)
                     r9 = math.floor(rate * 1e9 + 0.5) / 1e9
                     if abs(r9) > threshold:
-                        rows.append(
-                            (
-                                user_id,
-                                eid,
-                                pd.Timestamp(ts_us, unit="us"),
-                                v,
-                                prev_v,
-                                delta_us,
-                                r9,
-                            )
-                        )
+                        out.append((user_id, eid, ts, v, prev_v, delta_us, r9))
             prev_ts, prev_v = ts_us, v
-        return rows, [prev_ts, prev_v]
+        return out, (prev_ts, prev_v)
 
     return fold
 
@@ -336,29 +278,13 @@ def rate_spike_stream_ordered(
     input (pinned by tests/test_streaming.py::
     test_rate_spike_stream_ordered_matches_batch_on_out_of_order_input).
     """
-    _require_utc_session(events)
-    state_schema = StructType(
-        [
-            StructField("prev_ts_us", LongType()),
-            StructField("prev_value", DoubleType()),
-            *_BUF_FIELDS,
-        ]
-    )
-    return (
-        events.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _buffered_fn(
-                2,
-                lambda: [None, None],
-                _rate_spike_fold(threshold),
-                [f.name for f in _RATE_SPIKE_SCHEMA],
-            ),
-            outputStructType=_RATE_SPIKE_SCHEMA,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _ordered(
+        events,
+        delay,
+        _rate_spike_fold(threshold),
+        (None, None),
+        _RATE_SPIKE_SCHEMA,
+        [StructField("prev_ts_us", LongType()), StructField("prev_value", DoubleType())],
     )
 
 
@@ -375,29 +301,20 @@ _CUSUM_SCHEMA = StructType(
 )
 
 
-def _cusum_fold(mu: float, k: float, h: float):
-    def fold(core, ready, user_id):
+def _cusum_fold(mu: float, k: float, h: float) -> _Fold:
+    def fold(rows, core, user_id):
         s_hi = float(core[0]) if core[0] is not None else 0.0
         s_lo = float(core[1]) if core[1] is not None else 0.0
-        rows = []
-        for eid, ts_us, v in ready:
+        out = []
+        for eid, ts, v in zip(rows["event_id"], rows["ts"], rows["value"]):
+            v = float(v)
             # Same IEEE op sequence as the batch fold (greatest(0, acc +
             # drift)), so the running accumulators agree bitwise with a
             # batch replay at the same fixed target.
             s_hi = max(0.0, s_hi + (v - mu - k))
             s_lo = max(0.0, s_lo + (mu - k - v))
-            rows.append(
-                (
-                    user_id,
-                    eid,
-                    pd.Timestamp(ts_us, unit="us"),
-                    v,
-                    s_hi,
-                    s_lo,
-                    s_hi > h or s_lo > h,
-                )
-            )
-        return rows, [s_hi, s_lo]
+            out.append((user_id, eid, ts, v, s_hi, s_lo, s_hi > h or s_lo > h))
+        return out, (s_hi, s_lo)
 
     return fold
 
@@ -426,27 +343,11 @@ def cusum_stream_ordered(
     first fires) depends on event order, so out-of-order transports get
     the same buffer treatment as z-score/EWMA/rate-spike.
     """
-    _require_utc_session(events)
-    state_schema = StructType(
-        [
-            StructField("s_hi", DoubleType()),
-            StructField("s_lo", DoubleType()),
-            *_BUF_FIELDS,
-        ]
-    )
-    return (
-        events.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _buffered_fn(
-                2,
-                lambda: [0.0, 0.0],
-                _cusum_fold(mu, k, h),
-                [f.name for f in _CUSUM_SCHEMA],
-            ),
-            outputStructType=_CUSUM_SCHEMA,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _ordered(
+        events,
+        delay,
+        _cusum_fold(mu, k, h),
+        (0.0, 0.0),
+        _CUSUM_SCHEMA,
+        [StructField("s_hi", DoubleType()), StructField("s_lo", DoubleType())],
     )

@@ -1,41 +1,114 @@
-"""Custom stateful streaming operators (SURVEY.md SS2.7 T5 surface).
+"""Sequence-stateful streaming operators (SURVEY.md SS2.7 T5 surface).
 
 The reference has no stateful processing beyond windowed aggregation; this
-adds the monitoring primitive its alert stream actually needs downstream:
-**alert transition tracking with flap debouncing** — emit one event when an
+adds the monitoring primitives its alert stream needs downstream:
+**alert transition tracking with flap debouncing** (emit one event when an
 entity's alert state *changes* and has stayed changed for ``debounce``
 consecutive windows, instead of re-emitting "CPU spike suspected" for every
-10-second window of a 2-hour incident.
+10-second window of a 2-hour incident), and the per-user trailing z-score
+and EWMA level as continuous keyed state.
 
-Implemented with ``applyInPandasWithState`` (Arrow-batched, partitioned by
-entity — state lives with the shuffle partition, scales horizontally with
-executors; the per-group state is three scalars, so state size is
-O(entities), not O(windows)).
+Every leg is built by one driver, :func:`_fold_stream`, over
+``applyInPandasWithState`` (Arrow-batched, partitioned by key: state lives
+with the shuffle partition and scales with executors). For each key on each
+trigger the driver reads the fold core from state, concatenates every Arrow
+chunk of the micro-batch (``spark.sql.execution.arrow.maxRecordsPerBatch``
+splits a key's rows into several), sorts the rows by the operator's order
+columns, runs the operator's fold and stores the new core. Sorting the whole
+micro-batch rather than each chunk is what keeps a catch-up after downtime,
+where one key has more rows than a chunk holds, in event order.
+
+These arrival-order legs fold each micro-batch in order, but across
+micro-batches they fold in arrival order. On a reordering transport (the
+reference's producer keeps 5 async sends in flight) use the ``*_ordered``
+legs of :mod:`.reorder`, which put a watermarked reorder buffer in front of
+the same driver and folds. The batch twins are the verification ground
+truth: :func:`track_alert_transitions_batch` runs the same ``_advance``
+core, and the folds replay the exact arithmetic of the batch queries in
+``queries.monitoring``, so stream and batch rows agree bitwise.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("current", StringType()),
-        StructField("pending", StringType()),
-        StructField("pending_count", IntegerType()),
-    ]
-)
+# fold(rows sorted in fold order, core, key) -> (output rows, new core)
+_Fold = Callable[[pd.DataFrame, tuple, Any], tuple[list, tuple]]
+
+
+def _fold_stream(
+    df: DataFrame,
+    key_col: str,
+    fold: _Fold,
+    init: tuple,
+    out_schema: StructType,
+    state_fields: list[StructField],
+    order: list[str],
+    buffer=None,
+) -> DataFrame:
+    """The one per-key fold driver of the sequence-stateful stream legs.
+
+    State is the fold core (``init`` for a new key), one field per ``init``
+    entry, followed by whatever ``buffer`` keeps. Each trigger folds all of
+    a key's rows of the micro-batch at once, sorted by ``order``. With a
+    ``buffer`` (the reorder buffer of :mod:`.reorder`) it folds the rows
+    the buffer releases instead: ``buffer(rows, tail, state)`` gets the
+    concatenated arrivals (``None`` on a timeout) and the state fields
+    after the core, and returns the due rows and the new tail; it runs
+    under the event-time timeout.
+    """
+    names = out_schema.fieldNames()
+    n_core = len(init)
+
+    def fn(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = tuple(state.get) if state.exists else tuple(init)
+        chunks = list(pdfs)
+        rows = pd.concat(chunks, ignore_index=True) if chunks else None
+        tail = ()
+        if buffer is not None:
+            rows, tail = buffer(rows, st[n_core:], state)
+        out, core = fold(rows.sort_values(order), st[:n_core], key[0])
+        state.update((*core, *tail))
+        if out:
+            yield pd.DataFrame(out, columns=names)
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=StructType(state_fields),
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if buffer is None
+            else GroupStateTimeout.EventTimeTimeout
+        ),
+    )
+
+
+_TRANSITION_CORE = [
+    StructField("current", StringType()),
+    StructField("pending", StringType()),
+    StructField("pending_count", IntegerType()),
+]
 
 
 def _transition_schema(alerts: DataFrame, entity_col: str) -> StructType:
@@ -71,23 +144,6 @@ def _advance(pdf: pd.DataFrame, state: tuple, debounce: int, entity) -> tuple[li
     return out_rows, (current, pending, pending_count)
 
 
-def _transition_fn(debounce: int, names: list[str]):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = state.get if state.exists else (None, None, 0)
-        out_rows = []
-        for pdf in pdfs:
-            # micro-batch rows arrive unordered; process in window order
-            rows, st = _advance(pdf.sort_values("window_start"), st, debounce, key[0])
-            out_rows.extend(rows)
-        state.update(st)
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=names)
-
-    return fn
-
-
 def track_alert_transitions(
     alerts: DataFrame, entity_col: str = "server_id", debounce: int = 2
 ) -> DataFrame:
@@ -97,15 +153,17 @@ def track_alert_transitions(
     alert) — e.g. the output of the windowed alert jobs. A transition is
     emitted once the new alert value has held for ``debounce`` consecutive
     observed windows; flaps shorter than that are suppressed. ``from_state``
-    is NULL for an entity's first established state.
+    is NULL for an entity's first established state. State is three
+    scalars per entity.
     """
-    schema = _transition_schema(alerts, entity_col)
-    return alerts.groupBy(entity_col).applyInPandasWithState(
-        _transition_fn(debounce, schema.fieldNames()),
-        outputStructType=schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_stream(
+        alerts,
+        entity_col,
+        lambda rows, core, entity: _advance(rows, core, debounce, entity),
+        (None, None, 0),
+        _transition_schema(alerts, entity_col),
+        _TRANSITION_CORE,
+        ["window_start"],
     )
 
 
@@ -154,27 +212,21 @@ def track_alert_transitions_batch(
     return alerts.groupBy(entity_col).applyInPandas(fn, schema=schema)
 
 
-def _zscore_schemas(window: int):
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DoubleType,
-        LongType,
-    )
+# Event-keyed legs fold each user's rows in (event time, event id) order.
+_EVENT_ORDER = ["ts", "event_id"]
 
-    out = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-            StructField("n_history", LongType()),
-            StructField("zscore", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    st = StructType([StructField("window", ArrayType(DoubleType()))])
-    return out, st
+_ZSCORE_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("user_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("value", DoubleType()),
+        StructField("n_history", LongType()),
+        StructField("zscore", DoubleType()),
+        StructField("is_anomaly", BooleanType()),
+    ]
+)
+_ZSCORE_CORE = [StructField("window", ArrayType(DoubleType()))]
 
 
 def _zscore_row(value: float, hist: list[float]) -> tuple[int, float | None]:
@@ -183,8 +235,6 @@ def _zscore_row(value: float, hist: list[float]) -> tuple[int, float | None]:
     cent-lattice sums (the decimal(12,2) cast), s*s/n before the
     subtraction, one division per step, floor-round to 1e-9. Bitwise
     identical to the window-aggregate formulation on the same rows."""
-    import math
-
     n = len(hist)
     if n < 2:
         return n, None
@@ -204,33 +254,20 @@ def _zscore_row(value: float, hist: list[float]) -> tuple[int, float | None]:
     return n, math.floor(z * 1e9 + 0.5) / 1e9
 
 
-def _zscore_fn(window: int):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        hist: list[float] = list(state.get[0]) if state.exists else []
-        out = {k: [] for k in (
-            "event_id", "user_id", "ts", "value", "n_history", "zscore", "is_anomaly"
-        )}
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for r in pdf.itertuples():
-                n, z = _zscore_row(float(r.value), hist)
-                out["event_id"].append(r.event_id)
-                out["user_id"].append(r.user_id)
-                out["ts"].append(r.ts)
-                out["value"].append(r.value)
-                out["n_history"].append(n)
-                out["zscore"].append(z)
-                out["is_anomaly"].append(None if z is None else abs(z) > 3.0)
-                hist.append(float(r.value))
-                if len(hist) > window:
-                    del hist[: len(hist) - window]
-        state.update((hist,))
-        if out["event_id"]:
-            yield pd.DataFrame(out)
+def _zscore_fold(window: int) -> _Fold:
+    def fold(rows, core, user_id):
+        hist = list(core[0]) if core[0] is not None else []
+        out = []
+        for eid, ts, v in zip(rows["event_id"], rows["ts"], rows["value"]):
+            v = float(v)
+            n, z = _zscore_row(v, hist)
+            out.append((eid, user_id, ts, v, n, z, None if z is None else abs(z) > 3.0))
+            hist.append(v)
+            if len(hist) > window:
+                del hist[: len(hist) - window]
+        return out, (hist,)
 
-    return fn
+    return fold
 
 
 def rolling_zscore_stream(
@@ -238,73 +275,52 @@ def rolling_zscore_stream(
 ) -> DataFrame:
     """Streaming leg of queries.monitoring.monitor_anomaly_zscore: the
     per-user trailing-``window`` z-score as CONTINUOUS keyed state
-    (``applyInPandasWithState``; state = at most ``window`` doubles per
-    user, O(users) total — no watermark needed because the state is
-    size-bounded by construction, not time-bounded).
+    (state = at most ``window`` doubles per user, O(users) total — no
+    watermark needed because the state is size-bounded by construction,
+    not time-bounded).
 
     Replays the batch query's exact arithmetic (shared
     :func:`_zscore_row`), so on an event-time-ordered stream the emitted
     rows are bitwise identical to the batch window aggregate over the
     union input (pinned by tests/test_streaming.py::
-    test_rolling_zscore_stream_matches_batch). Order caveat: like any
-    sequence-stateful operator, per-user arrival order must match event
-    order across micro-batches (within a batch rows are sorted); on a
-    reordering transport (the reference's producer runs 5 async sends in
-    flight) use :func:`..streaming.reorder.rolling_zscore_stream_ordered`,
-    which fuses a watermarked reorder buffer into the same fold.
+    test_rolling_zscore_stream_matches_batch). Order caveat: each
+    micro-batch is folded in event order, but across micro-batches rows
+    fold in arrival order; on a reordering transport use
+    :func:`..streaming.reorder.rolling_zscore_stream_ordered`.
     """
-    out_schema, state_schema = _zscore_schemas(window)
-    return events.groupBy("user_id").applyInPandasWithState(
-        _zscore_fn(window),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_stream(
+        events, "user_id", _zscore_fold(window), ([],), _ZSCORE_SCHEMA,
+        _ZSCORE_CORE, _EVENT_ORDER,
     )
 
 
-def _ewma_schemas():
-    from pyspark.sql.types import BooleanType, DoubleType, LongType
-
-    out = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-            StructField("ewma_value", DoubleType()),
-        ]
-    )
-    st = StructType(
-        [StructField("started", BooleanType()), StructField("ewma", DoubleType())]
-    )
-    return out, st
+_EWMA_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("user_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("value", DoubleType()),
+        StructField("ewma_value", DoubleType()),
+    ]
+)
+_EWMA_CORE = [StructField("started", BooleanType()), StructField("ewma", DoubleType())]
 
 
-def _ewma_fn(alpha: float):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        started, ewma = state.get if state.exists else (False, 0.0)
-        out = {k: [] for k in ("event_id", "user_id", "ts", "value", "ewma_value")}
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for r in pdf.itertuples():
-                v = float(r.value)
-                # Same op order as the batch fold (alpha*x + (1-alpha)*acc)
-                # so stream and batch floats agree bitwise.
-                ewma = (alpha * v + (1.0 - alpha) * ewma) if started else v
-                started = True
-                out["event_id"].append(r.event_id)
-                out["user_id"].append(r.user_id)
-                out["ts"].append(r.ts)
-                out["value"].append(r.value)
-                out["ewma_value"].append(ewma)
-        state.update((started, ewma))
-        if out["event_id"]:
-            yield pd.DataFrame(out)
+def _ewma_fold(alpha: float) -> _Fold:
+    def fold(rows, core, user_id):
+        started = bool(core[0]) if core[0] is not None else False
+        ewma = float(core[1]) if core[1] is not None else 0.0
+        out = []
+        for eid, ts, v in zip(rows["event_id"], rows["ts"], rows["value"]):
+            v = float(v)
+            # Same op order as the batch fold (alpha*x + (1-alpha)*acc)
+            # so stream and batch floats agree bitwise.
+            ewma = (alpha * v + (1.0 - alpha) * ewma) if started else v
+            started = True
+            out.append((eid, user_id, ts, v, ewma))
+        return out, (started, ewma)
 
-    return fn
+    return fold
 
 
 def ewma_stream(events: DataFrame, alpha: float = 0.2) -> DataFrame:
@@ -316,68 +332,11 @@ def ewma_stream(events: DataFrame, alpha: float = 0.2) -> DataFrame:
     fold over the union input (same init-at-first-observation, same
     ``alpha*x + (1-alpha)*acc`` op order; pinned by
     tests/test_streaming.py::test_ewma_stream_matches_batch). Same
-    ordering caveat as every sequence-stateful operator — the
+    ordering caveat as :func:`rolling_zscore_stream` — the
     out-of-order-safe twin is
     :func:`..streaming.reorder.ewma_stream_ordered`.
     """
-    out_schema, state_schema = _ewma_schemas()
-    return events.groupBy("user_id").applyInPandasWithState(
-        _ewma_fn(alpha),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def track_alert_transitions_v2(
-    alerts: DataFrame, entity_col: str = "server_id", debounce: int = 2
-) -> DataFrame:
-    """:func:`track_alert_transitions` on Spark 4's arbitrary-state API
-    v2 (``transformWithStateInPandas`` + ``StatefulProcessor``) — the
-    SAME ``_advance`` debounce core, so all three implementations (batch,
-    v1 stream, v2 stream) share one state machine and one semantics.
-
-    Why carry both stream APIs: v2 is where stateful streaming is
-    heading — named state variables (value/list/map) instead of one
-    state struct, TTL per variable, timers decoupled from output, and
-    initial-state bootstrap — and it REQUIRES the RocksDB state-store
-    provider, the configuration a 100 TB deployment runs anyway (state
-    on local disk + changelog checkpointing, not executor heap). The
-    per-key state here is the same three scalars as v1; parity across
-    v1/v2/batch is pinned in tests/test_streaming.py.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = _transition_schema(alerts, entity_col)
-    names = [f.name for f in out_schema]
-
-    class _TransitionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("debounce_state", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            st = (
-                tuple(self._state.get())
-                if self._state.exists()
-                else (None, None, 0)
-            )
-            out: list = []
-            for pdf in rows:
-                emitted, st = _advance(
-                    pdf.sort_values("window_start"), st, debounce, key[0]
-                )
-                out.extend(emitted)
-            self._state.update(st)
-            if out:
-                yield pd.DataFrame(out, columns=names)
-
-        def close(self) -> None:
-            pass
-
-    return alerts.groupBy(entity_col).transformWithStateInPandas(
-        statefulProcessor=_TransitionProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
+    return _fold_stream(
+        events, "user_id", _ewma_fold(alpha), (False, 0.0), _EWMA_SCHEMA,
+        _EWMA_CORE, _EVENT_ORDER,
     )

@@ -1540,6 +1540,154 @@ def test_ewma_stream_matches_batch(spark, tmp_path):
     assert {u: v for u, v in last.items()} == {u: w[1] for u, w in want.items()}
 
 
+@pytest.mark.parametrize(
+    "leg", ["track_alert_transitions", "rolling_zscore_stream", "ewma_stream"]
+)
+def test_arrival_order_legs_fold_chunked_micro_batch_in_event_order(spark, tmp_path, leg):
+    """A key with more rows in one micro-batch than an Arrow chunk holds
+    (a catch-up after downtime at the default 10,000 rows per chunk; 3
+    here) must still fold in event order: one micro-batch written in
+    REVERSE event order streams to exactly the batch twin's result."""
+    from datetime import datetime
+
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries.monitoring import (
+        monitor_anomaly_zscore,
+        monitor_ewma_level,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming import (
+        stateful,
+    )
+
+    if leg == "track_alert_transitions":
+        flaps = {
+            "s1": ["OK"] * 6 + ["CPU spike suspected"] * 6,
+            "s2": "OK OK MEM OK MEM MEM MEM OK OK CPU CPU CPU".split(),
+        }
+        data = spark.createDataFrame(
+            [
+                (s, datetime(2024, 1, 1, 0, 0, 5 * i), a)
+                for s, alerts in flaps.items()
+                for i, a in enumerate(alerts)
+            ],
+            "server_id string, window_start timestamp, alert string",
+        )
+        order = "window_start"
+        want = sorted(
+            map(tuple, stateful.track_alert_transitions_batch(data, debounce=2).collect())
+        )
+        assert len(want) >= 4
+    else:
+        data = spark.range(40).select(
+            F.col("id").alias("event_id"),
+            (F.col("id") % 2).alias("user_id"),
+            F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 60).alias("ts"),
+            F.round((F.col("id") % 13) * 1.7 + 2, 2).alias("value"),
+        )
+        order = "ts"
+        sf_dir = str(tmp_path / "sf")
+        data.write.parquet(sf_dir + "/events.parquet")
+        if leg == "rolling_zscore_stream":
+            want = sorted(
+                (r.event_id, r.n_history, r.zscore, r.is_anomaly)
+                for r in monitor_anomaly_zscore(spark, sf_dir).collect()
+            )
+        else:
+            want = sorted(
+                (r.user_id, r.ewma_value) for r in monitor_ewma_level(spark, sf_dir).collect()
+            )
+
+    src = str(tmp_path / "src")
+    data.repartition(1).sortWithinPartitions(F.desc(order)).write.parquet(src)
+    stream = spark.readStream.schema(data.schema).parquet(src)
+    name = f"chunked_{leg}"
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        q = (
+            getattr(stateful, leg)(stream)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            rows = spark.table(name).collect()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(conf, prev)
+
+    if leg == "track_alert_transitions":
+        got = sorted(map(tuple, rows))
+    elif leg == "rolling_zscore_stream":
+        got = sorted((r.event_id, r.n_history, r.zscore, r.is_anomaly) for r in rows)
+    else:
+        last = {}
+        for r in sorted(rows, key=lambda r: (r.ts, r.event_id)):
+            last[r.user_id] = r.ewma_value
+        got = sorted(last.items())
+    assert got == want
+
+
+def test_rolling_zscore_stream_resumes_from_checkpoint(spark, tmp_path):
+    """An arrival-order leg's fold core round-trips the state store: stop
+    rolling_zscore_stream after the first of two time-split files,
+    restart it from its checkpoint, and the drained output still equals
+    the batch monitor_anomaly_zscore bitwise with no duplicates."""
+    import time as _time
+
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries.monitoring import (
+        monitor_anomaly_zscore,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.stateful import (
+        rolling_zscore_stream,
+    )
+
+    events = spark.range(120).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).alias("user_id"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 60).alias("ts"),
+        F.round((F.col("id") % 29) * 1.91 + 4, 2).alias("value"),
+    )
+    sf_dir = str(tmp_path / "sf")
+    events.write.parquet(sf_dir + "/events.parquet")
+    want = sorted(
+        (r.event_id, r.n_history, r.zscore, r.is_anomaly)
+        for r in monitor_anomaly_zscore(spark, sf_dir).collect()
+    )
+
+    src, ckpt, out = (str(tmp_path / p) for p in ("src", "ckpt", "out"))
+    cutoff = F.col("event_id") < 60
+
+    def drain():
+        stream = spark.readStream.schema(events.schema).option("maxFilesPerTrigger", 1).parquet(src)
+        q = (
+            rolling_zscore_stream(stream)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    events.filter(cutoff).coalesce(1).write.mode("append").parquet(src)
+    _time.sleep(1.1)
+    drain()
+    events.filter(~cutoff).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    got = sorted(
+        (r.event_id, r.n_history, r.zscore, r.is_anomaly)
+        for r in spark.read.parquet(out).collect()
+    )
+    assert got == want and len(want) == 120
+
+
 def test_zscore_constant_window_no_crash_three_way_parity(spark, tmp_path):
     """Regression (r06): a constant trailing window makes var tiny-NEGATIVE
     under double rounding (e.g. hist=[20.53]*k). Before the `var > 0`
@@ -2008,9 +2156,9 @@ def test_interval_join_stream_outer_matches_batch(spark, tmp_path):
 
     c_s = spark.readStream.schema(clicks.schema).option("maxFilesPerTrigger", 1).parquet(c_src)
     e_s = spark.readStream.schema(errors.schema).option("maxFilesPerTrigger", 1).parquet(e_src)
-    joined = jobs.interval_join_stream_outer(
+    joined = jobs.interval_join_stream(
         c_s, e_s, ["user_id"], "click_ts", "error_ts", window_seconds=600,
-        watermark="10 minutes",
+        watermark="10 minutes", how="left_outer",
     )
     q = (
         joined.writeStream.outputMode("append")
@@ -2912,99 +3060,6 @@ def test_stateful_restart_keeps_recorded_partition_count(spark, tmp_path):
     for k, (a_cpu, a_mem) in expected.items():
         g_cpu, g_mem = got[k]
         assert abs(g_cpu - a_cpu) <= 0.011 and abs(g_mem - a_mem) <= 0.011, (k, got[k], expected[k])
-
-
-def test_transform_with_state_v2_matches_v1_and_batch(spark, tmp_path):
-    """T5 on the state API v2: transformWithStateInPandas (RocksDB-backed
-    StatefulProcessor) must emit EXACTLY the v1 applyInPandasWithState
-    leg's transitions and the batch ground truth — one shared _advance
-    core, three execution paths, one semantics — across micro-batch
-    boundaries and a mid-stream flap.
-
-    AUTO-ACTIVATING: the v2 state protocol is protobuf-based and this
-    sandbox lacks google.protobuf (pip installs unavailable) — the test
-    skips itself until the dependency appears, exactly like the Kafka
-    broker e2e. The operator's API usage is complete; this is an
-    environment seam, not a stub."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas state protocol needs protobuf",
-    )
-    from datetime import datetime
-
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.stateful import (
-        track_alert_transitions,
-        track_alert_transitions_batch,
-        track_alert_transitions_v2,
-    )
-
-    rows = [
-        ("s1", 0, "OK"), ("s1", 10, "OK"),
-        ("s1", 20, "CPU spike suspected"), ("s1", 30, "OK"),
-        ("s1", 40, "CPU spike suspected"), ("s1", 50, "CPU spike suspected"),
-        ("s2", 0, "OK"), ("s2", 10, "OK"),
-        ("s2", 20, "Memory saturation suspected"),
-        ("s2", 30, "Memory saturation suspected"),
-        ("s2", 40, "OK"), ("s2", 50, "Memory saturation suspected"),
-    ]
-    batch_df = spark.createDataFrame(
-        [(s, datetime(2024, 1, 1, 0, 0, sec), a) for s, sec, a in rows],
-        ["server_id", "window_start", "alert"],
-    )
-    expected = sorted(
-        map(tuple, track_alert_transitions_batch(batch_df, debounce=2).collect())
-    )
-
-    src = str(tmp_path / "v2_src")
-    for i in range(3):  # 3 arrival batches of 4 rows each
-        spark.createDataFrame(
-            [
-                (s, datetime(2024, 1, 1, 0, 0, sec), a)
-                for s, sec, a in rows[i * 4 : (i + 1) * 4]
-            ],
-            ["server_id", "window_start", "alert"],
-        ).coalesce(1).write.mode("append").csv(f"{src}/b{i}", header=False)
-    schema = "server_id string, window_start timestamp, alert string"
-
-    def drain(make_query, name, ckpt):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .csv(f"{src}/b*")
-        )
-        q = (
-            make_query(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return sorted(map(tuple, spark.table(name).collect()))
-        finally:
-            q.stop()
-
-    v1 = drain(lambda s: track_alert_transitions(s, debounce=2), "tws_v1", "ck1")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        v2 = drain(
-            lambda s: track_alert_transitions_v2(s, debounce=2), "tws_v2", "ck2"
-        )
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    assert v1 == expected and v2 == expected
-    assert len(expected) == 4
 
 
 def test_state_store_reader_inspects_window_state(spark, tmp_path):

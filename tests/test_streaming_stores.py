@@ -894,7 +894,7 @@ def test_foreach_batch_idempotent_sink(spark, tmp_path):
     """foreachBatch per-batch-directory overwrite + checkpoint restart:
     rows delivered exactly once across a stop/new-data/restart cycle."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.jobs import (
-        foreach_batch_idempotent_parquet,
+        ingest_store_stream,
     )
 
     src, sink, ckpt = (str(tmp_path / n) for n in ("src", "sink", "ckpt"))
@@ -906,7 +906,7 @@ def test_foreach_batch_idempotent_sink(spark, tmp_path):
 
     def start():
         stream = spark.readStream.schema(schemas.METRICS_CPU).csv(src)
-        return foreach_batch_idempotent_parquet(stream, sink, ckpt).start()
+        return ingest_store_stream(stream, sink, ckpt).start()
 
     q = start()
     try:
