@@ -13,15 +13,32 @@ Shuffle partitions come in two regimes, sized separately:
   state partitions a new stateful query gets, and every trigger loads and
   commits one state store per partition per stateful operator (four per
   partition for a stream-stream join, one for the alert jobs' window
-  aggregate, so 3 stores per trigger at ``local[3]``). A commit costs
-  about 50-80 ms per store instance, whatever the micro-batch size, so the
-  cheapest trigger is one wave of slot-count tasks. A restarted query keeps the count
-  recorded in its checkpoint's offset log, so checkpoints written at
-  another count keep working.
+  aggregate, so 3 stores per trigger at ``local[3]``). Each store's
+  commit writes a fixed set of checkpoint files whatever the micro-batch
+  size, so the cheapest trigger is one wave of slot-count tasks. A
+  restarted query keeps the count recorded in its checkpoint's offset
+  log, so checkpoints written at another count keep working.
 - Batch: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` =
   ``max(2 x slots, 8)``. With AQE and partition coalescing on, Spark plans
   batch shuffles at this count and coalesces them at run time, so batch
   plans keep their former 2x-slots layout.
+
+Checkpoint files: a ``local[...]`` session writes its streaming checkpoints
+(two source logs, the offset WAL and the commit log per trigger, plus each
+state store's delta file and its checksum sidecar) through Spark's
+``FileSystemBasedCheckpointFileManager`` instead of the default
+``FileContextBasedCheckpointFileManager``. Without the Hadoop native
+library, FileContext's local file system shells out to ``readlink`` and
+``chmod`` about six times per file it writes. On a 4-core box a fork took
+≈6.8 ms and a file ≈43 ms through FileContext against ≈12 ms through
+FileSystem; those forks, not the state store itself, were the bulk of the
+~50-80 ms each store's commit took per trigger (now ~4 ms). On a local
+POSIX disk ``rename(2)`` is atomic, so FileContext's extra checks buy
+nothing there; Spark itself falls back to the FileSystem manager whenever
+FileContext is unavailable. File contents, names and ``.crc`` sidecars are
+the same under both managers, so either resumes the other's checkpoints.
+A non-local master, or an owner who set a manager (a cloud store's, say),
+keeps that choice.
 """
 
 from __future__ import annotations
@@ -84,6 +101,11 @@ RUNTIME_CONFS: dict[str, str] = {
 
 INITIAL_PARTITION_NUM = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
 
 def partition_confs(slots: int, batch_partitions: int | None = None) -> dict[str, str]:
     """The two shuffle regimes for ``slots`` task slots: state partitions
@@ -115,9 +137,16 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     opts out with SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1. Results are
     partition-count-invariant either way (decimal sums, lattice rounding
     — pinned by the partition-invariance property tests).
+
+    Checkpoint files: a ``local[...]`` master gets the FileSystem-based
+    checkpoint manager (module docstring) unless the owner set one.
     """
     for key, value in RUNTIME_CONFS.items():
         spark.conf.set(key, value)
+    master = spark.sparkContext.master
+    is_local = master == "local" or master.startswith("local[")
+    if is_local and spark.conf.get(CHECKPOINT_FILE_MANAGER, None) is None:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER, LOCAL_CHECKPOINT_FILE_MANAGER)
     keep = os.environ.get("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS", "") == "1"
     if not keep and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
         for key, value in partition_confs(spark.sparkContext.defaultParallelism).items():

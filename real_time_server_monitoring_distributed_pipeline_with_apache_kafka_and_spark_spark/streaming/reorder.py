@@ -24,14 +24,17 @@ fields appended to the keyed state:
 - an event-time timeout wakes keys that receive no further data once the
   watermark passes their earliest pending row, so buffered rows always
   drain without requiring fresh per-key traffic;
-- UNLIKE aggregations, Spark does NOT filter late input for arbitrary
-  stateful operators, so the buffer enforces its own guarantee: an arrival
-  sorting at or before its key's emission high-water mark (the last
-  (event time, id) actually folded) is dropped — folding it would violate
-  event order. An arrival behind the GLOBAL watermark but still ahead of
-  its key's emissions folds correctly, so this loses strictly less data
-  than the windowed aggs' global-watermark drop (pinned by
-  tests/test_streaming.py::test_reorder_buffer_drops_rows_later_than_hwm).
+- under ``EventTimeTimeout`` Spark 4.1 drops input rows behind the
+  previous trigger's watermark before the function sees them (counted in
+  ``numRowsDroppedByWatermark``). A key's emission high-water mark (the
+  last (event time, id) actually folded) is never past that watermark,
+  so no row at or before it reaches the buffer there. Older Spark
+  versions did not filter input for arbitrary stateful operators, so the
+  buffer keeps its own guard: an arrival sorting at or before the
+  high-water mark is dropped — folding it would violate event order
+  (pinned by tests/test_streaming.py::
+  test_reorder_release_drops_arrivals_at_or_before_hwm, which drives
+  ``_release`` directly).
 
 The fold cores are SHARED with the arrival-order legs and the batch
 queries (``_zscore_fold``, ``_ewma_fold``), so an out-of-order stream emits
@@ -81,13 +84,10 @@ _BUF_FIELDS = [
     StructField("buf_ts", ArrayType(LongType())),  # event time, micros since epoch
     StructField("buf_value", ArrayType(DoubleType())),
     # Per-key emission high-water mark (ts_us, event_id of the LAST row
-    # folded). Spark does NOT filter late input for arbitrary stateful
-    # operators (unlike aggregations), so the buffer enforces its own
-    # order guarantee: an arrival sorting at or before the high-water
-    # mark would have to be folded out of order — it is dropped. An
-    # arrival behind the GLOBAL watermark but still ahead of its key's
-    # emissions folds correctly — strictly less data loss than the
-    # aggregate operators' global-watermark drop.
+    # folded). An arrival sorting at or before it would have to be
+    # folded out of order, so it is dropped. Spark 4.1 already filters
+    # such rows under EventTimeTimeout (module docstring); the guard is
+    # for versions that did not.
     StructField("hwm_ts", LongType()),
     StructField("hwm_eid", LongType()),
 ]

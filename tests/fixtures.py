@@ -67,3 +67,21 @@ def write_csv_batch(df, path):
     """Append a DataFrame as one CSV file into a file-stream source dir
     (each call = one arriving 'micro-batch' file for readStream tests)."""
     df.coalesce(1).write.mode("append").csv(path, header=False)
+
+
+# Spark's default checkpoint file manager, which local sessions replace.
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+
+
+def checkpoint_manager(spark, path) -> str:
+    """Class name of the checkpoint file manager Spark builds for the
+    local ``path`` from the session's Hadoop conf, the conf its streaming
+    queries and state stores receive."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file:{path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getSimpleName()

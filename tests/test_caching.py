@@ -17,6 +17,7 @@ from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spar
 )
 
 from .conftest import SF_SMOKE
+from .fixtures import FILE_CONTEXT_MANAGER, checkpoint_manager
 
 
 def test_released_evicts_operator_internal_persist(spark):
@@ -85,6 +86,52 @@ def test_runtime_confs_respect_user_shuffle_partitions(spark):
             spark.conf.unset(INITIAL_PARTITION_NUM)
         else:
             spark.conf.set(INITIAL_PARTITION_NUM, prev_initial)
+
+
+def test_local_session_writes_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """A ``local[...]`` session writes its checkpoint files through
+    FileSystemBasedCheckpointFileManager, not Spark's FileContext default,
+    which forks ``readlink``/``chmod`` per file without the Hadoop native
+    library. An owner's own manager (a cloud store's, say) survives
+    apply_runtime_confs, and so does Spark's default on any non-local
+    master."""
+    from types import SimpleNamespace
+
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+        LOCAL_CHECKPOINT_FILE_MANAGER,
+        apply_runtime_confs,
+    )
+
+    assert checkpoint_manager(spark, tmp_path / "ckpt") == "FileSystemBasedCheckpointFileManager"
+
+    prev = spark.conf.get(CHECKPOINT_FILE_MANAGER, None)
+    try:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER, FILE_CONTEXT_MANAGER)
+        apply_runtime_confs(spark)
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER) == FILE_CONTEXT_MANAGER
+        assert checkpoint_manager(spark, tmp_path / "ckpt") == "FileContextBasedCheckpointFileManager"
+    finally:
+        if prev is None:
+            spark.conf.unset(CHECKPOINT_FILE_MANAGER)
+        else:
+            spark.conf.set(CHECKPOINT_FILE_MANAGER, prev)
+
+    class Conf(dict):  # the two RuntimeConfig calls apply_runtime_confs makes
+        def set(self, key, value):
+            self[key] = value
+
+    def managed(master: str) -> str | None:
+        bare = SimpleNamespace(
+            conf=Conf({"spark.sql.shuffle.partitions": "64"}),
+            sparkContext=SimpleNamespace(master=master, defaultParallelism=64),
+        )
+        return apply_runtime_confs(bare).conf.get(CHECKPOINT_FILE_MANAGER)
+
+    for master in ("local", "local[3]", "local[*]", "local[4,2]"):
+        assert managed(master) == LOCAL_CHECKPOINT_FILE_MANAGER, master
+    for master in ("yarn", "spark://driver:7077", "k8s://https://api:6443", "local-cluster[2,1,1024]"):
+        assert managed(master) is None, master
 
 
 def test_get_spark_keeps_a_fetched_sessions_partition_counts(spark):

@@ -13,7 +13,7 @@ from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spar
     config as cfg,
 )
 
-from .fixtures import metrics_wide_df, narrow_splits
+from .fixtures import checkpoint_manager, metrics_wide_df, narrow_splits
 
 REF_YAML = """
 team_number: 1
@@ -269,6 +269,41 @@ def test_layout_role_reports_store_health(spark, capsys, tmp_path):
 
     with _pytest.raises(SystemExit, match="--path"):
         m.main(["layout"])
+
+
+def test_stream_role_runs_on_filesystem_checkpoint_manager(spark, tmp_path):
+    """The in-process stream role fetches the running session through
+    get_spark, which (re)applies the local checkpoint manager: with the
+    conf cleared beforehand, the role leaves the session writing its
+    checkpoint through FileSystemBasedCheckpointFileManager. Without the
+    Kafka connector the role stops right after that, at its connector
+    check."""
+    import pytest
+
+    import main as cli
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.sources.kafka import (
+        require_kafka_connector,
+    )
+
+    try:
+        require_kafka_connector(spark)
+        pytest.skip("kafka connector present: the role would run until stopped")
+    except RuntimeError:
+        pass
+    config_path = _write_config(tmp_path, str(tmp_path / "unused_csv"))
+    checkpoint = tmp_path / "output" / "_checkpoint_stream-job1"
+    prev = spark.conf.get(CHECKPOINT_FILE_MANAGER)
+    spark.conf.unset(CHECKPOINT_FILE_MANAGER)
+    try:
+        assert checkpoint_manager(spark, checkpoint) == "FileContextBasedCheckpointFileManager"
+        with pytest.raises(RuntimeError, match="spark-sql-kafka"):
+            cli.main(["stream-job1", "--config", config_path])
+        assert checkpoint_manager(spark, checkpoint) == "FileSystemBasedCheckpointFileManager"
+    finally:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER, prev)
 
 
 def test_wire_path_equals_direct_path_end_to_end(spark, tmp_path):
