@@ -8,39 +8,11 @@ Runs the engine's headline queries at $SPARK_GRAFT_SF_DIR (default
 
 Each query is timed end-to-end (plan + execute) with a `noop` sink write so
 the full plan materializes on executors without a driver-side collect —
-the honest analogue of a cluster job writing output. One warmup query runs
-first so JVM/codegen startup is not attributed to the first headline query.
-
-Weather normalization (VERDICT r10 #3, the protocol the round memos use):
-this sandbox's VM throughput drifts 2x+ between runs with zero plan
-changes (measured r07, re-confirmed r10 via the frozen legacy9 control),
-so RAW seconds are not comparable across rounds. The emitted line carries
-a ``normalized_vs_prev`` block computed against the newest committed
-BENCH_r*.json: weather = this_legacy9_total / prev_legacy9_total (nine
-unchanged plain-scan plans — pure machine), and each query's normalized
-ratio = (t_now / t_prev) / weather. Ratios ~1.0 = flat, < 1 = faster.
-The line keeps the compact summary (median + worst/best movers inside
-the driver's 1900-char budget); full per-query ratios live in the
-committed BENCH_SAMPLES.json sidecar.
-
-Within-session contention recheck (VERDICT r11 #3): BENCH_r11 recorded
-three 2-4x per-query spikes that a same-day fresh-JVM A/B refuted —
-the bench session itself hit contention mid-run. The bench now defends
-itself: any query whose median lands > 1.5x its COMMITTED
-BENCH_SAMPLES.json median (read before this run overwrites the file)
-is re-timed with one extra median-of-3 pass at the END of the run, and
-both numbers land in a ``recheck`` block (line + sidecar; empty dict =
-clean run). A spike that melts on the end-of-run retime was session
-contention; one that persists is real and worth a fresh-JVM A/B. A
-melted spike's sidecar median is min(median, retime), not the contended
-number (ADVICE r12 #2) — committing a phantom would inflate next
-round's baseline so a real regression could pass unflagged.
-
-Sidecar hygiene (VERDICT r12 #5): the recheck protocol reads the
-COMMITTED BENCH_SAMPLES.json medians, so every bench run that
-overwrites the sidecar must be followed by a commit (or a checkout
-restore) before the next in-session run — a dirty working-tree sidecar
-silently weakens the contention defense.
+the honest analogue of a cluster job writing output. Two untimed warm-up
+passes run first (see ``main``); each query's figure is the median of three
+timed runs, and the total is the sum of the medians. The script writes no
+file and compares with no earlier run: paired A/B comparisons across
+commits belong to ``perfbench``.
 """
 
 from __future__ import annotations
@@ -56,37 +28,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark import (  # noqa: E402
     session,
 )
-from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.sketches import (  # noqa: E402
-    release_kmv_caches,
-)
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries import (  # noqa: E402
     all_queries,
 )
 
 # Headline set: the reference-parity flagships plus one representative per
-# engine area (relational joins/aggs, window fns, dedup, similarity, text).
-# LEGACY9 is the set every round since r01 has timed; HEADLINE17 is the
-# set r05 settled on. Each frozen set gets its own subtotal so any later
-# round compares to any earlier one on a stable basis — new queries may
-# append to HEADLINE but never join a frozen subtotal.
-#
-# Noise floor for cross-round subtotal comparisons (measured r07, VERDICT
-# r06 #3): three back-to-back FRESH-JVM legacy9-only runs on an otherwise
-# idle box recorded subtotals of 8.60 / 10.81 / 9.13 s — a 26% spread on
-# byte-identical plans (pinned unchanged by tests/test_plans.py since
-# r04). The recorded r04->r06 legacy9 history (8.00 -> 7.55 -> 8.16 s)
-# sits entirely inside that spread, so subtotal deltas under ~25% are
-# sandbox weather, not regressions; only per-query deltas that replicate
-# across fresh JVMs AND show a plan change warrant chasing.
-#
-# Confirmed again late r07 with an INTERLEAVED A/B (fresh JVM per run,
-# alternating HEAD vs the round-6-end commit in a worktree): r6-end code
-# measured SLOWER (13.0 s) than HEAD (11.2 s) in the same minutes, and a
-# repeat HEAD run hit 18.6 s — the VM's own throughput drifts by 2x+
-# within an hour, swamping any code delta. Cross-round comparisons are
-# only meaningful between runs the driver takes at the same point of its
-# cycle; uniform inflation across ALL queries (scans included) is the
-# machine, not the engine.
+# engine area and plan shape (relational joins/aggs, window fns, dedup,
+# similarity, text, multimodal). LEGACY9 is the original nine and stays the
+# head of HEADLINE; perfbench's traced batch workload times the same nine.
 LEGACY9 = [
     "monitor_cpu_mem_alerts",     # spark_job1 shape: join + sliding window + CASE
     "monitor_net_disk_alerts",    # spark_job2 shape
@@ -98,133 +47,100 @@ LEGACY9 = [
     "sim_ann_bruteforce",         # cosine top-k over embeddings
     "text_token_stats",           # text analysis over documents
 ]
-HEADLINE17 = LEGACY9 + [
-    # added r05: plan shapes the legacy set doesn't exercise
+HEADLINE = LEGACY9 + [
     "dedup_clusters",             # iterative label-propagation joins
     "text_unigram_logprob",       # explode + term join + per-doc agg
-    # added r06
     "rel_fuzzy_join",             # deletion-variant explode + self equi-join
     "rel_scd2_intervals",         # key-clustered window stack (lag/sum/lead)
-    # added with the audit pack
     "rel_profile_columns",        # split wide aggregates + multi-distinct
     "monitor_error_after_click",  # bucketed event-interval join
     "sim_knn_join",               # LSH bucket join + per-query ranking window
     "pipeline_training_prep",     # six-stage curation composite
-]
-HEADLINE24 = HEADLINE17 + [
-    # added r06: cheap representatives of the round's new plan shapes
-    # (the heavy graph/composite queries stay out of the bench budget;
-    # their scale notes live in their docstrings)
     "sim_kmeans_iter",            # zero-join centroid-literal codegen scan
     "rel_merge_intervals",        # gaps-and-islands single-exchange windows
     "monitor_top_movers",         # daily agg + lag + TakeOrderedAndProject
     "text_zipf_slope",            # explode + rank-limit + decimal-lattice fit
-    # added r06 second wave: new plan shapes from the ten-query pack
     "text_pmi_bigrams",           # scan-local bigram explode + broadcast vocab joins
     "rel_decile_lift",            # two-pass histogram deciles (no global NTILE)
     "mm_audio_silence_trim",      # Arrow mapInPandas 1:N explode + conditional re-agg
-]
-HEADLINE = HEADLINE24 + [
-    # added r07: the three heaviest previously-unbenched queries, so
-    # regressions there surface in BENCH rather than only in pytest
     "pipeline_embedding_prep",    # dedup + near-dup + cluster-rep composite
     "dedup_containment",          # asymmetric prefix-filter containment join
     "text_dup_spans",             # shingle-level duplicate span detection
-    # added r07 second wave: new plan shapes from the wave's query pack
     "text_bpe_train",             # unrolled argmax-broadcast merge loop
     "rel_merge_into",             # full-outer MERGE with CASE branches
     "sim_source_centroid_outliers",  # 64-dim lattice agg + rank window
-    # added r07 third wave
     "dedup_semdedup",             # k-means partition + cluster-scoped block matmul
     "rel_snapshot_diff",          # full-outer key diff + 4-class agg
     "text_gopher_rules",          # stateless array-fold gates, zero-exchange scan
     "monitor_mttr",               # run-length incidents over one user partitioning
     "text_ngram_novelty",         # min-per-shingle agg + shingle equi-join back
-    # (text_token_fertility and rel_variant_extract were trimmed r15
-    # when the 64-entry line outgrew the driver's 1900-char budget;
-    # RESTORED r16 (VERDICT r15 #2) — compact JSON separators bought the
-    # line back under budget, so the coverage loss was unnecessary.
-    # Their chronic sub-second phantom-drift history stands: treat their
-    # recheck flags with the r13/r14 adjudications in mind.)
     "text_token_fertility",       # narrow scan + per-lang hash agg
     "rel_variant_extract",        # parse_json once + typed variant_get paths
-    # added r08: the round's new operator classes
     "rel_recursive_cte",          # WITH RECURSIVE -> UnionLoop frontier joins
     "rel_lateral_topk",           # correlated LATERAL -> WindowGroupLimit
     "text_bpe_encode",            # vocab-side merges + corpus equi-join encode
-    "monitor_synthetic_source",   # Python data source scan + partial agg (restored r16)
+    "monitor_synthetic_source",   # Python data source scan + partial agg
     "rel_order_count_histogram",  # Q13: pre-agg rewrite of outer-join histogram
-    # added r08: the engine's former largest fixed cost, benched so the
-    # SQL-parse construction path (~18s -> ~7s/run) is tracked per round
     "sim_ann_ivfpq",              # IVF cells + PQ ADC + exact refine
-    # added r09: the round's new operator classes
     "rel_bloom_semi_join",        # hand-built runtime bloom filter + semi join
-    "text_dsir_sample",           # DSIR importance-ranked selection (restored r16)
+    "text_dsir_sample",           # DSIR importance-ranked selection
     "sim_ann_ivfpq_recall",       # compressed-tier quality report
     "monitor_trace_knn",          # hourly-profile z-norm similarity search
-    # added r10 (VERDICT r09 #8): the two remaining never-benched heavy
-    # constructors, so regressions there are visible round-over-round
     "dedup_simhash",              # one-parse bit-sum sigs + pigeonhole join
     "rel_salted_join",            # skew-salted replicate-build equi-join
-    # added r11: the round's new operator classes
     "text_chunk_udtf",            # Spark 4 arrow Python UDTF via LATERAL
     "text_weighted_reservoir",    # A-ES exponential-sort weighted sample
     "sim_coreset_kcenter",        # greedy k-center coreset + assignment
     "sim_mmr_rerank",             # MMR diversified top-k rerank
-    # added r12: the round's new operator classes
     "sim_mmr_ann",                # MMR rerank on the LSH candidate tier
     "mm_ahash_arrow",             # raw-Arrow mapInArrow signature stage
     "rel_theta_sketch_setops",    # KMV distinct-count set algebra
-    # added r13
     "sim_mmr_arrow",              # applyInArrow (FlatMapGroupsInArrow) MMR twin
     "rel_sketch_rollup",          # mergeable KMV sketch rollup per segment
     "text_url_dedup",             # URL canonicalization + exact dedup
-    # added r14
     "text_langid_gate",           # hashed language gate -> gopher battery
     "rel_observe_metrics",        # Dataset.observe quality counters
     "rel_profile_drift",          # two-snapshot per-column drift audit
-    # added r15
     "dedup_stream_store_recheck",  # streaming MinHash store == batch dedup
     "rel_entity_resolution",      # blocked fuzzy ER + survivorship merge
 ]
 
 
-def apply_recheck_melts(timings: dict, recheck: dict) -> None:
-    """A spike that MELTS on the end-of-run retime was session contention
-    (ADVICE r12 #2): committing the contended median would inflate the
-    baseline the NEXT round's recheck and normalized ratios key off,
-    letting a real regression up to the phantom's size pass unflagged.
-    Record min(median, retime) as the going-forward number, in place —
-    both raw values stay in the recheck block for adjudication."""
-    for n, row in recheck.items():
-        timings[n] = min(row["median"], row["retime"])
+# The external driver records only the last 2000 chars of stdout and parses
+# the final line as the bench result, so the line must stay under this.
+LINE_BUDGET = 1900
+
+
+def bench_line(timings: dict[str, float], sf: float) -> str:
+    """The driver's one JSON line: total, unit, per-query seconds and SF.
+
+    Compact separators: json.dumps's default ", "/": " padding costs ~140
+    chars at 64 queries, the difference between fitting the whole headline
+    set in the budget and not."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total_runtime",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": {name: round(t, 2) for name, t in timings.items()},
+            "sf": sf,
+        },
+        separators=(",", ":"),
+    )
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    # SPARK_GRAFT_BENCH_SET=legacy9|headline17|headline24|all (default all):
-    # time a frozen subset in a FRESH JVM — used to separate per-query
-    # regressions from whole-session effects (heap/code-cache growth as the
-    # set grows) when a frozen subtotal drifts between rounds.
-    bench_set = {
-        "legacy9": LEGACY9,
-        "headline17": HEADLINE17,
-        "headline24": HEADLINE24,
-        "all": HEADLINE,
-    }[os.environ.get("SPARK_GRAFT_BENCH_SET", "all")]
     spark = session.get_spark(app_name="rtsm-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
     def run(name: str, at: str = sf_dir) -> float:
-        # Operators that persist() internally (dedup/similarity pair joins)
-        # would otherwise leak cache across queries, charging later queries
-        # for earlier ones' memory and muddying per-query attribution.
-        # release_kmv_caches() additionally drops kmv_rollup's module-side
-        # Dataset handles (clearCache unpersists the data but cannot free
-        # the py4j references; r15 review).
-        release_kmv_caches()
+        # Operators that persist() internally (dedup/similarity pair joins,
+        # kmv_rollup) would otherwise leak cache across queries, charging
+        # later queries for earlier ones' memory and muddying per-query
+        # attribution.
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         queries[name](spark, at).write.format("noop").mode("overwrite").save()
@@ -242,194 +158,17 @@ def main() -> None:
     warmup_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if not os.path.isdir(warmup_dir):
         warmup_dir = sf_dir
-    for name in bench_set:
+    for name in HEADLINE:
         run(name, at=warmup_dir)
-    for name in bench_set:
+    for name in HEADLINE:
         run(name)
 
-    # Committed medians from the PREVIOUS round's sidecar, read before
-    # this run overwrites the file — the recheck baseline (module
-    # docstring, VERDICT r11 #3).
-    sidecar_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SAMPLES.json"
-    )
-    try:
-        with open(sidecar_path) as f:
-            prev_medians = json.load(f).get("medians") or {}
-    except (OSError, ValueError):
-        prev_medians = {}
-
-    # Median of 3 timed runs per query: a single timed run is hostage to
-    # sandbox weather (one loaded-machine run recorded a 1.35x phantom
-    # regression in round 3); the median discards one arbitrarily bad
-    # sample per query while staying cheap. Total = sum of medians.
-    samples = {name: [round(run(name), 3) for _ in range(3)] for name in bench_set}
-    timings = {name: round(statistics.median(s), 3) for name, s in samples.items()}
-
-    # Contention recheck: re-time >1.5x-vs-committed movers once more at
-    # the end of the run, when whatever contended mid-run has (usually)
-    # passed. Worst 5 by ratio only — the block must fit the line budget,
-    # and more than 5 simultaneous "spikes" IS the machine, not the code.
-    flagged = sorted(
-        (
-            (timings[n] / prev_medians[n], n)
-            for n in timings
-            if prev_medians.get(n) and timings[n] > 1.5 * prev_medians[n]
-        ),
-        reverse=True,
-    )[:5]
-    recheck = {
-        n: {
-            "median": timings[n],
-            "retime": round(statistics.median([run(n) for _ in range(3)]), 3),
-            "prev": prev_medians[n],
-        }
-        for _, n in flagged
-    }
-    apply_recheck_melts(timings, recheck)
-    # The external driver records only the LAST 2000 chars of stdout and
-    # parses the final line as the bench result (BENCH_r07 recorded
-    # ``parsed: null`` because the line — then carrying per-query raw
-    # samples — outgrew that buffer). Keep stdout to the slim contract
-    # shape; the full evidence (raw samples, frozen subtotals) goes to a
-    # committed sidecar instead.
-    def frozen_subtotal(subset: list[str]) -> float | None:
-        # A frozen subtotal is only meaningful when EVERY member was
-        # timed — a subset run (SPARK_GRAFT_BENCH_SET=legacy9) must not
-        # emit a partial sum labeled as the full headline24_total (a
-        # round-over-round comparison would read it as a 6x phantom
-        # speedup). None -> key omitted from the parsed line.
-        if all(n in timings for n in subset):
-            return round(sum(timings[n] for n in subset), 3)
-        return None
-
-    def normalized_vs_prev() -> tuple[dict | None, dict | None]:
-        """(compact line block, full sidecar block) of weather-normalized
-        per-query ratios vs the newest committed BENCH_r*.json — see the
-        module docstring for the protocol. None when no comparable prior
-        record exists (fresh checkout, subset run, prior parse failure)."""
-        import glob
-        import re
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        my_legacy9 = frozen_subtotal(LEGACY9)
-        if my_legacy9 is None:
-            return None, None
-        rounds = []
-        for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-            m = re.search(r"BENCH_r(\d+)\.json$", path)
-            if m:
-                rounds.append((int(m.group(1)), path))
-        for rnd, path in sorted(rounds, reverse=True):
-            try:
-                with open(path) as f:
-                    prev = json.load(f).get("parsed") or {}
-            except (OSError, ValueError):
-                continue
-            prev_q = prev.get("queries") or {}
-            prev_legacy9 = prev.get("legacy9_total")
-            if not prev_q or not prev_legacy9:
-                continue
-            weather = my_legacy9 / prev_legacy9
-            ratios = {
-                n: round((timings[n] / prev_q[n]) / weather, 2)
-                for n in timings
-                if prev_q.get(n)
-            }
-            if not ratios:
-                continue
-            ordered = sorted(ratios.items(), key=lambda kv: kv[1])
-            raw = [timings[n] / prev_q[n] for n in ratios]
-            compact = {
-                "prev_round": rnd,
-                "weather": round(weather, 2),
-                "median": round(statistics.median(ratios.values()), 2),
-                # raw_median alongside: when the weather window flips
-                # (r10 slow -> r11 fast), scan-bound legacy9 members
-                # recover MORE than constructor-bound queries, biasing
-                # normalized ratios up — the raw median disambiguates
-                # "everything actually got faster" from a regression.
-                "raw_median": round(statistics.median(raw), 2),
-                "worst": dict(ordered[-3:]),
-                "best": dict(ordered[:2]),
-            }
-            full = {"prev_round": rnd, "weather": round(weather, 3), "ratios": ratios}
-            return compact, full
-        return None, None
-
-    norm_compact, norm_full = normalized_vs_prev()
-
-    sidecar = {
-        "samples": samples,
-        "medians": timings,
-        "legacy9_total": frozen_subtotal(LEGACY9),
-        "headline17_total": frozen_subtotal(HEADLINE17),
-        "headline24_total": frozen_subtotal(HEADLINE24),
-        "bench_set": list(bench_set),
-        "sf": sf,
-        "normalized_vs_prev": norm_full,
-        "recheck": recheck,
-    }
-    with open(sidecar_path, "w") as f:
-        json.dump(sidecar, f, indent=1)
-    def emit(norm_detail: str) -> str:
-        # norm_detail: "full" | "slim" (summary ratios only, no
-        # worst/best mover names) | "none". Graduated shedding keeps the
-        # most diagnostic signal that fits the budget.
-        norm_block = None
-        if norm_compact and norm_detail == "full":
-            norm_block = norm_compact
-        elif norm_compact and norm_detail == "slim":
-            norm_block = {
-                k: norm_compact[k]
-                for k in ("prev_round", "weather", "median", "raw_median")
-            }
-        return json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": {name: round(t, 2) for name, t in timings.items()},
-                "sf": sf,
-                # Frozen-subset subtotals IN the parsed line (VERDICT r08
-                # #4: r08 carried them only in the sidecar and round-over-
-                # round comparability had to be recomputed by hand):
-                # ~95 chars, inside the 1900-char driver buffer budget
-                # checked below. Incomplete subtotals (subset runs) are
-                # omitted, not lied.
-                **{
-                    k: sidecar[k]
-                    for k in ("legacy9_total", "headline17_total", "headline24_total")
-                    if sidecar[k] is not None
-                },
-                # Weather-normalized round-over-round summary (VERDICT r10
-                # #3) — full per-query ratios in the BENCH_SAMPLES.json
-                # sidecar.
-                **({"normalized_vs_prev": norm_block} if norm_block else {}),
-                # Contention recheck (VERDICT r11 #3): end-of-run retimes
-                # of >1.5x-vs-committed movers; {} = clean run.
-                "recheck": recheck,
-            },
-            # Compact separators (r16, VERDICT r15 #2): json.dumps's
-            # default ", "/": " padding cost ~140 chars at 64 queries —
-            # the difference between carrying the full headline set and
-            # the r15 coverage trim. Same JSON, every parser reads it.
-            separators=(",", ":"),
-        )
-
-    line = emit("full")
-    for detail in ("slim", "none"):
-        # The normalized block is derivable from the committed sidecar;
-        # shedding it beats breaking the driver's 2000-char tail parse.
-        if len(line) > 1900 and norm_compact:
-            line = emit(detail)
-    while len(line) > 1900 and recheck:
-        # Same for recheck overflow (full block stays in the sidecar):
-        # shed the SMALLEST-ratio entry first, keep the worst movers.
-        recheck.pop(min(recheck, key=lambda n: recheck[n]["median"] / recheck[n]["prev"]))
-        line = emit("none")
-    if len(line) > 1900:  # loud, not silent: growth past the buffer breaks the driver parse
-        raise SystemExit(f"bench stdout line {len(line)} chars > 1900: trim the bench set")
+    # Median of 3 timed runs per query: the median discards one
+    # arbitrarily bad sample per query while staying cheap.
+    timings = {name: statistics.median(run(name) for _ in range(3)) for name in HEADLINE}
+    line = bench_line(timings, sf)
+    if len(line) > LINE_BUDGET:  # loud, not silent: growth past the buffer breaks the driver parse
+        raise SystemExit(f"bench stdout line {len(line)} chars > {LINE_BUDGET}: trim the bench set")
     print(line)
     spark.stop()
 

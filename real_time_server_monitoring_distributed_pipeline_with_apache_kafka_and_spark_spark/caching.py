@@ -1,12 +1,13 @@
 """Cache lifecycle helpers.
 
-Several dedup operators ``persist()`` an intermediate (the shingle table
-feeds ~8 plan branches — see ``operators.dedup.jaccard_pairs``) and leave
-it cached after the returned plan materializes, because the operator
-cannot know when the caller is done consuming the result. bench.py calls
-``spark.catalog.clearCache()`` between queries; library users in
-long-lived sessions get these scoped helpers instead, so operator-internal
-caches never outlive the computation that needed them.
+Several operators ``persist()`` an intermediate and leave it cached after
+the returned plan materializes, because the operator cannot know when the
+caller is done consuming the result: the dedup shingle table feeds ~8 plan
+branches (``operators.dedup.jaccard_pairs``), and
+``operators.sketches.kmv_rollup`` keeps its distinct-key table and leaf
+sketch. bench.py calls ``spark.catalog.clearCache()`` between queries;
+library users in long-lived sessions get these scoped helpers instead, so
+operator-internal caches never outlive the computation that needed them.
 """
 
 from __future__ import annotations

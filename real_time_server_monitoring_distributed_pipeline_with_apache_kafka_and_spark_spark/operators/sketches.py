@@ -196,11 +196,10 @@ def kmv_rollup(
     branch recomputing one costs bounded arithmetic while every
     persist() added a separate cache-materialization job (measured r15:
     the two merge-level persists cost more wall time than they saved).
-    The cached frames stay until the session ends or the caller
-    releases them — a long-lived session invoking this repeatedly
-    (property tests, notebooks) should call
-    :func:`release_kmv_caches` on the RETURNED frame after its last
-    action, which unpersists every frame this invocation cached.
+    The cached frames stay until the caller releases them, as for every
+    persisting operator: in a long-lived session run the query inside
+    ``caching.cache_scope`` (or call ``spark.catalog.clearCache()`` after
+    its last action).
 
     EXACT LEGS IN ONE PASS (r15 optimization, guide §2.3/§2.4): the
     per-level exact companions used to be three separate pipelines —
@@ -225,7 +224,6 @@ def kmv_rollup(
         .select(*segs, "_key", kmv_hash(F.col("_key")).alias("_h"))
         .persist()
     )
-    caches: list[DataFrame] = [hashed]
 
     scale = F.lit(float((k - 1) * (1 << 60)))
 
@@ -287,7 +285,6 @@ def kmv_rollup(
             # merge). Merge-level sketches recompute from this cache in
             # bounded arithmetic — see the caching-contract docstring.
             sketch = sketch.persist()
-            caches.append(sketch)
         est_legs.append(
             sketch.groupBy(*gcols)
             .agg(F.count(F.lit(1)).alias("_cnt"), F.max("_h").alias("_hk"))
@@ -352,53 +349,4 @@ def kmv_rollup(
             out = out.unionByName(leg)
         return out
 
-    out = stack(est_legs).join(F.broadcast(exact), ["level", "_grp"]).drop("_grp")
-    # The caching-contract handle (see docstring): release_kmv_caches
-    # walks this to unpersist exactly the frames THIS invocation cached.
-    # NOTE the handle is an ad-hoc attribute on THIS object only — any
-    # further transformation (.select/.filter) returns a new DataFrame
-    # without it (ADVICE r14 #2). Every invocation therefore ALSO
-    # registers its caches module-side, so release_kmv_caches() with no
-    # argument can drain everything kmv_rollup ever persisted — the
-    # valve for registry/driver/sweep paths that never see the exact
-    # returned object.
-    out._kmv_caches = caches
-    # Self-pruning (r15 review): drop registry entries whose frames were
-    # already unpersisted externally (spark.catalog.clearCache() between
-    # bench/sweep queries) so a long session never accumulates dead
-    # Dataset handles — the registry holds only live-cache invocations.
-    _LIVE_KMV_CACHES[:] = [
-        b for b in _LIVE_KMV_CACHES if any(f.is_cached for f in b)
-    ]
-    _LIVE_KMV_CACHES.append(caches)
-    return out
-
-
-# Every kmv_rollup invocation's persisted frames, in invocation order.
-# Drained by release_kmv_caches(); self-pruned on each invocation, so
-# its size is bounded by live (still-cached) invocations, not session
-# lifetime (each entry is level_count+1 small sketch frames).
-_LIVE_KMV_CACHES: list[list[DataFrame]] = []
-
-
-def release_kmv_caches(result: DataFrame | None = None) -> None:
-    """Unpersist frames cached by :func:`kmv_rollup` invocations.
-
-    With ``result`` (the EXACT frame kmv_rollup returned — the handle
-    does not survive further transformations), releases just that
-    invocation's caches. With no argument, drains every invocation this
-    session registered — the long-lived-session valve when the returned
-    object is out of reach (registry sweeps, the correctness driver).
-    Safe to call unconditionally and repeatedly (unpersist is
-    idempotent; frames without a handle are a no-op).
-    """
-    if result is not None:
-        batch = getattr(result, "_kmv_caches", None)
-        if batch is not None:
-            for f in batch:
-                f.unpersist()
-            _LIVE_KMV_CACHES[:] = [b for b in _LIVE_KMV_CACHES if b is not batch]
-        return
-    while _LIVE_KMV_CACHES:
-        for f in _LIVE_KMV_CACHES.pop():
-            f.unpersist()
+    return stack(est_legs).join(F.broadcast(exact), ["level", "_grp"]).drop("_grp")

@@ -3,413 +3,22 @@
 Each domain module exports ``QUERIES: dict[name, (spark, sf_dir) -> DataFrame]``
 and ``ORACLES: dict[name, str]`` (DuckDB ANSI SQL over the pre-registered
 testdata views). Queries without an oracle entry are non-SQL-expressible and
-get the driver's weaker rows-only check.
+get the driver's weaker rows-only check. The registry is the plain merge of
+the modules' tables in ``_MODULES`` order; a name may be registered once.
 """
 
 from __future__ import annotations
 
-import glob as _glob
-import json as _json
-import os as _os
-import re as _re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import dedup, extras, monitoring, multimodal, profiling, relational, similarity, text
 
-# Order is load-bearing: the correctness driver verifies the first ~50
-# registry entries in iteration order (observed: each round records exactly
-# 50 rows). _PRIORITY makes the window explicit.
-#
-# Standing window policy (enforced by tests/test_freshness.py): lead with
-# _FORCE_HEAD (queries whose code changed this round and must re-prove,
-# plus brand-new queries), then every remaining row ordered by its newest
-# driver green, OLDEST FIRST (never-proven rows sort before everything).
-#
-# Since r09 that ordering is COMPUTED at import time from the recorded
-# CORRECTNESS_r*.json driver artifacts instead of hand-edited each round
-# (VERDICT r08 #1: rotation was hand-maintained three rounds running and
-# went red each time the round rolled over). The computation is
-# deterministic: the history files are committed artifacts, ties keep
-# registration order (stable sort). If no artifacts are present (fresh
-# checkout), the window is simply registration order — every query is
-# then "never proven" and equally urgent.
-_REGISTERED: tuple[str, ...] = (
-    "rel_distinct",
-    "rel_orderby_limit",
-    "rel_having",
-    "rel_string_funcs",
-    "rel_date_funcs",
-    "rel_math_funcs",
-    "rel_conditional_funcs",
-    "rel_json_funcs",
-    "rel_array_funcs",
-    "rel_join_customer_orders",
-    "rel_topk_per_group",
-    "rel_asof_join",
-    "monitor_rollup_cascade",
-    "monitor_case_classify",
-    "monitor_session_window",
-    "monitor_funnel",
-    "dedup_clusters",
-    "dedup_embedding_clusters",
-    "mm_image_dedup_clusters",
-    "pipeline_embedding_prep",
-    "pipeline_multimodal_prep",
-    "sim_embedding_drift",
-    "rel_snapshot_diff",
-    "rel_recursive_cte",
-    "rel_lateral_topk",
-    "text_bpe_encode",
-    "monitor_synthetic_source",
-    "rel_order_count_histogram",
-    "sim_cosine_noise_floor",
-    "text_bpe_train",
-    "sim_ann_ivfpq",
-    "dedup_embedding_lsh",
-    "sim_knn_join",
-    "dedup_semdedup",
-    "rel_profile_columns",
-    "rel_key_skew_stats",
-    "monitor_error_after_click",
-    "text_char_entropy",
-    "text_source_quality_filter",
-    "mm_image_ahash",
-    "rel_validate_constraints",
-    "monitor_sessionize",
-    "text_bigram_logprob",
-    "dedup_containment",
-    "rel_cascade_delete",
-    "monitor_resample_locf",
-    "rel_cohort_retention",
-    "dedup_cross_corpus",
-    "rel_pit_features",
-    "rel_scd2_asof_lookup",
-    "rel_hll_daily_users",
-    "mm_scene_segments",
-    "text_langid_confusion",
-    "text_fixed_n_per_lang",
-    "text_length_percentiles",
-    "rel_pagerank_coparts",
-    "pipeline_training_prep",
-    "rel_benford_check",
-    "rel_time_range_frame",
-    "rel_disjunctive_filter",
-    "rel_map_funcs",
-    "monitor_ewma_level",
-    "rel_cdc_merge",
-    "rel_scd2_intervals",
-    "rel_fuzzy_join",
-    "rel_winsorize",
-    "monitor_drift_psi",
-    "text_weighted_sample",
-    "mm_audio_rms",
-    "text_stratified_sample_salted",
-    "text_dup_spans",
-    "text_shuffle_order",
-    "dedup_simhash",
-    "dedup_minhash_lsh",
-    "monitor_cpu_mem_alerts_bucketed",
-    "monitor_net_disk_alerts_bucketed",
-    "text_stratified_sample",
-    "rel_salted_join",
-    "rel_range_join",
-    "rel_join_full_outer",
-    "rel_approx_percentile",
-    "rel_approx_distinct",
-    "rel_window_running",
-    "rel_window_frames",
-    "rel_rollup",
-    "rel_grouping_sets",
-    "rel_sql_subqueries",
-    "rel_percentile",
-    "rel_join_left_outer",
-    "rel_join_semi",
-    "rel_join_anti",
-    "text_token_stats",
-    "text_langid",
-    "text_fingerprint",
-    "text_tfidf",
-    "text_hash_split",
-    "text_pii_redact",
-    "text_chunking",
-    "text_decontaminate",
-    "text_vocab_topk",
-    "rel_salted_count_distinct",
-    "mm_binary_meta",
-    "mm_decode_features",
-    "mm_resize",
-    "mm_frame_sample",
-    "monitor_anomaly_zscore",
-    "monitor_gap_report",
-    "monitor_top_movers",
-    "text_prefix_dup",
-    "text_zipf_slope",
-    "sim_kmeans_iter",
-    "rel_triangle_count",
-    "rel_merge_intervals",
-    "rel_unpivot",
-    "monitor_rate_spike",
-    "monitor_sla_burn",
-    "rel_skyline",
-    "rel_mode_per_group",
-    "rel_corr_matrix",
-    "rel_decile_lift",
-    "rel_mom_growth",
-    "text_bpe_pair_counts",
-    "text_quality_classifier",
-    "text_bootstrap_stats",
-    "text_pmi_bigrams",
-    "mm_audio_silence_trim",
-    "monitor_heavy_hitters",
-    "monitor_cpu_mem_alerts",
-    "monitor_net_disk_alerts",
-    "monitor_window_sliding_avg",
-    "pipeline_corpus_curation",
-    "text_quality_score",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "sim_ann_bruteforce",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "sim_ann_quantized",
-    "rel_pricing_summary",
-    "rel_multiway_revenue",
-    "text_sequence_packing",
-    "text_repetition",
-    "text_unigram_logprob",
-    "monitor_alert_transitions",
-    "monitor_window_tumbling",
-    "monitor_project_cast",
-    "monitor_filter_range",
-    "rel_pivot",
-    "rel_cube",
-    "rel_agg_stats",
-    "rel_count_distinct",
-    "rel_cross_join",
-    "rel_set_ops",
-    "rel_mad_outliers",
-    "text_hapax_ratio",
-    "sim_ann_recall",
-    "monitor_cusum_shift",
-    "sim_ann_filtered",
-    "monitor_seasonal_baseline",
-    "monitor_window_distinct_users",
-    "rel_merge_into",
-    "sim_source_centroid_outliers",
-    "text_mixture_sample",
-    "text_gopher_rules",
-    "sim_top_pc",
-    "monitor_mttr",
-    "text_ngram_novelty",
-    "text_token_fertility",
-    "rel_variant_extract",
-    "sim_matryoshka_recall",
-    # -- r09 additions --
-    "sim_ann_ivfpq_recall",
-    "text_dsir_sample",
-    "rel_bloom_semi_join",
-    "dedup_minhash_recall",
-    "rel_join_size_estimate",
-    "monitor_trace_knn",
-    # -- r11 additions --
-    "text_chunk_udtf",
-    "text_weighted_reservoir",
-    "sim_coreset_kcenter",
-    "sim_mmr_rerank",
-    # -- r12 additions --
-    "sim_mmr_ann",
-    "mm_ahash_arrow",
-    "rel_theta_sketch_setops",
-    # -- r13 additions (kept to 3: the 42-query freshness cohort fits
-    # the 50-slot window alongside 2 pins + 3 new = 47, VERDICT r12 #1) --
-    "sim_mmr_arrow",
-    "rel_sketch_rollup",
-    "text_url_dedup",
-    # -- r14 additions (kept to 3: the 43-query r10-proof freshness
-    # cohort fits the 50-slot window alongside 2 pins + 3 new = 48,
-    # VERDICT r13 #1; the first two are the named absent classes from
-    # VERDICT r13 #2, the third is §5.10.11d's profile-drift class) --
-    "text_langid_gate",
-    "rel_observe_metrics",
-    "rel_profile_drift",
-    # -- r15 additions (kept to 2: the 44-query r11-proof freshness
-    # cohort hits the MAX_AGE=4 boundary this round, VERDICT r14 #1 —
-    # 3 pins + 2 new + 44 = 49 of the 50-slot window; both are the
-    # named absent classes from VERDICT r14 #2) --
-    "dedup_stream_store_recheck",
-    "rel_entity_resolution",
-)
-
-# Hand-pinned window head: queries whose IMPLEMENTATION changed since
-# their last driver green (must re-prove regardless of age), mapped to
-# the round the change ships in. A pin SELF-EXPIRES once the history
-# records a green from that round or later — no end-of-round cleanup
-# edit to forget. Brand-new queries need no pin (never-proven rows sort
-# to the head automatically).
-#
-# (The r10 pins — DSIR lattice, saturation guardrails, IVF memo, the
-# three sketch-report conversions — all re-proved green in
-# CORRECTNESS_r10 and therefore self-expired; removed.)
-#
-# r11 entries — code touched this round (matching the dict):
-#   text_quality_classifier   zero-token (NULL-text) docs now come back
-#                              via a left join with n_tokens=0, keep=false
-#                              (ADVICE r10 #3); oracle mirrors the join.
-#                              No testdata SF contains such docs, so the
-#                              recorded hashes are unchanged — the pin
-#                              re-proves that with the driver.
-#   pipeline_embedding_prep    bounded-output mode for the noise-floor
-#                              regime (VERDICT r10 #1): threshold
-#                              auto-raises past the chance-pair budget;
-#                              INERT at oracle SFs (re-verified MATCH at
-#                              sf0.01 AND sf0.1), K=25 slope 1.24->0.39.
-#   dedup_clusters / dedup_embedding_clusters / mm_image_dedup_clusters /
-#   pipeline_multimodal_prep   connected_components now checkpoints the
-#                              edge list BEFORE symmetrizing (the union
-#                              of two live-plan branches executed the
-#                              pair pipeline per branch); output
-#                              identical, all four re-verified MATCH at
-#                              sf0.01 AND sf0.1 locally.
-_FORCE_HEAD: dict[str, int] = {
-    # r11 pins (self-expire on the CORRECTNESS_r11 greens): all six
-    # re-proved in r11 — kept for history until the artifacts land in a
-    # fresh checkout; harmless because the predicate already expires them.
-    "text_quality_classifier": 11,
-    "pipeline_embedding_prep": 11,
-    "dedup_clusters": 11,
-    "dedup_embedding_clusters": 11,
-    # (mm_image_dedup_clusters / pipeline_multimodal_prep moved to the
-    # r12 block below — their operator changed again this round.)
-    # r12 entries — code touched this round:
-    #   sim_mmr_rerank   candidate stage refactored into the shared
-    #                    _mmr_greedy_tail + NULL-latq (zero-norm) filter
-    #                    (ADVICE r11 #2); output identical on all SFs.
-    #   sim_coreset_kcenter  memo deep-copy on put/get (ADVICE r11 #1);
-    #                    output identical.
-    #   mm_image_ahash / mm_image_dedup_clusters / pipeline_multimodal_prep
-    #                    image_ahash now hashes NULL payloads like empty
-    #                    ones (all-zero signature — the oracle's existing
-    #                    NULL-propagating behavior) instead of crashing;
-    #                    no testdata SF has NULL text, output identical.
-    #   dedup_simhash (+ the three above again)
-    #                    hamming64_pairs rebanded over DISTINCT signatures
-    #                    with member expansion (K=25 pair stage 25.6->5.1s);
-    #                    output set identical, oracles replay unchanged.
-    "sim_coreset_kcenter": 12,
-    "mm_image_ahash": 12,
-    "mm_image_dedup_clusters": 12,
-    "pipeline_multimodal_prep": 12,
-    "dedup_simhash": 12,
-    # r13 entries — code touched this round:
-    #   sim_mmr_rerank / sim_mmr_ann  oracle e-CTE now mirrors the Spark
-    #                    side's zero-norm + NULL-element candidate clamp
-    #                    (ADVICE r12 #1); no testdata SF contains such
-    #                    vectors, so the recorded hashes are unchanged —
-    #                    both re-verified MATCH at sf0.01 locally; the
-    #                    pins re-prove with the driver. (sim_mmr_rerank's
-    #                    r12 pin self-expired on the CORRECTNESS_r12
-    #                    green; its entry moves here at 13.)
-    "sim_mmr_rerank": 13,
-    "sim_mmr_ann": 13,
-    # r14 entries — code touched this round (ADVICE r13):
-    #   text_url_dedup     canonicalize_url utm removal rebuilt: path/
-    #                      query split FIRST, boundary-anchored
-    #                      utm_[A-Za-z0-9_]+ passes, lone-? strip;
-    #                      oracle replays the same passes. The generated
-    #                      variants avoid every fixed edge, so recorded
-    #                      hashes are unchanged — re-verified MATCH at
-    #                      sf0.001/0.01 locally; the pin re-proves.
-    #   rel_sketch_rollup  kmv_rollup's est⋈exact join key now renders
-    #                      NULL segs explicitly (\x00) + caching
-    #                      contract handle; registry segs are non-null,
-    #                      output unchanged — re-verified MATCH at
-    #                      sf0.01 locally.
-    "text_url_dedup": 14,
-    # (rel_sketch_rollup's r14 pin self-expired on the CORRECTNESS_r14
-    # green; its entry moves to the r15 block below.)
-    # r15 entries — code touched this round (ADVICE r14):
-    #   rel_observe_metrics  a None observed metric now stays NULL in
-    #                      the report (oracle parity on an empty
-    #                      source) + the observed-agg construction
-    #                      split into observe_metrics_plan for the
-    #                      plan guards; no testdata SF has an empty
-    #                      orders table, so recorded hashes are
-    #                      unchanged — the pin re-proves.
-    #   rel_sketch_rollup  kmv_rollup invocations now also register
-    #                      their caches module-side (the no-arg
-    #                      release_kmv_caches drain); output unchanged.
-    #   rel_fuzzy_join     fuzzy_self_join grew the block_cols blocking
-    #                      surface for rel_entity_resolution; the
-    #                      block_cols=None path is behavior-identical
-    #                      (re-verified MATCH at sf0.01 locally) — the
-    #                      pin re-proves with the driver.
-    "rel_observe_metrics": 15,
-    "rel_sketch_rollup": 15,
-    "rel_fuzzy_join": 15,
-}
-
-
-def _newest_green() -> dict[str, int]:
-    """Newest driver-green round per query, from committed CORRECTNESS_r*.json.
-
-    Green = full hash match, or the rows-only contract for no-oracle
-    sketches (driver ran it and got rows back) — the same predicate
-    tests/test_freshness.py uses.
-    """
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    newest: dict[str, int] = {}
-    for path in _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        # A syntactically-valid artifact that isn't {name: row-dict} (e.g. a
-        # top-level list) must degrade to "not green", not crash package
-        # import — the rotation is best-effort over whatever history exists.
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            if ok and rnd > newest.get(name, -1):
-                newest[name] = rnd
-    return newest
-
-
-def _rotated(
-    registered: tuple[str, ...], force_head: dict[str, int], newest: dict[str, int]
-) -> tuple[str, ...]:
-    unknown = set(force_head) - set(registered)
-    if unknown:
-        raise ValueError(f"_FORCE_HEAD names not registered: {sorted(unknown)}")
-    # A pin is live until the driver has re-proven the query at (or
-    # after) the round its code change shipped in.
-    pinned = [q for q, rnd in force_head.items() if newest.get(q, -1) < rnd]
-    rest = [q for q in registered if q not in set(pinned)]
-    # Stable sort: ties (same newest green, incl. the never-proven -1
-    # bucket) keep registration order, so the output is deterministic
-    # given the committed artifacts.
-    rest.sort(key=lambda q: newest.get(q, -1))
-    return tuple(pinned) + tuple(rest)
-
-
-_PRIORITY: tuple[str, ...] = _rotated(_REGISTERED, _FORCE_HEAD, _newest_green())
-
 _MODULES = (monitoring, text, multimodal, dedup, similarity, relational, extras, profiling)
 
 
-def _merged() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _MODULES:
         overlap = out.keys() & m.QUERIES.keys()
@@ -417,20 +26,6 @@ def _merged() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(m.QUERIES)
     return out
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged = _merged()
-    missing = set(_PRIORITY) - merged.keys()
-    unlisted = merged.keys() - set(_PRIORITY)
-    if missing:
-        raise ValueError(f"_PRIORITY names not implemented: {sorted(missing)}")
-    if len(set(_PRIORITY)) != len(_PRIORITY):
-        raise ValueError("_PRIORITY contains duplicates")
-    # Unlisted queries (should not happen; belt-and-braces) go last.
-    ordered = {name: merged[name] for name in _PRIORITY}
-    ordered.update({name: merged[name] for name in sorted(unlisted)})
-    return ordered
 
 
 def all_oracles() -> dict[str, str]:

@@ -1,9 +1,9 @@
 """Extra scale-pattern queries.
 
 Overflow module for engine-surface extensions that don't belong to one
-domain pack. Driver-window position is governed by
-``queries/__init__._PRIORITY`` (rotation policy there); the local pytest
-oracle-parity suite covers every entry every round regardless.
+domain pack. Its ``QUERIES`` and ``ORACLES`` merge into the registry like
+every other domain module's; ``tests/test_oracle_parity.py`` checks each
+entry against its oracle.
 """
 
 from __future__ import annotations

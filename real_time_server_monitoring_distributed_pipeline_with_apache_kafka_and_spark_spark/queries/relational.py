@@ -862,14 +862,6 @@ def mad_outlier_report(df: DataFrame, key_col: str, val_col: str) -> DataFrame:
     )
 
 
-# Insertion order is load-bearing: the correctness driver checks the first
-# ~50 registry entries in iteration order (CORRECTNESS_r01.json stopped at
-# exactly 50 = the module boundary before text/multimodal). Structurally
-# interesting queries (joins, windows, multi-dim aggs, sketches) come first;
-# the stock scalar-function surface (all driver-green in round 1,
-# CORRECTNESS_r01.json) sits at the tail so it is what falls outside the cap
-# now that text_*/mm_* run earlier. Local pytest oracle-parity still covers
-# every query each round regardless of driver order.
 def rel_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frames: each order sees its customer's trailing
     30-DAY order count and exact decimal revenue — value-range frames

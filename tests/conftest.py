@@ -23,7 +23,7 @@ def pytest_collection_modifyitems(config, items):
     direct pytest run). Only set this for groups whose EVERY file is
     meant to shard — unlike SPARK_GRAFT_PARITY_SHARD it applies to all
     items the process collected (the suite-coverage pin in
-    test_freshness.py enforces that multi-listed files form complete
+    test_suite_hygiene.py enforces that multi-listed files form complete
     0..n-1 covers)."""
     spec = os.environ.get("SPARK_GRAFT_FILE_SHARD")
     if not spec:

@@ -26,7 +26,7 @@
 # BY QUERY NAME inside a mixed group (other files in the group run whole);
 # SPARK_GRAFT_FILE_SHARD shards EVERY collected item of the process, so it
 # is only used for groups whose entire file list is meant to shard. The
-# suite-coverage pin (test_freshness.py) enforces that any multi-listed
+# suite-coverage pin (test_suite_hygiene.py) enforces that any multi-listed
 # file's specs form a SAME-ENV complete 0..n-1 cover and that every
 # member of a FILE_SHARD group is multi-listed. Both shard vars are
 # explicitly cleared per group (env NAME= — empty reads as unset in
@@ -49,7 +49,7 @@ GROUP3="tests/test_oracle_parity.py"
 GROUP4="tests/test_plans.py tests/test_skew.py"
 GROUP5="tests/test_properties.py tests/test_profiling.py"
 GROUP6="tests/test_caching.py tests/test_changelog.py tests/test_cli.py \
-tests/test_freshness.py tests/test_joins.py \
+tests/test_suite_hygiene.py tests/test_joins.py \
 tests/test_multimodal.py tests/test_scaling_probe.py \
 tests/test_sources.py tests/test_text_ops.py"
 GROUP7="tests/test_streaming_stores.py"

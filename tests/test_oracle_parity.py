@@ -1,7 +1,8 @@
-"""Driver-contract replica: every queries() entry vs its DuckDB oracle at sf0.01.
+"""Registry-wide oracle check: every queries() entry vs its DuckDB oracle at sf0.01.
 
-Any mismatch here is a mismatch in CORRECTNESS_r{N}.json. Rows that differ
-only by float last-ulp noise are also failures (the driver hashes values).
+Runs in tier 1, so every change re-proves the whole registry through the
+driver contract (``all_queries``/``all_oracles``). Rows that differ only by
+float last-ulp noise are also failures (the driver hashes values).
 """
 
 from __future__ import annotations

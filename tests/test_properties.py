@@ -1186,20 +1186,20 @@ def test_kmv_rollup_matches_pure_python_replay(spark, rows, k):
     are all generated, INCLUDING NULL segment values in either position
     (ADVICE r13 #2: (NULL,'x') and ('x',NULL) must stay distinct groups
     in the est⋈exact combine, not collide via concat_ws's NULL-skip)."""
-    import hashlib
-
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.caching import (
+        cache_scope,
+    )
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.sketches import (
         kmv_rollup,
-        release_kmv_caches,
     )
 
     data = [(g, s, f"key{i}") for g, s, i in rows]
     df = spark.createDataFrame(data, "g string, s string, key string")
-    out = kmv_rollup(df, key_col="key", seg_cols=["g", "s"], k=k)
-    got = {(r.level, r.g, r.s): r for r in out.collect()}
-    # The caching contract: hypothesis re-invokes this dozens of times in
-    # one session — release each invocation's persisted frames.
-    release_kmv_caches(out)
+    # The caching contract: hypothesis re-invokes this in one session —
+    # release each invocation's persisted frames.
+    with cache_scope(spark):
+        out = kmv_rollup(df, key_col="key", seg_cols=["g", "s"], k=k)
+        got = {(r.level, r.g, r.s): r for r in out.collect()}
 
     from .test_joins import md5_h60
 
@@ -1219,40 +1219,3 @@ def test_kmv_rollup_matches_pure_python_replay(spark, rows, k):
         est, exact = expect(keys)
         assert got[lvl].exact_distinct == exact, lvl
         assert got[lvl].est_distinct == est, lvl
-
-
-def test_release_kmv_caches_no_arg_drains_transformed_handles(spark):
-    """ADVICE r14 #2: the cache handle is an ad-hoc attribute on the
-    EXACT frame kmv_rollup returns — any .select() silently drops it,
-    making the handle-based release unreachable from registry/driver
-    paths. The no-arg drain must release those invocations' persisted
-    frames anyway (the module-side registry)."""
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.sketches import (
-        _LIVE_KMV_CACHES,
-        kmv_rollup,
-        release_kmv_caches,
-    )
-
-    release_kmv_caches()  # start from a clean registry
-    df = spark.createDataFrame(
-        [("a", "x", "k1"), ("a", "y", "k2"), ("b", "x", "k1")],
-        "g string, s string, key string",
-    )
-    out = kmv_rollup(df, key_col="key", seg_cols=["g", "s"], k=4)
-    transformed = out.select("level", "est_distinct")
-    transformed.collect()
-    assert not hasattr(transformed, "_kmv_caches")  # dropped by .select
-    assert _LIVE_KMV_CACHES  # but the module registry still holds them
-    cached = [f for batch in _LIVE_KMV_CACHES for f in batch]
-    assert any(f.is_cached for f in cached)
-    release_kmv_caches()
-    assert not _LIVE_KMV_CACHES
-    assert all(not f.is_cached for f in cached)
-
-    # The handle-based form still works on the exact object, and removes
-    # that batch from the registry so the drain never double-walks it.
-    out2 = kmv_rollup(df, key_col="key", seg_cols=["g"], k=4)
-    out2.collect()
-    release_kmv_caches(out2)
-    assert all(not f.is_cached for f in out2._kmv_caches)
-    assert not _LIVE_KMV_CACHES
