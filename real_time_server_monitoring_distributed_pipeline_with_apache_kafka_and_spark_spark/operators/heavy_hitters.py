@@ -24,7 +24,7 @@ loop — work per batch is O(distinct keys in batch), never O(rows).
 
 Batch/stream symmetry: :func:`space_saving_partial` is also the
 per-micro-batch transform of the streaming ingest leg
-(``streaming.jobs.heavy_hitter_ingest_stream``) — summaries land in the
+(``streaming.jobs.ingest_store_stream``) — summaries land in the
 idempotent ``batch_id=N`` store and :func:`merge_summaries` over the
 accreted store gives the same bound contract over the whole stream.
 """

@@ -21,7 +21,7 @@ time-series/monitoring pipelines need that Spark lacks as primitives:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -304,8 +304,9 @@ def interval_event_join(
     ``(left_ts, left_ts + window_seconds]`` for the same key — "which
     error followed this click within the hour", the batch analogue of a
     Structured Streaming stream-stream time-interval join
-    (streaming.jobs.interval_join_stream shares the exact predicate, so
-    stream and batch results are comparable row-for-row).
+    (streaming.jobs.interval_join_stream shares the exact predicate,
+    :func:`interval_bound`, so stream and batch results are comparable
+    row-for-row).
 
     A plain ``join(key) .filter(range)`` is correct but shuffles every
     row of a hot key to one task and compares all left x right rows
@@ -336,9 +337,18 @@ def interval_event_join(
     rb = right.withColumn(
         "_bkt", F.explode(F.array(r0, r0 - F.expr(f"INTERVAL {w} SECOND")))
     )
-    upper = F.col(left_ts) + F.expr(f"INTERVAL {w} SECOND")
     return (
         lb.join(rb, [*key_cols, "_bkt"])
-        .filter((F.col(right_ts) > F.col(left_ts)) & (F.col(right_ts) <= upper))
+        .filter(interval_bound(left_ts, right_ts, w))
         .drop("_bkt")
     )
+
+
+def interval_bound(left_ts: str, right_ts: str, window_seconds: int) -> Column:
+    """The interval joins' time bound, defined once: ``right_ts`` in
+    ``(left_ts, left_ts + window_seconds]``. :func:`interval_event_join`
+    filters its bucketed equi-join with it; the stream-stream joins
+    (``streaming.jobs.interval_join_stream``/``_full``) join on it, so
+    both runners pair exactly the same rows."""
+    upper = F.col(left_ts) + F.expr(f"INTERVAL {int(window_seconds)} SECOND")
+    return (F.col(right_ts) > F.col(left_ts)) & (F.col(right_ts) <= upper)

@@ -18,7 +18,11 @@ main.py's *1/*2 roles derive topics, files and outputs from the pair's
 metric names. The stream jobs (streaming/jobs.py) use
 :func:`fused_alert_job` instead: the same pairs and windows from one
 windowed aggregation, with no join, so a streaming query keeps one stateful
-operator. Both builders end in the same CASE and projection.
+operator. Both builders end in the same CASE and projection. The
+single-metric window (:func:`sliding_window_avg`), the session windows
+(:func:`session_window_sum`) and the drift index (:func:`psi_table`) are
+likewise defined once here, for the batch queries (queries/monitoring.py)
+and their stream legs (streaming/jobs.py) alike.
 
 Scale notes (100 TB posture):
 - The join shuffles both sides on (ts, entity) - at scale, pre-bucketing the
@@ -38,10 +42,11 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from functools import partial
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, WindowConfig
+from ..functions import display_round
 
 
 def join_metric_streams(
@@ -151,6 +156,50 @@ def tumbling_window_agg(
     return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
 
 
+def sliding_window_avg(
+    events: DataFrame,
+    value_col: str = "value",
+    entity_col: str = "server_id",
+    window: WindowConfig | None = None,
+) -> DataFrame:
+    """A1 without the join leg: one metric's average and event count per
+    (entity, sliding window), as (entity, window_start, window_end,
+    avg_value, n_events). ``monitor_window_sliding_avg`` runs it over the
+    events table; ``streaming_window_alerts`` over a watermarked stream."""
+    agged = sliding_window_agg(
+        events,
+        {"avg_value": F.avg(value_col), "n_events": F.count(F.lit(1))},
+        entity_col=entity_col,
+        window=window,
+    )
+    return agged.select(
+        entity_col,
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        "avg_value",
+        "n_events",
+    )
+
+
+def session_window_sum(events: DataFrame, gap: str) -> DataFrame:
+    """T2 session windows: per ``user_id``, ``F.session_window`` merges
+    events less than ``gap`` apart into one session, reported as
+    (user_id, session_start, session_end, n_events, sum_value).
+    ``monitor_session_window`` runs it over the events table;
+    ``session_window_stream`` over a watermarked stream in append mode."""
+    agged = (
+        events.groupBy("user_id", F.session_window("ts", gap))
+        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
+    )
+    return agged.select(
+        "user_id",
+        F.col("session_window.start").alias("session_start"),
+        F.col("session_window.end").alias("session_end"),
+        "n_events",
+        "sum_value",
+    )
+
+
 def metric_bucket(
     value_col: Column, width: float = 50.0, n_buckets: int = 10
 ) -> Column:
@@ -161,6 +210,39 @@ def metric_bucket(
     (streaming/jobs.py::bucket_count_stream) — sharing this expression
     IS the stream==batch guarantee for drift detection."""
     return F.least(F.floor(value_col / width).cast("int"), F.lit(n_buckets - 1))
+
+
+def psi_table(counts: DataFrame, n_buckets: int = 10) -> DataFrame:
+    """Population Stability Index of two histograms over the same
+    ``n_buckets`` buckets, from a ``(bucket, n_a, n_b)`` table: per bucket
+    the Laplace-smoothed proportions (+0.5 per bucket, so an empty bucket
+    stays finite) and the PSI term, plus the total, all floor-rounded to
+    9 decimals (JVM log vs libm last-ulp policy). ``monitor_drift_psi``
+    runs it over two periods of the events table, ``psi_vs_reference``
+    over a reference histogram and a streamed one. The table is
+    bucket-sized, so its one ``OVER ()`` window is trivially small."""
+    w = Window.partitionBy()
+    p_a = (F.col("n_a") + 0.5) / (F.sum("n_a").over(w) + 0.5 * n_buckets)
+    p_b = (F.col("n_b") + 0.5) / (F.sum("n_b").over(w) + 0.5 * n_buckets)
+    contrib = (p_a - p_b) * F.log(p_a / p_b)
+    enriched = counts.select(
+        "bucket",
+        "n_a",
+        "n_b",
+        display_round(p_a, 9).alias("p_a"),
+        display_round(p_b, 9).alias("p_b"),
+        display_round(contrib, 9).alias("psi_contrib"),
+    )
+    # Total = ordered sum of the ROUNDED per-bucket terms: each addend is
+    # bit-exact post-rounding and the explicit ORDER BY fixes the float
+    # accumulation order, so the total is engine-reproducible (an
+    # unordered OVER () sum would be hostage to row order).
+    w_total = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return enriched.withColumn(
+        "psi_total", display_round(F.sum("psi_contrib").over(w_total), 9)
+    )
 
 
 def alert_case(

@@ -1571,8 +1571,8 @@ def ivfpq_encode_corpus(
     """Encode vectors against a FIXED IVF-PQ index: (id, cell, codes)
     plus the original vector (kept for the refine stage). This is the
     shared encode half of :func:`ann_ivfpq_topk` and the per-micro-batch
-    transform of the streaming ingest leg
-    (``streaming.jobs.ivfpq_ingest_stream``) — the index (centroids +
+    transform of the IVF-PQ store
+    (``streaming.jobs.ingest_store_stream``) — the index (centroids +
     codebooks) is built offline, arrival encodes against it, so a store
     built incrementally is row-identical to a single batch encode."""
     c_assign = _centroid_udf(centroids, 1)
@@ -1674,34 +1674,6 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: one sign bit per plane."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        plane_lit = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(dot_product(vec_col, plane_lit) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
-def _lsh_tables(vec_col: Column, planes: list[list[float]], k: int, tables: int) -> Column:
-    """Array of (table_idx, bucket) structs - one entry per hash table.
-
-    Built-in-expression formulation; kept for environments without Arrow.
-    ann_lsh_topk uses the vectorized ``_bucket_udf`` instead: k*tables
-    interpreted dot-folds per vector is the dominant cost of the LSH path
-    (measured 5x slower than brute force at 2k vectors, inverting the
-    whole point of bucketing).
-    """
-    entries = []
-    for t in range(tables):
-        bucket = lsh_bucket(vec_col, planes[t * k : (t + 1) * k])
-        entries.append(
-            F.struct(F.lit(t).alias("table_idx"), bucket.alias("bucket"))
-        )
-    return F.array(*entries)
-
-
 def _bucket_udf(planes: list[list[float]], k: int, tables: int):
     """Arrow-batched bucket computation: one numpy matmul per batch.
 
@@ -1740,9 +1712,10 @@ def lsh_tag_corpus(
     """Index side of the LSH ANN: explode a corpus into one row per
     (vector, hash table) with its bucket id and precomputed norm.
 
-    Shared by :func:`ann_lsh_topk` (inline) and the streaming ingest leg
-    (``streaming.jobs.vector_ingest_stream`` tags each micro-batch and
-    appends to a persistent candidate store). The hyperplanes are derived
+    Shared by :func:`ann_lsh_topk` (inline) and the streaming vector
+    store (``streaming.jobs.ingest_store_stream`` with this function as
+    the transform tags each micro-batch and appends it to a persistent
+    candidate store). The hyperplanes are derived
     from ``seed`` alone, so any two invocations — batch or per
     micro-batch — assign identical buckets, which is what makes an
     incrementally-built store interchangeable with a one-shot build.

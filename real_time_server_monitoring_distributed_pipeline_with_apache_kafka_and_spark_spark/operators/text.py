@@ -228,6 +228,15 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def quality_filter(df: DataFrame, min_quality: float = 0.33, text_col: str = "text") -> DataFrame:
+    """The curation pipelines' quality gate: the rows whose
+    :func:`quality_score` reaches ``min_quality``, score columns attached
+    (NULL quality, i.e. empty text, fails the gate). Shared by the batch
+    pipelines (``queries.dedup.pipeline_*``) and
+    ``streaming.jobs.curation_stream``."""
+    return quality_score(df, text_col=text_col).filter(F.col("quality") >= min_quality)
+
+
 def gopher_rules(
     df: DataFrame,
     text_col: str = "text",

@@ -324,7 +324,7 @@ def dedup_stream_store_recheck(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
         # ONE store scan feeds both the LSH probe and the tail's
-        # profile/batch census (r16, VERDICT r15 #4): read_minhash_store
+        # profile/batch census (r16, VERDICT r15 #4): a store reader
         # + a separate spark.read.parquet(store) for the census was two
         # scans of the same directory; the persisted frame is scanned
         # once and both consumers read the cache.
@@ -608,8 +608,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as text_ops
 
     docs = load_table(spark, sf_dir, "documents")
-    scored = text_ops.quality_score(docs)
-    kept = scored.filter(F.col("quality") >= 0.33).persist()
+    kept = text_ops.quality_filter(docs).persist()
     # Exact dedup stays the exact_dedup agg + join-back — see
     # pipeline_training_prep: the r15 window-over-text rewrite measured
     # 1.7x SLOWER (full-row shuffle + ~kB-string sort vs map-side-partial
@@ -662,7 +661,7 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") >= 10).join(
         F.broadcast(kept_sources), "source"
     )
-    scored = text_ops.quality_score(corpus).filter(F.col("quality") >= 0.33).persist()
+    scored = text_ops.quality_filter(corpus).persist()
     # Exact dedup stays the exact_dedup agg + join-back — an r15 window
     # rewrite (min(doc_id) OVER (PARTITION BY text)) was measured 1.7x
     # SLOWER in an interleaved in-process A/B (7.84 vs 4.53 s at sf0.1):

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, AlertThresholds, PipelineConfig
+from ..config import AlertThresholds, PipelineConfig
 from ..functions import display_round
 from ..operators import monitoring as ops
 from ..sources import load_table
@@ -192,19 +192,7 @@ def monitor_net_disk_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def monitor_window_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: A1 sliding-window avg without the join leg (build plan M0)."""
     ev = load_table(spark, sf_dir, "events")
-    agged = ops.sliding_window_agg(
-        ev,
-        {"avg_value": F.avg("value"), "n_events": F.count(F.lit(1))},
-        entity_col="user_id",
-        window=DEFAULT_CONFIG.window,
-    )
-    return agged.select(
-        "user_id",
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "avg_value",
-        "n_events",
-    )
+    return ops.sliding_window_avg(ev, entity_col="user_id")
 
 
 def monitor_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,17 +220,7 @@ def monitor_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions with lag() + a running new-session counter.
     """
     ev = load_table(spark, sf_dir, "events")
-    agged = (
-        ev.groupBy("user_id", F.session_window("ts", "5 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-    return agged.select(
-        "user_id",
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        "n_events",
-        "sum_value",
-    )
+    return ops.session_window_sum(ev, "5 minutes")
 
 
 def monitor_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,10 +891,9 @@ def monitor_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure scan + one 10-row exchange. Probability/PSI doubles are
     floor-rounded to 9 decimals on both engines (JVM log vs libm
     last-ulp policy, same as text_tfidf); every PSI term is >= 0 so
-    display_round's positive-value contract holds.
+    display_round's positive-value contract holds. The PSI tail is
+    ``operators.monitoring.psi_table``, shared with the stream leg.
     """
-    from pyspark.sql import Window
-
     events = load_table(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
     bucket = ops.metric_bucket(F.col("value"))
@@ -931,28 +908,7 @@ def monitor_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("is_a")).alias("n_b"),
         )
     )
-    w = Window.partitionBy()
-    p_a = (F.col("n_a") + 0.5) / (F.sum("n_a").over(w) + 5.0)
-    p_b = (F.col("n_b") + 0.5) / (F.sum("n_b").over(w) + 5.0)
-    contrib = (p_a - p_b) * F.log(p_a / p_b)
-    enriched = counts.select(
-        "bucket",
-        "n_a",
-        "n_b",
-        display_round(p_a, 9).alias("p_a"),
-        display_round(p_b, 9).alias("p_b"),
-        display_round(contrib, 9).alias("psi_contrib"),
-    )
-    # Total = ordered sum of the ROUNDED per-bucket terms: each addend is
-    # bit-exact post-rounding and the explicit ORDER BY fixes the float
-    # accumulation order, so the total is engine-reproducible (an
-    # unordered OVER () sum would be hostage to row order).
-    w_total = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return enriched.withColumn(
-        "psi_total", display_round(F.sum("psi_contrib").over(w_total), 9)
-    )
+    return ops.psi_table(counts)
 
 
 def monitor_rate_spike(spark: SparkSession, sf_dir: str) -> DataFrame:

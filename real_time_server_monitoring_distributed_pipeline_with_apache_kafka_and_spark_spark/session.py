@@ -4,7 +4,7 @@ The reference creates bare sessions per job (``/root/reference/main.py:38-44``);
 we centralize session policy so every entry point (tests, bench, driver
 contract) runs with the same scale-oriented settings: AQE on, explicit UTC
 timezone (oracle comparison), Arrow for any pandas interchange, shuffle
-partitions sized to the machine instead of the 200 default.
+partitions sized to the session's task slots unless its owner set them.
 
 Shuffle partitions come in two regimes, sized separately:
 
@@ -122,21 +122,20 @@ def partition_confs(slots: int, batch_partitions: int | None = None) -> dict[str
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
 
-    Shuffle parallelism: ONLY when the session still carries Spark's
-    untouched 200-partition default (the external verification driver
-    builds a bare session — 200 schedules ~3x more tasks than local
-    cores, pure overhead at small SF) is it resized, to the session's own
-    task slots (``defaultParallelism``, not the machine's cores: a
-    ``local[3]`` session on a 16-core box has 3 slots) in the two regimes
-    of :func:`partition_confs`. A session whose owner SET shuffle
-    partitions (a real cluster sized for 1000 executors) is respected and
-    gets no ``initialPartitionNum``, so the owner's count still governs
-    both batch and state — clobbering it to driver cores would be the
-    real scale bug. An owner who DELIBERATELY wants exactly 200
-    (indistinguishable from the untouched default through the conf API)
-    opts out with SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1. Results are
-    partition-count-invariant either way (decimal sums, lattice rounding
-    — pinned by the partition-invariance property tests).
+    Shuffle parallelism: ONLY when nobody set
+    ``spark.sql.shuffle.partitions`` (the conf API returns no value: an
+    external driver's bare session, where Spark's 200 default schedules
+    ~3x more tasks than local cores, pure overhead at small SF) is it
+    sized, to the session's own task slots (``defaultParallelism``, not
+    the machine's cores: a ``local[3]`` session on a 16-core box has 3
+    slots) in the two regimes of :func:`partition_confs`. A session whose
+    owner SET shuffle partitions (a real cluster sized for 1000
+    executors, or exactly 200) is respected and gets no
+    ``initialPartitionNum``, so the owner's count still governs both
+    batch and state — clobbering it to driver cores would be the real
+    scale bug. Results are partition-count-invariant either way (decimal
+    sums, lattice rounding — pinned by the partition-invariance property
+    tests).
 
     Checkpoint files: a ``local[...]`` master gets the FileSystem-based
     checkpoint manager (module docstring) unless the owner set one.
@@ -147,8 +146,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     is_local = master == "local" or master.startswith("local[")
     if is_local and spark.conf.get(CHECKPOINT_FILE_MANAGER, None) is None:
         spark.conf.set(CHECKPOINT_FILE_MANAGER, LOCAL_CHECKPOINT_FILE_MANAGER)
-    keep = os.environ.get("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS", "") == "1"
-    if not keep and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
+    if spark.conf.get("spark.sql.shuffle.partitions", None) is None:
         for key, value in partition_confs(spark.sparkContext.defaultParallelism).items():
             spark.conf.set(key, value)
     return spark

@@ -1,22 +1,22 @@
-"""Kafka source/sink builders (reference S4/S5, SURVEY.md SS2.1).
+"""Kafka source builder (reference S4/S5, SURVEY.md SS2.1).
 
 The reference runs a hand-rolled kafka-python producer with async sends +
 callbacks (``producer.py:35-86``) and two consumer processes that land
 messages to CSV with a per-message flush (``consumer1.py:40-49``). In
 Spark both legs are declarative: ``readStream.format("kafka")`` replaces
 the consumers (checkpointed offsets replace auto-commit; exactly-once to
-file sinks replaces at-most-once), ``writeStream.format("kafka")`` replaces
-the producer (batching/compression via kafka.* options).
+file sinks replaces at-most-once), and main.py's ``producer`` role writes
+the wire messages with a batch ``write.format("kafka")`` (batching and
+compression via kafka.* options).
 
-No broker exists in this environment: these builders are exercised up to
-plan construction in tests; end-to-end coverage uses file/memory streams
+No broker exists in this environment: the source builder is exercised up
+to plan construction in tests; end-to-end coverage uses file/memory streams
 through the same downstream operators (streaming/jobs.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql import SparkSession
 
 from ..config import KafkaConfig
 
@@ -71,23 +71,3 @@ def kafka_source(
         reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
     return reader
 
-
-def kafka_sink(
-    df: DataFrame,
-    config: KafkaConfig,
-    checkpoint_dir: str,
-    compression: str = "snappy",
-) -> DataStreamWriter:
-    """Streaming Kafka sink for a (topic, value) DataFrame.
-
-    Replaces the async producer loop (``producer.py:61-86``): batching,
-    compression (snappy, mirroring producer.py:18), and retries are client
-    options; delivery tracking is the checkpoint, not callbacks.
-    """
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", config.broker)
-        .option("kafka.compression.type", compression)
-        .option("kafka.acks", "all")
-        .option("checkpointLocation", checkpoint_dir)
-    )

@@ -479,6 +479,26 @@ def conform_to_schema(df: DataFrame, schema, strict: bool = False) -> DataFrame:
     return df.select(*cols)
 
 
+def fs_total_bytes(spark: SparkSession, path: str, suffix: str = ".parquet") -> int:
+    """Recursive byte total of ``suffix`` files under ``path`` via the
+    Hadoop FileSystem API — works against any store Spark itself can
+    read (local, HDFS, object stores), unlike ``os.walk``, which only
+    sees the driver's local filesystem. A driver-side listing, so it
+    sizes a store without a job, e.g. ``compact_ingest_store``'s output
+    count. Uses the JVM gateway, so classic sessions only (same
+    constraint as caching.py; Spark Connect exposes no ``_jvm``)."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    files = fs.listFiles(jpath, True)
+    total = 0
+    while files.hasNext():
+        status = files.next()
+        if status.getPath().getName().endswith(suffix):
+            total += status.getLen()
+    return total
+
+
 def file_layout_report(
     spark: SparkSession, path: str, small_file_bytes: int = 32 * 1024 * 1024
 ) -> DataFrame:

@@ -17,6 +17,10 @@ reference answer. What streaming adds on top (SURVEY.md SS2.7):
   continuously).
 - delivery (T4): checkpoint + idempotent sinks give exactly-once to files,
   replacing producer acks/retries + consumer auto-commit.
+
+The other legs follow the same rule: a stream leg is a runner (a
+watermark, state, or the :func:`ingest_store_stream` store) around the
+batch operator the batch query calls, never a copy of its formula.
 """
 
 from __future__ import annotations
@@ -83,17 +87,15 @@ def streaming_net_disk_job(net: DataFrame, disk: DataFrame, config=DEFAULT_CONFI
 
 
 def _interval_join(left, right, key_cols, left_ts, right_ts, window_seconds, watermark, how):
-    """The one definition of the interval-join modes' watermarks and
-    predicate: right events in ``(left_ts, left_ts + window_seconds]``
-    with equal keys. Returns the join and both watermarked sides, whose
-    column references pick one key copy."""
+    """The interval-join modes' runner: both sides watermarked, joined on
+    equal keys and the batch join's time bound
+    (``operators.joins.interval_bound``). Returns the join and both
+    watermarked sides, whose column references pick one key copy."""
+    from ..operators.joins import interval_bound
+
     lw = left.withWatermark(left_ts, watermark)
     rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        F.col(right_ts) > F.col(left_ts)
-    ) & (
-        F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {int(window_seconds)} SECOND")
-    )
+    cond = interval_bound(left_ts, right_ts, window_seconds)
     for k in key_cols:
         cond = cond & (lw[k] == rw[k])
     return lw.join(rw, cond, how), lw, rw
@@ -217,8 +219,8 @@ def curation_stream(
     stateless + keyed-state prefix of the curation pipeline, running
     continuously over a document stream.
 
-    quality filter (stateless, same ``operators.text.quality_score``
-    expressions as the batch path — one logical plan, two runners) ->
+    quality filter (stateless, the batch path's own
+    ``operators.text.quality_filter`` — one logical plan, two runners) ->
     streaming exact dedup on the text key (:func:`dedup_stream`, state
     bounded by the watermark). The near-dup stage splits: the per-document
     work (shingle + MinHash signature) runs incrementally — feed this
@@ -233,14 +235,13 @@ def curation_stream(
     representative coincides with first-arrival when ids are assigned in
     arrival order, as the replay producer does).
     """
-    from ..operators.text import quality_score
+    from ..operators.text import quality_filter
 
-    scored = quality_score(docs, text_col=text_col)
     # Exclude any pre-existing 'quality' from the passthrough columns:
     # quality_score overwrites it in place, so naming it twice here would
     # produce a duplicate (ambiguous) output column.
     passthrough = [c for c in docs.columns if c != "quality"]
-    kept = scored.filter(F.col("quality") >= min_quality).select(*passthrough, "quality")
+    kept = quality_filter(docs, min_quality, text_col).select(*passthrough, "quality")
     return dedup_stream(kept, [text_col], ts_col=ts_col, watermark=watermark)
 
 
@@ -251,19 +252,11 @@ def streaming_window_alerts(
     config=DEFAULT_CONFIG,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """Single-stream windowed aggregation + alert (no join leg)."""
-    agged = ops.sliding_window_agg(
-        watermarked(events, delay=watermark),
-        {"avg_value": F.avg(value_col), "n_events": F.count(F.lit(1))},
-        entity_col=entity_col,
-        window=config.window,
-    )
-    return agged.select(
-        entity_col,
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "avg_value",
-        "n_events",
+    """Stream leg of ``monitor_window_sliding_avg``: the batch operator
+    :func:`operators.monitoring.sliding_window_avg` over a watermarked
+    stream."""
+    return ops.sliding_window_avg(
+        watermarked(events, delay=watermark), value_col, entity_col, config.window
     )
 
 
@@ -272,32 +265,19 @@ def session_window_stream(
     gap: str = "5 minutes",
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """Streaming twin of the batch ``monitor_session_window`` query:
-    gap-based session windows (``F.session_window``) per user with
-    append-mode emission — a session row emits once the watermark
-    guarantees no further event can extend it (event past session_end +
-    gap is impossible once watermark > session_end).
+    """Stream leg of ``monitor_session_window``: the batch operator
+    :func:`operators.monitoring.session_window_sum` over a watermarked
+    stream, with append-mode emission — a session row emits once the
+    watermark guarantees no further event can extend it (event past
+    session_end + gap is impossible once watermark > session_end).
 
-    This is the T2 session-window surface ON A STREAM: state per key is
-    the open session's (start, end, partial aggs) only — Spark merges
-    sessions whose gaps close under late data and the watermark bounds
-    how long any session can stay open. Same aggregate set and column
-    names as the batch query, so stream output == batch output on a
-    drained file stream (pinned by tests/test_streaming.py::
-    test_session_window_stream_matches_batch).
+    State per key is the open session's (start, end, partial aggs) only —
+    Spark merges sessions whose gaps close under late data and the
+    watermark bounds how long any session can stay open. Stream output ==
+    batch output on a drained file stream (pinned by
+    tests/test_streaming.py::test_session_window_stream_matches_batch).
     """
-    agged = (
-        watermarked(events, delay=watermark)
-        .groupBy("user_id", F.session_window("ts", gap))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-    return agged.select(
-        "user_id",
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        "n_events",
-        "sum_value",
-    )
+    return ops.session_window_sum(watermarked(events, delay=watermark), gap)
 
 
 def ingest_store_stream(
@@ -308,10 +288,8 @@ def ingest_store_stream(
 ):
     """THE idempotent ``batch_id=N`` store contract, defined once.
 
-    Every ingest leg in this module (raw landing, LSH vector tags,
-    MinHash profiles, rollup partials, profile partials, CDC changelog)
-    is this function with a different per-batch ``transform``: each
-    micro-batch is transformed and lands in its own ``batch_id=N``
+    Every store leg is this function with a different per-batch
+    ``transform``: each micro-batch is transformed and lands in its own ``batch_id=N``
     directory with mode=overwrite, so a batch replayed after a failure
     (checkpoint says N wasn't committed) OVERWRITES its own partial
     output instead of appending duplicates — per-batch idempotence + the
@@ -324,6 +302,25 @@ def ingest_store_stream(
     ``cleanup()`` runs after the write — for transforms that persist an
     intermediate (e.g. the MinHash shingle scan) and must release it
     once the batch is durable.
+
+    A store whose rows are a batch operator's output takes that operator
+    as the transform, so the store equals one batch pass over the union
+    input and the batch operator's own probe reads it back:
+
+    - raw landing and the CDC changelog: verbatim rows
+      (:func:`probe_changelog_store` merges latest-wins, which arrival
+      order across batches cannot change);
+    - ANN vectors: ``operators.similarity.lsh_tag_corpus`` (same seeded
+      hyperplanes), probed by ``ann_lsh_topk_tagged``;
+    - IVF-PQ: ``functools.partial(ivfpq_encode_corpus, centroids=c,
+      books=b)`` against an index trained offline, probed by
+      ``ivfpq_probe_encoded`` — each vector is encoded once, at arrival;
+    - heavy hitters: ``functools.partial(space_saving_partial,
+      key_col=k, capacity=n)``, O(capacity) rows per partition per batch,
+      merged by :func:`probe_heavy_hitter_store`.
+
+    The legs below define their own partial rows, which only their probe
+    reads (MinHash profiles, rollup, profile, Bloom and drift partials).
 
     Returns the DataStreamWriter (caller starts it). Read the store back
     with :func:`read_ingest_store`; re-layout it with
@@ -357,130 +354,6 @@ def write_store_partition(df: DataFrame, store_path: str, batch_id: int) -> None
     )
 
 
-def vector_ingest_stream(
-    vectors: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes_per_table: int = 6,
-    n_tables: int = 12,
-    dim: int = 64,
-    seed: int = 7,
-):
-    """Streaming ingest leg for the ANN tier: embeddings arrive on a
-    stream, each micro-batch is LSH-tagged and appended to the bucketed
-    candidate store that batch probes read.
-
-    The reference's landing-leg shape (``consumers/consumer1.py:40-49``:
-    Kafka in, demuxed file store out) applied to vectors. The tagging is
-    ``operators.similarity.lsh_tag_corpus`` with the same seeded
-    hyperplanes as the batch operator, so a store built incrementally is
-    row-identical to one built in a single batch pass — probing it with
-    ``ann_lsh_topk_tagged`` returns exactly what ``ann_lsh_topk`` would
-    on the union corpus (pinned by
-    tests/test_streaming.py::test_vector_ingest_stream_matches_batch).
-
-    Delivery: each micro-batch lands in its own ``batch_id=N`` directory
-    with mode=overwrite (the :func:`ingest_store_stream`
-    contract) — a replayed batch overwrites its own partial output, so
-    checkpoint + idempotent writes give exactly-once into the store.
-
-    At scale the store is append-heavy and probe-read; periodic
-    compaction can re-cluster it by (table_idx, bucket) for probe
-    locality, but the probe broadcasts the (small) query side, so the
-    store layout only affects scan parallelism, not shuffle volume.
-
-    Returns the DataStreamWriter (caller starts it).
-    """
-    from ..operators.similarity import lsh_tag_corpus
-
-    def transform(batch_df: DataFrame) -> DataFrame:
-        return lsh_tag_corpus(
-            batch_df,
-            id_col=id_col,
-            vec_col=vec_col,
-            planes_per_table=planes_per_table,
-            n_tables=n_tables,
-            dim=dim,
-            seed=seed,
-        )
-
-    return ingest_store_stream(vectors, store_path, checkpoint_dir, transform)
-
-
-def ivfpq_ingest_stream(
-    vectors: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    centroids,
-    books,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-):
-    """Streaming ingest leg for the IVF-PQ tier (the eighth store on the
-    :func:`ingest_store_stream` contract): the index — coarse centroids
-    + PQ codebooks — is built OFFLINE (``operators.similarity.
-    ivf_centroids`` / ``pq_codebooks``, the FAISS train-then-add
-    lifecycle), and every arriving vector encodes against it at ingest
-    (cell assignment + PQ codes, ``ivfpq_encode_corpus``). The store
-    accretes (id, cell, codes, vector) rows; probing it with
-    ``probe_ivfpq_store`` answers exactly what ``ann_ivfpq_topk`` would
-    on the union corpus with the same index (pinned by
-    tests/test_streaming.py::test_ivfpq_ingest_stream_matches_batch).
-
-    At 100 TB the codes column is what makes this stream-shaped: each
-    arrival's store row adds m bytes of index payload, and the encode
-    work happens exactly once per vector, at arrival — no periodic
-    re-index pass over the corpus.
-    """
-    from ..operators.similarity import ivfpq_encode_corpus
-
-    def transform(batch_df: DataFrame) -> DataFrame:
-        return ivfpq_encode_corpus(
-            batch_df, centroids, books, id_col=id_col, vec_col=vec_col, dim=dim
-        )
-
-    return ingest_store_stream(vectors, store_path, checkpoint_dir, transform)
-
-
-def probe_ivfpq_store(
-    spark,
-    store_path: str,
-    queries: DataFrame,
-    centroids,
-    books,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 4,
-    dim: int = 64,
-    refine: int = 3,
-):
-    """Answer top-k queries from the accreted IVF-PQ store: reads the
-    encoded rows and runs the SAME probe tail as the batch operator
-    (``ivfpq_probe_encoded``), so stream-built == batch-built by
-    construction."""
-    from ..operators.similarity import ivfpq_probe_encoded
-
-    encoded = read_ingest_store(spark, store_path).select(
-        id_col, "cell", "codes", vec_col
-    )
-    return ivfpq_probe_encoded(
-        encoded,
-        queries,
-        centroids,
-        books,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_probe=n_probe,
-        dim=dim,
-        refine=refine,
-    )
-
-
 def minhash_ingest_stream(
     docs: DataFrame,
     store_path: str,
@@ -503,9 +376,9 @@ def minhash_ingest_stream(
     once, at arrival. Only the banded candidate join + verify
     (:func:`...dedup.minhash_lsh_pairs_from_profiles`) runs at probe
     time, over profile rows (~num_perm ints + the shingle set per doc)
-    instead of the raw corpus. Same landing-leg shape as
-    :func:`vector_ingest_stream` (reference ``consumers/consumer1.py:40-49``
-    applied to signatures); probe parity with the one-shot batch
+    instead of the raw corpus. Same landing-leg shape as the vector
+    store (reference ``consumers/consumer1.py:40-49`` applied to
+    signatures); probe parity with the one-shot batch
     ``minhash_lsh_pairs`` on the union corpus is pinned by
     tests/test_streaming.py::test_minhash_ingest_stream_matches_batch.
 
@@ -678,19 +551,13 @@ def psi_vs_reference(
 ) -> DataFrame:
     """Population Stability Index of a live histogram against a reference
     histogram (both ``(bucket, n)`` tables, e.g. the landed first-half
-    histogram vs :func:`bucket_count_stream`'s running counts).
-
-    Same smoothing/rounding policy as the batch drift query
-    (Laplace +0.5 per present bucket, 9-decimal floor rounding, ordered
-    total), so a streamed histogram produces the batch query's exact PSI
-    (pinned by the stream==batch drift test). Input tables are
-    bucket-count-sized — every step here is trivially small; the heavy
-    lifting (the scan) already happened upstream.
+    histogram vs :func:`bucket_count_stream`'s running counts): the two
+    are merged into one ``(bucket, n_a, n_b)`` table, a bucket missing on
+    one side counting 0, and scored by the batch drift query's own PSI
+    tail (:func:`operators.monitoring.psi_table`), so a streamed
+    histogram produces the batch query's exact PSI (pinned by the
+    stream==batch drift test).
     """
-    from pyspark.sql.window import Window
-
-    from ..functions.numeric import display_round
-
     ref = reference.select(F.col("bucket"), F.col("n").alias("n_ref"))
     live = counts.select(F.col("bucket"), F.col("n").alias("n_live"))
     merged = ref.join(live, "bucket", "full").select(
@@ -698,24 +565,7 @@ def psi_vs_reference(
         F.coalesce("n_ref", F.lit(0)).alias("n_a"),
         F.coalesce("n_live", F.lit(0)).alias("n_b"),
     )
-    w = Window.partitionBy()
-    p_a = (F.col("n_a") + 0.5) / (F.sum("n_a").over(w) + 0.5 * n_buckets)
-    p_b = (F.col("n_b") + 0.5) / (F.sum("n_b").over(w) + 0.5 * n_buckets)
-    contrib = (p_a - p_b) * F.log(p_a / p_b)
-    enriched = merged.select(
-        "bucket",
-        "n_a",
-        "n_b",
-        display_round(p_a, 9).alias("p_a"),
-        display_round(p_b, 9).alias("p_b"),
-        display_round(contrib, 9).alias("psi_contrib"),
-    )
-    w_total = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return enriched.withColumn(
-        "psi_total", display_round(F.sum("psi_contrib").over(w_total), 9)
-    )
+    return ops.psi_table(merged, n_buckets)
 
 
 def rollup_ingest_stream(
@@ -854,35 +704,6 @@ def probe_profile_store(spark, store_path: str) -> DataFrame:
     )
 
 
-def changelog_ingest_stream(
-    changes: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-):
-    """Streaming ingest leg for CDC state: changelog rows arrive on a
-    stream and land verbatim in a per-micro-batch ``batch_id=N`` store;
-    the CURRENT state is materialized lazily by
-    :func:`probe_changelog_store` (one ``apply_changelog`` max_by pass
-    over the store) and kept small by
-    :func:`compact_changelog_store` (winner-per-key rewrite).
-
-    This is the incremental MERGE-INTO pattern on the same idempotent
-    store contract as :func:`vector_ingest_stream` /
-    :func:`minhash_ingest_stream`: replayed batches overwrite their own
-    ``batch_id`` directory, so checkpoint + idempotent writes give
-    exactly-once into the store, and latest-wins (a max over the
-    seq tuple) is insensitive to both replay duplication within a batch
-    replay and ARRIVAL order across batches — a late-arriving row with
-    an older sequence loses the max_by merge no matter when it lands,
-    which is what makes probe == one-shot batch ``apply_changelog`` on
-    the union log (pinned by
-    tests/test_streaming.py::test_changelog_ingest_stream_matches_batch).
-
-    Returns the DataStreamWriter (caller starts it).
-    """
-    return ingest_store_stream(changes, store_path, checkpoint_dir)
-
-
 def probe_changelog_store(
     spark,
     store_path: str,
@@ -892,7 +713,8 @@ def probe_changelog_store(
     delete_op: str = "D",
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """Current state of a :func:`changelog_ingest_stream` store: one
+    """Current state of a changelog store (verbatim
+    :func:`ingest_store_stream` rows): one
     latest-wins pass (``operators.changelog.apply_changelog``), tombstoned
     keys omitted.
 
@@ -932,7 +754,7 @@ def compact_changelog_store(
     Unlike :func:`compact_ingest_store` (row-preserving layout rewrite)
     this is row-REDUCING: store size becomes O(live keys + tombstones),
     not O(history). Writes to a NEW path — swap-on-success, same
-    contract as :func:`compact_vector_store`. Returns a reader on the
+    contract as :func:`compact_ingest_store`. Returns a reader on the
     compacted store."""
     from ..operators.changelog import apply_changelog
 
@@ -950,73 +772,9 @@ def compact_changelog_store(
 def read_ingest_store(spark, store_path: str) -> DataFrame:
     """Read any per-micro-batch ``batch_id=N`` ingest store, dropping the
     delivery bookkeeping column. The single definition of the store's
-    read shape — the named readers and :func:`compact_ingest_store` all
-    go through it so layout changes land everywhere at once."""
+    read shape — the probes and :func:`compact_ingest_store` all go
+    through it so layout changes land everywhere at once."""
     return spark.read.parquet(store_path).drop("batch_id")
-
-
-def read_minhash_store(spark, store_path: str) -> DataFrame:
-    """Read the profile store built by :func:`minhash_ingest_stream`
-    (the ``minhash_profiles`` layout, ready for
-    ``minhash_lsh_pairs_from_profiles``)."""
-    return read_ingest_store(spark, store_path)
-
-
-def read_vector_store(spark, store_path: str) -> DataFrame:
-    """Read the LSH candidate store built by :func:`vector_ingest_stream`
-    (the ``lsh_tag_corpus`` layout, ready for ``ann_lsh_topk_tagged``)."""
-    return read_ingest_store(spark, store_path)
-
-
-def _fs_total_bytes(spark, path: str, suffix: str = ".parquet") -> int:
-    """Recursive byte total of ``suffix`` files under ``path`` via the
-    Hadoop FileSystem API — works against any store Spark itself can
-    read (local, HDFS, object stores), unlike ``os.walk``, which only
-    sees the driver's local filesystem. Uses the JVM gateway, so classic
-    sessions only (same constraint as caching.py; Spark Connect exposes
-    no ``_jvm``)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    files = fs.listFiles(jpath, True)
-    total = 0
-    while files.hasNext():
-        status = files.next()
-        if status.getPath().getName().endswith(suffix):
-            total += status.getLen()
-    return total
-
-
-def compact_vector_store(
-    spark, store_path: str, compacted_path: str, target_file_bytes: int = 128 << 20
-) -> DataFrame:
-    """Compact the streaming ingest store: many small per-micro-batch
-    files -> few ~``target_file_bytes`` files clustered by
-    (table_idx, bucket).
-
-    A long-running ingest stream accretes one directory per micro-batch;
-    at scale that is the classic small-files problem (driver-side listing
-    cost + tiny scan tasks). Periodic compaction rewrites the store with
-    the output partition count sized from the store's actual bytes (the
-    ~128 MB-file rule) and hash-clustered on the probe join key, so
-    candidate rows for one bucket are contiguous in few files. Rows are
-    unchanged — probing the compacted store returns exactly the probe
-    results of the raw store (pinned by
-    tests/test_streaming.py::test_vector_store_compaction).
-
-    Writes to a NEW path (swap-on-success: the caller atomically points
-    readers at the compacted path and deletes the raw one after; an
-    in-place overwrite would race the running ingest stream).
-
-    Returns a reader on the compacted store.
-    """
-    return compact_ingest_store(
-        spark,
-        store_path,
-        compacted_path,
-        cluster_cols=["table_idx", "bucket"],
-        target_file_bytes=target_file_bytes,
-    )
 
 
 def compact_ingest_store(
@@ -1027,16 +785,26 @@ def compact_ingest_store(
     target_file_bytes: int = 128 << 20,
 ) -> DataFrame:
     """Generic compaction for any per-micro-batch ``batch_id=N`` ingest
-    store (vector tags, MinHash profiles, landed documents): rewrite the
-    accreted small files into ~``target_file_bytes`` files, optionally
-    hash-clustered on ``cluster_cols`` for probe locality. Row-preserving;
-    output count sized from the store's ACTUAL bytes via the Hadoop FS
-    API (works against object stores, not just the driver's local disk).
-    Writes to a NEW path — swap-on-success, see
-    :func:`compact_vector_store`."""
+    store (vector tags, MinHash profiles, landed documents): a long-running
+    ingest stream accretes one directory per micro-batch, the classic
+    small-files problem (driver-side listing cost + tiny scan tasks).
+    This rewrites the store into ~``target_file_bytes`` files, optionally
+    hash-clustered on ``cluster_cols`` (``["table_idx", "bucket"]`` for
+    the vector store, ``["cell"]`` for IVF-PQ) so one probe key's rows sit
+    in few files. Row-preserving, so probes return exactly what they
+    return on the raw store. The output count is sized from the store's
+    ACTUAL bytes (``sources.readers.fs_total_bytes``, which works against
+    any store Spark can read, not just the driver's local disk).
+
+    Writes to a NEW path (swap-on-success: the caller points readers at
+    the compacted path and deletes the raw one after; an in-place
+    overwrite would race the running ingest stream). Returns a reader on
+    the compacted store."""
     import math
 
-    total_bytes = _fs_total_bytes(spark, store_path)
+    from ..sources.readers import fs_total_bytes
+
+    total_bytes = fs_total_bytes(spark, store_path)
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
     df = read_ingest_store(spark, store_path)
     if cluster_cols:
@@ -1114,41 +882,14 @@ def rate_replay_stream(
     return rate.join(keyed, id_col)
 
 
-def heavy_hitter_ingest_stream(
-    stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    key_col: str,
-    capacity: int = 256,
-):
-    """Streaming ingest leg for BOUNDED-MEMORY heavy hitters: each
-    micro-batch reduces to its SpaceSaving summaries
-    (``operators.heavy_hitters.space_saving_partial`` — O(capacity) rows
-    per partition, never O(rows)) and lands in the idempotent
-    ``batch_id=N`` store; :func:`probe_heavy_hitter_store` merges the
-    accreted summaries into global (key, est, lo, hi) bounds with
-    ``lo <= true stream count <= hi``. The approximate sibling of
-    :func:`rollup_ingest_stream`: the rollup store is exact but O(keys);
-    this store is O(batches x partitions x capacity) regardless of how
-    many distinct keys the stream carries — the 100 TB top-k answer.
-
-    Seventh store on the :func:`ingest_store_stream` contract — one
-    transform, delivery semantics inherited.
-    """
-    from ..operators.heavy_hitters import space_saving_partial
-
-    def transform(batch_df: DataFrame) -> DataFrame:
-        return space_saving_partial(batch_df, key_col, capacity=capacity)
-
-    return ingest_store_stream(stream, store_path, checkpoint_dir, transform)
-
-
 def probe_heavy_hitter_store(spark, store_path: str) -> DataFrame:
-    """Global heavy-hitter bounds over a :func:`heavy_hitter_ingest_stream`
-    store. Summaries are identified by (batch_id, pid) — pids repeat
-    across micro-batches, so the probe keeps the partition-discovery
-    ``batch_id`` column instead of the usual :func:`read_ingest_store`
-    drop."""
+    """Global heavy-hitter bounds over a store of
+    ``operators.heavy_hitters.space_saving_partial`` summaries (the
+    :func:`ingest_store_stream` transform): ``lo <= true stream count <=
+    hi`` for every reported key. Summaries are identified by (batch_id,
+    pid) — pids repeat across micro-batches, so the probe keeps the
+    partition-discovery ``batch_id`` column instead of the usual
+    :func:`read_ingest_store` drop."""
     from ..operators.heavy_hitters import merge_summaries
 
     return merge_summaries(

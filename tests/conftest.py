@@ -13,16 +13,14 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 
 def pytest_collection_modifyitems(config, items):
-    """Process-level ITEM shard (r14 suite rebalance, VERDICT r13 #4 —
-    the parity name-shard generalized): SPARK_GRAFT_FILE_SHARD="s/n"
-    keeps collected items with index % n == s, so run_suite.sh can split
-    a single wait-bound file (test_streaming.py: most of its wall clock
-    is micro-batch trigger WAITS, which parallelize perfectly) across
-    pytest processes. Interleaved by collection index so every shard
-    draws from the whole file. Unset = everything (CI default and any
-    direct pytest run). Only set this for groups whose EVERY file is
-    meant to shard — unlike SPARK_GRAFT_PARITY_SHARD it applies to all
-    items the process collected (the suite-coverage pin in
+    """Process-level ITEM shard: SPARK_GRAFT_FILE_SHARD="s/n" keeps
+    collected items with index % n == s, so run_suite.sh can split a
+    single big file (test_oracle_parity.py; test_streaming.py, whose wall
+    clock is mostly micro-batch trigger WAITS) across pytest processes.
+    Interleaved by collection index so every shard draws from the whole
+    file. Unset = everything (CI default and any direct pytest run). It
+    applies to all items the process collected, so only set it for
+    groups whose EVERY file is meant to shard (the suite-coverage pin in
     test_suite_hygiene.py enforces that multi-listed files form complete
     0..n-1 covers)."""
     spec = os.environ.get("SPARK_GRAFT_FILE_SHARD")

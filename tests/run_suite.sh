@@ -5,13 +5,11 @@
 # (each pytest process holds ONE session-scoped local[8] SparkSession).
 # pytest-xdist is not installed in this container, so parallelism is eight
 # plain pytest processes over a fixed file partition, balanced by measured
-# wall time. Rebalanced r13 (VERDICT r12 #4: test_properties.py left the
-# plans group; test_oracle_parity.py — the biggest single file — splits in
-# two via SPARK_GRAFT_PARITY_SHARD=s/n name shards). Rebalanced again r14
-# (VERDICT r13 #4: test_streaming.py had become the 6:20 long pole — it is
-# trigger-WAIT bound, so its halves parallelize perfectly; it now splits in
-# two via the generalized SPARK_GRAFT_FILE_SHARD=s/n collection-item shard
-# in conftest.py, and test_profiling.py moved out of the 6:00 misc group).
+# wall time. A file too big for one group splits across groups with the
+# SPARK_GRAFT_FILE_SHARD=s/n collection-item shard in conftest.py:
+# test_oracle_parity.py (the biggest single file) and test_streaming.py
+# (trigger-WAIT bound, so its halves parallelize perfectly) each run in
+# two halves.
 # Streaming/stores groups spend most wall time waiting on micro-batch
 # triggers, so the CPU-bound groups oversubscribe 32 cores only
 # nominally. That slack is also why test_dedup_similarity.py — misc's
@@ -21,17 +19,13 @@
 # became the 6:05 pole); test_changelog.py lives in misc.
 # 8 x 8g driver heap fits the 128 GiB box.
 #
-# Per-group shard routing: shards[i] is the spec, shardenvs[i] names the
-# env var it feeds — SPARK_GRAFT_PARITY_SHARD shards test_oracle_parity.py
-# BY QUERY NAME inside a mixed group (other files in the group run whole);
-# SPARK_GRAFT_FILE_SHARD shards EVERY collected item of the process, so it
-# is only used for groups whose entire file list is meant to shard. The
-# suite-coverage pin (test_suite_hygiene.py) enforces that any multi-listed
-# file's specs form a SAME-ENV complete 0..n-1 cover and that every
-# member of a FILE_SHARD group is multi-listed. Both shard vars are
-# explicitly cleared per group (env NAME= — empty reads as unset in
-# both consumers) so a value exported in the caller's shell cannot
-# leak in and silently drop tests.
+# Per-group shard routing: shards[i] is group i's SPARK_GRAFT_FILE_SHARD
+# spec. It shards EVERY item the group's process collects, so a sharded
+# group lists only files meant to shard. The suite-coverage pin
+# (test_suite_hygiene.py) enforces that any multi-listed file's specs
+# form a complete 0..n-1 cover over identical file lists. The var is set
+# for every group (empty reads as unset) so a value exported in the
+# caller's shell cannot leak in and silently drop tests.
 #
 # The ninth group runs the benchmark's self-tests (perfbench/tests, its own
 # conftest and local[2] session): they import the alert jobs the engine
@@ -44,9 +38,9 @@ cd "$(dirname "$0")/.."
 export SPARK_GRAFT_DRIVER_MEM="${SPARK_GRAFT_DRIVER_MEM:-8g}"
 
 GROUP1="tests/test_streaming.py tests/test_dedup_similarity.py"
-GROUP2="tests/test_oracle_parity.py tests/test_reference_parity.py"
+GROUP2="tests/test_oracle_parity.py"
 GROUP3="tests/test_oracle_parity.py"
-GROUP4="tests/test_plans.py tests/test_skew.py"
+GROUP4="tests/test_plans.py tests/test_skew.py tests/test_reference_parity.py"
 GROUP5="tests/test_properties.py tests/test_profiling.py"
 GROUP6="tests/test_caching.py tests/test_changelog.py tests/test_cli.py \
 tests/test_suite_hygiene.py tests/test_joins.py \
@@ -60,13 +54,9 @@ pids=()
 names=(streaming-a oracle-a oracle-b plans properties misc stores streaming-b perfbench)
 groups=("$GROUP1" "$GROUP2" "$GROUP3" "$GROUP4" "$GROUP5" "$GROUP6" "$GROUP7" "$GROUP8" "$GROUP9")
 shards=("0/2" "0/2" "1/2" "" "" "" "" "1/2" "")
-shardenvs=(SPARK_GRAFT_FILE_SHARD SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_PARITY_SHARD \
-SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_PARITY_SHARD \
-SPARK_GRAFT_PARITY_SHARD SPARK_GRAFT_FILE_SHARD SPARK_GRAFT_PARITY_SHARD)
 for i in "${!groups[@]}"; do
     # shellcheck disable=SC2086  # word-splitting the file list is the point
-    env SPARK_GRAFT_FILE_SHARD= SPARK_GRAFT_PARITY_SHARD= \
-        "${shardenvs[$i]}=${shards[$i]}" \
+    env SPARK_GRAFT_FILE_SHARD="${shards[$i]}" \
         python -m pytest ${groups[$i]} -q --no-header \
         > "/tmp/rtsm-suite-${names[$i]}.log" 2>&1 &
     pids+=($!)

@@ -43,11 +43,12 @@ def test_cache_scope_clears_everything(spark):
 
 
 def test_runtime_confs_respect_user_shuffle_partitions(spark):
-    """apply_runtime_confs resizes ONLY the untouched 200 default, to the
-    session's task slots (state) and 2x slots (batch, initialPartitionNum):
-    a session whose owner set shuffle partitions (a sized cluster) must
-    never be clobbered, and gets no initialPartitionNum, so the owner's
-    count governs batch and state alike."""
+    """apply_runtime_confs sizes shuffle partitions ONLY when nobody set
+    them, to the session's task slots (state) and 2x slots (batch,
+    initialPartitionNum): a session whose owner set shuffle partitions (a
+    sized cluster) must never be clobbered, and gets no
+    initialPartitionNum, so the owner's count governs batch and state
+    alike."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
         INITIAL_PARTITION_NUM,
         apply_runtime_confs,
@@ -56,7 +57,7 @@ def test_runtime_confs_respect_user_shuffle_partitions(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_initial = spark.conf.get(INITIAL_PARTITION_NUM, None)
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "200")
+        spark.conf.unset("spark.sql.shuffle.partitions")
         apply_runtime_confs(spark)
         slots = spark.sparkContext.defaultParallelism
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(slots)
@@ -68,18 +69,12 @@ def test_runtime_confs_respect_user_shuffle_partitions(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "1000"
         assert spark.conf.get(INITIAL_PARTITION_NUM, None) is None
 
-        # An owner who DELIBERATELY wants exactly 200 (indistinguishable
-        # from the untouched default) opts out via env var.
-        import os as _os
-
+        # An owner's explicit 200, Spark's default value, is the owner's
+        # choice too: the conf API tells it apart from an unset conf.
         spark.conf.set("spark.sql.shuffle.partitions", "200")
-        _os.environ["SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS"] = "1"
-        try:
-            apply_runtime_confs(spark)
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
-            assert spark.conf.get(INITIAL_PARTITION_NUM, None) is None
-        finally:
-            del _os.environ["SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS"]
+        apply_runtime_confs(spark)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert spark.conf.get(INITIAL_PARTITION_NUM, None) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if prev_initial is None:

@@ -7,8 +7,6 @@ float last-ulp noise are also failures (the driver hashes values).
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries import (
@@ -22,22 +20,7 @@ from .oracle_utils import compare, duckdb_conn
 _QUERIES = all_queries()
 _ORACLES = all_oracles()
 
-
-def _shard(names: list[str]) -> list[str]:
-    """Optional process-level shard (r13 suite rebalance, VERDICT r12
-    #4): SPARK_GRAFT_PARITY_SHARD="s/n" keeps names with index % n == s,
-    so run_suite.sh can split this file — the suite's biggest single
-    group — across pytest processes. Interleaved by index so both
-    shards draw from every query family; unset = everything (CI default
-    and any direct `pytest tests/test_oracle_parity.py` run)."""
-    spec = os.environ.get("SPARK_GRAFT_PARITY_SHARD")
-    if not spec:
-        return names
-    s, n = (int(x) for x in spec.split("/"))
-    return [name for i, name in enumerate(names) if i % n == s]
-
-
-_SHARD_NAMES = _shard(sorted(_ORACLES))
+_NAMES = sorted(_ORACLES)
 
 
 @pytest.fixture(scope="module")
@@ -51,14 +34,14 @@ def test_every_oracle_has_query():
     assert set(_ORACLES) <= set(_QUERIES)
 
 
-@pytest.mark.parametrize("name", _SHARD_NAMES)
+@pytest.mark.parametrize("name", _NAMES)
 def test_oracle_parity(spark, duck, name):
     df = _QUERIES[name](spark, SF_ORACLE)
     problems = compare(df, duck, _ORACLES[name])
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
-@pytest.mark.parametrize("name", _SHARD_NAMES)
+@pytest.mark.parametrize("name", _NAMES)
 def test_oracle_output_types_are_hashable(duck, name):
     """No oracle may expose a raw DuckDB ``sum()`` in its output: DuckDB
     widens integer sums to HUGEINT (int128), which the round driver's

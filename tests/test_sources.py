@@ -451,9 +451,7 @@ def test_file_layout_report_agrees_with_fs_walk(spark, tmp_path):
     Hadoop FileSystem walk — must account for the same bytes."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.sources.readers import (
         file_layout_report,
-    )
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.jobs import (
-        _fs_total_bytes,
+        fs_total_bytes,
     )
 
     store = str(tmp_path / "xwalk")
@@ -461,7 +459,7 @@ def test_file_layout_report_agrees_with_fs_walk(spark, tmp_path):
     report_total = sum(
         r.total_bytes for r in file_layout_report(spark, store).collect()
     )
-    assert report_total == _fs_total_bytes(spark, store)
+    assert report_total == fs_total_bytes(spark, store)
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import shutil
 import time
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,6 +35,7 @@ def test_vector_ingest_stream_matches_batch(spark, tmp_path):
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.similarity import (
         ann_lsh_topk,
         ann_lsh_topk_tagged,
+        lsh_tag_corpus,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -54,15 +56,15 @@ def test_vector_ingest_stream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/b*")
     )
-    q = jobs.vector_ingest_stream(
-        stream, store, checkpoint_dir=str(tmp_path / "vec_ckpt")
+    q = jobs.ingest_store_stream(
+        stream, store, str(tmp_path / "vec_ckpt"), lsh_tag_corpus
     ).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
 
-    tagged = jobs.read_vector_store(spark, store)
+    tagged = jobs.read_ingest_store(spark, store)
     streamed = sorted(
         tuple(r) for r in ann_lsh_topk_tagged(tagged, queries_df, k=5).collect()
     )
@@ -105,7 +107,7 @@ def test_minhash_ingest_stream_matches_batch(spark, tmp_path):
     finally:
         q.stop()
 
-    profiles = jobs.read_minhash_store(spark, store)
+    profiles = jobs.read_ingest_store(spark, store)
     streamed = sorted(
         (r.a_id, r.b_id, round(r.jaccard, 12))
         for r in minhash_lsh_pairs_from_profiles(profiles, threshold=0.8).collect()
@@ -201,7 +203,7 @@ def test_minhash_ingest_checkpoint_restart(spark, tmp_path):
     finally:
         q.stop()
 
-    profiles = jobs.read_minhash_store(spark, store)
+    profiles = jobs.read_ingest_store(spark, store)
     # exactly one profile row per shingled doc — nothing lost, nothing doubled
     assert profiles.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
     streamed = sorted(
@@ -245,7 +247,7 @@ def test_minhash_store_compaction(spark, tmp_path):
     finally:
         q.stop()
 
-    raw = jobs.read_minhash_store(spark, store)
+    raw = jobs.read_ingest_store(spark, store)
     compacted_path = str(tmp_path / "mhc_store_compacted")
     compacted = jobs.compact_ingest_store(spark, store, compacted_path)
 
@@ -271,6 +273,7 @@ def test_vector_store_compaction(spark, tmp_path):
 
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.similarity import (
         ann_lsh_topk_tagged,
+        lsh_tag_corpus,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -287,17 +290,19 @@ def test_vector_store_compaction(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/b*")
     )
-    q = jobs.vector_ingest_stream(
-        stream, store, checkpoint_dir=str(tmp_path / "cvec_ckpt")
+    q = jobs.ingest_store_stream(
+        stream, store, str(tmp_path / "cvec_ckpt"), lsh_tag_corpus
     ).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
 
-    raw = jobs.read_vector_store(spark, store)
+    raw = jobs.read_ingest_store(spark, store)
     compacted_path = str(tmp_path / "cvec_store_compacted")
-    compacted = jobs.compact_vector_store(spark, store, compacted_path)
+    compacted = jobs.compact_ingest_store(
+        spark, store, compacted_path, cluster_cols=["table_idx", "bucket"]
+    )
 
     raw_files = _glob.glob(f"{store}/*/*.parquet")
     compacted_files = _glob.glob(f"{compacted_path}/*.parquet")
@@ -335,7 +340,7 @@ def test_changelog_ingest_stream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/b*")
     )
-    q = jobs.changelog_ingest_stream(
+    q = jobs.ingest_store_stream(
         stream, store, checkpoint_dir=str(tmp_path / "cdc_ckpt")
     ).start()
     try:
@@ -471,7 +476,7 @@ def test_changelog_ingest_checkpoint_restart(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{src}/b*")
         )
-        return jobs.changelog_ingest_stream(stream, store, checkpoint_dir=ckpt).start()
+        return jobs.ingest_store_stream(stream, store, checkpoint_dir=ckpt).start()
 
     changes.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(f"{src}/b0")
     q = start()
@@ -556,8 +561,11 @@ def test_heavy_hitter_store_bounds_and_coverage(spark, tmp_path):
     every true heavy hitter (count > sum of summary floors) must be
     present — with summary size O(capacity) per partition per batch, not
     O(distinct keys)."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.heavy_hitters import (
+        space_saving_partial,
+    )
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.jobs import (
-        heavy_hitter_ingest_stream,
+        ingest_store_stream,
         probe_heavy_hitter_store,
     )
 
@@ -574,7 +582,8 @@ def test_heavy_hitter_store_bounds_and_coverage(spark, tmp_path):
     rows.filter(~half).coalesce(2).write.mode("append").parquet(src)
     stream = spark.readStream.schema(rows.schema).option("maxFilesPerTrigger", 1).parquet(src)
     store, cp = str(tmp_path / "store"), str(tmp_path / "cp")
-    q = heavy_hitter_ingest_stream(stream, store, cp, "key", capacity=64).start()
+    summarize = partial(space_saving_partial, key_col="key", capacity=64)
+    q = ingest_store_stream(stream, store, cp, summarize).start()
     q.processAllAvailable()
     q.stop()
 
@@ -602,8 +611,11 @@ def test_heavy_hitter_ingest_checkpoint_restart(spark, tmp_path):
     uninterrupted run's (no lost and no duplicated summaries — the
     shared idempotent-store contract), and the merged bounds must still
     bracket every exact count."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.heavy_hitters import (
+        space_saving_partial,
+    )
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.streaming.jobs import (
-        heavy_hitter_ingest_stream,
+        ingest_store_stream,
         probe_heavy_hitter_store,
     )
 
@@ -629,7 +641,8 @@ def test_heavy_hitter_ingest_checkpoint_restart(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{src}/b*")
         )
-        return heavy_hitter_ingest_stream(stream, store, ckpt, "key", capacity=48).start()
+        summarize = partial(space_saving_partial, key_col="key", capacity=48)
+        return ingest_store_stream(stream, store, ckpt, summarize).start()
 
     rows.filter(F.col("event_id") < 10000).coalesce(2).write.parquet(f"{src}/b0")
     q = start()
@@ -664,6 +677,8 @@ def test_ivfpq_ingest_stream_matches_batch(spark, tmp_path):
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.similarity import (
         ann_ivfpq_topk,
         ivf_centroids,
+        ivfpq_encode_corpus,
+        ivfpq_probe_encoded,
         pq_codebooks,
     )
 
@@ -687,9 +702,8 @@ def test_ivfpq_ingest_stream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/b*")
     )
-    q = jobs.ivfpq_ingest_stream(
-        stream, store, str(tmp_path / "pq_ckpt"), centroids, books
-    ).start()
+    encode = partial(ivfpq_encode_corpus, centroids=centroids, books=books)
+    q = jobs.ingest_store_stream(stream, store, str(tmp_path / "pq_ckpt"), encode).start()
     try:
         q.processAllAvailable()
     finally:
@@ -697,8 +711,8 @@ def test_ivfpq_ingest_stream_matches_batch(spark, tmp_path):
 
     streamed = sorted(
         tuple(r)
-        for r in jobs.probe_ivfpq_store(
-            spark, store, queries_df, centroids, books, k=5
+        for r in ivfpq_probe_encoded(
+            jobs.read_ingest_store(spark, store), queries_df, centroids, books, k=5
         ).collect()
     )
     batch = sorted(
@@ -713,6 +727,7 @@ def test_ivfpq_store_compaction_preserves_probe(spark, tmp_path):
     probe answer."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.operators.similarity import (
         ivf_centroids,
+        ivfpq_encode_corpus,
         ivfpq_probe_encoded,
         pq_codebooks,
     )
@@ -734,9 +749,8 @@ def test_ivfpq_store_compaction_preserves_probe(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/b*")
     )
-    q = jobs.ivfpq_ingest_stream(
-        stream, store, str(tmp_path / "ckpt"), centroids, books
-    ).start()
+    encode = partial(ivfpq_encode_corpus, centroids=centroids, books=books)
+    q = jobs.ingest_store_stream(stream, store, str(tmp_path / "ckpt"), encode).start()
     try:
         q.processAllAvailable()
     finally:
@@ -744,8 +758,8 @@ def test_ivfpq_store_compaction_preserves_probe(spark, tmp_path):
 
     before = sorted(
         tuple(r)
-        for r in jobs.probe_ivfpq_store(
-            spark, store, queries_df, centroids, books, k=5
+        for r in ivfpq_probe_encoded(
+            jobs.read_ingest_store(spark, store), queries_df, centroids, books, k=5
         ).collect()
     )
     compacted = jobs.compact_ingest_store(
@@ -1051,7 +1065,7 @@ def test_curation_stream_feeds_minhash_store(spark, tmp_path):
     finally:
         q.stop()
 
-    profiles = jobs.read_minhash_store(spark, store)
+    profiles = jobs.read_ingest_store(spark, store)
     streamed = sorted(
         (r.a_id, r.b_id, round(r.jaccard, 12))
         for r in dedup_ops.minhash_lsh_pairs_from_profiles(

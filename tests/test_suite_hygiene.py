@@ -55,11 +55,11 @@ def test_suite_runner_covers_every_test_file():
     a group would silently never run in the suite lane (found nearly-live
     in r07: test_streaming_stores.py split out of test_streaming.py had to
     be added to a group by hand). Pin: every tests/test_*.py appears in
-    the runner exactly once — OR, since the r13 rebalance, in several
-    groups whose SPARK_GRAFT_PARITY_SHARD specs form a COMPLETE cover
-    (same n, shards 0..n-1): a duplicate without complete shards would
-    either re-run tests (wasted wall) or, worse, a missing shard would
-    silently never run part of the file."""
+    the runner exactly once, unsharded — OR in several groups whose
+    SPARK_GRAFT_FILE_SHARD specs form a COMPLETE cover (same n, shards
+    0..n-1): a duplicate without complete shards would either re-run
+    tests (wasted wall) or, worse, a missing shard would silently never
+    run part of the file."""
     script = open(os.path.join(REPO, "tests", "run_suite.sh")).read()
     listed = re.findall(r"tests/(test_\w+\.py)", script)
     on_disk = sorted(
@@ -70,29 +70,17 @@ def test_suite_runner_covers_every_test_file():
 
     shard_m = re.search(r"\bshards=\(([^)]*)\)", script)
     shard_list = re.findall(r'"([^"]*)"', shard_m.group(1)) if shard_m else []
-    env_m = re.search(r"\bshardenvs=\(([^)]*)\)", script)
-    env_list = re.findall(r"SPARK_GRAFT_\w+", env_m.group(1)) if env_m else []
-    # (spec, env) per group, per file. A spec only shards a file when its
-    # env var actually applies to that file: FILE_SHARD shards every file
-    # in the group; PARITY_SHARD shards ONLY test_oracle_parity.py (the
-    # name-level shard inside the file) — r14 review: treating the two as
-    # interchangeable let a parity-spec'd group masquerade as one half of
-    # a FILE_SHARD cover.
-    file_shards: dict[str, list[tuple[str, str, int]]] = {}
+    # (spec, group) per file: a group's spec shards every file it lists.
+    file_shards: dict[str, list[tuple[str, int]]] = {}
     group_files: dict[int, list[str]] = {}
     for num, body in re.findall(r'GROUP(\d+)="([^"]*)"', script, re.S):
         idx = int(num) - 1
         spec = shard_list[idx] if idx < len(shard_list) else ""
-        env = env_list[idx] if idx < len(env_list) else ""
         group_files[idx] = re.findall(r"tests/(test_\w+\.py)", body)
         for f in group_files[idx]:
-            applies = spec and (
-                env == "SPARK_GRAFT_FILE_SHARD"
-                or (env == "SPARK_GRAFT_PARITY_SHARD" and f == "test_oracle_parity.py")
-            )
-            file_shards.setdefault(f, []).append((spec if applies else "", env, idx))
+            file_shards.setdefault(f, []).append((spec, idx))
     for f, entries in file_shards.items():
-        specs = [s for s, _, _ in entries]
+        specs = [s for s, _ in entries]
         if len(entries) == 1:
             # Single-listed: it must NOT be sharded, or part of the file
             # silently never runs (r14 review: the old pin skipped this).
@@ -103,32 +91,24 @@ def test_suite_runner_covers_every_test_file():
             continue
         parsed = sorted(tuple(int(x) for x in s.split("/")) for s in specs if s)
         assert len(parsed) == len(specs), (
-            f"{f} listed in more than one group without applicable shard "
-            f"specs (specs+envs: {entries})"
+            f"{f} listed in more than one group without shard specs "
+            f"(specs per group: {entries})"
         )
         ns = {n for _, n in parsed}
         assert len(ns) == 1 and [s for s, _ in parsed] == list(range(parsed[0][1])), (
             f"{f}: shard specs {specs} do not form a complete 0..n-1 cover"
         )
-        envs = {e for s, e, _ in entries if s}
-        assert len(envs) == 1, (
-            f"{f}: cover mixes shard env vars {envs} — the shards are not "
-            "complements of the same partitioning"
-        )
-        # FILE_SHARD shards by COLLECTION INDEX across the whole group
+        # The shard is by COLLECTION INDEX across the whole group
         # (conftest): a 0..n-1 spec cover only covers the ITEMS if every
         # group in the cover collects the identical item sequence, i.e.
-        # byte-identical file lists, order included (ADVICE r15 #1). A
-        # reordered twin would drop some items into no shard while this
-        # pin stayed green.
-        if envs == {"SPARK_GRAFT_FILE_SHARD"}:
-            lists = {i: group_files[i] for _, _, i in entries}
-            first = next(iter(lists.values()))
-            assert all(fl == first for fl in lists.values()), (
-                f"{f}: FILE_SHARD cover groups {sorted(lists)} list "
-                f"different file sequences — the index-based shards are "
-                f"not complements: {lists}"
-            )
+        # byte-identical file lists, order included. A reordered twin
+        # would drop some items into no shard while this pin stayed green.
+        lists = {i: group_files[i] for _, i in entries}
+        first = next(iter(lists.values()))
+        assert all(fl == first for fl in lists.values()), (
+            f"{f}: shard cover groups {sorted(lists)} list different file "
+            f"sequences — the index-based shards are not complements: {lists}"
+        )
 
 
 def test_no_shadowed_test_definitions():
