@@ -12,6 +12,12 @@ epoch-floor window arithmetic, verified exact vs Spark 4.1.2).
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -102,6 +108,14 @@ def monitor_cpu_mem_alerts_bucketed(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+@functools.cache
+def _landing_root() -> str:
+    """This process's directory for bucketed landings, removed at exit."""
+    root = tempfile.mkdtemp(prefix=f"rtsm_bucketed_{os.getpid()}_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _bucketed_landing(spark, sf_dir: str, narrows: dict) -> dict[str, DataFrame]:
     """Land narrow metric streams as entity-bucketed tables (the one-time
     ingest cost of the zero-exchange layout) and return readers on them.
@@ -117,13 +131,14 @@ def _bucketed_landing(spark, sf_dir: str, narrows: dict) -> dict[str, DataFrame]
 
     Table names and paths carry an sf tag (different scale factors never
     collide in one catalog) AND the process id — two concurrent drivers
-    (e.g. a bench run and a correctness run) land to disjoint /tmp paths
-    instead of racing overwrites on a shared one. Leftover per-pid dirs
-    are ordinary /tmp garbage; a production deployment would land into a
-    governed warehouse path instead.
+    (e.g. a bench run and a correctness run) land to disjoint paths
+    instead of racing overwrites on a shared one. The tables live under
+    one temporary directory per process (:func:`_landing_root`), removed
+    when the process exits, as the session catalog that names them goes
+    with it; a production deployment would land into a governed warehouse
+    path instead.
     """
     import hashlib as _hashlib
-    import os as _os
     import re as _re
 
     from ..sources.readers import write_bucketed_table
@@ -134,13 +149,13 @@ def _bucketed_landing(spark, sf_dir: str, narrows: dict) -> dict[str, DataFrame]
     # other's data. (Re-generating the files IN PLACE mid-session still
     # reuses the landing — inherent to amortization, as with any
     # materialized view over mutated source files.)
-    abs_dir = _os.path.abspath(sf_dir.rstrip("/"))
+    abs_dir = os.path.abspath(sf_dir.rstrip("/"))
     tag = (
-        _re.sub(r"[^0-9A-Za-z]+", "_", _os.path.basename(abs_dir))
+        _re.sub(r"[^0-9A-Za-z]+", "_", os.path.basename(abs_dir))
         + "_"
         + _hashlib.md5(abs_dir.encode()).hexdigest()[:8]
     )
-    pid = _os.getpid()
+    pid = os.getpid()
     n_buckets = 32
     landed = {}
     ev = None
@@ -159,7 +174,7 @@ def _bucketed_landing(spark, sf_dir: str, narrows: dict) -> dict[str, DataFrame]
                 ["user_id"],
                 n_buckets=n_buckets,
                 sort_cols=["user_id", "ts"],
-                path=f"/tmp/rtsm_bucketed_{pid}/{tag}/{name}",
+                path=f"{_landing_root()}/{tag}/{name}",
             )
         landed[name] = spark.table(tbl)
     return landed

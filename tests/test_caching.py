@@ -19,6 +19,8 @@ from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spar
 from .conftest import SF_SMOKE
 from .fixtures import FILE_CONTEXT_MANAGER, checkpoint_manager
 
+BUFFER_KEYS = ("spark.buffer.pageSize", "spark.broadcast.blockSize")
+
 
 def test_released_evicts_operator_internal_persist(spark):
     spark.catalog.clearCache()
@@ -129,16 +131,52 @@ def test_local_session_writes_checkpoints_through_filesystem_manager(spark, tmp_
         assert managed(master) is None, master
 
 
-def test_get_spark_keeps_a_fetched_sessions_partition_counts(spark):
+def test_get_spark_keeps_a_fetched_sessions_partition_counts(spark, monkeypatch):
     """get_spark on a running session (the CLI roles call it in-process)
     fetches it without resizing: its master, and so its task slots, is
-    already fixed, and its owner's partition counts stay."""
+    already fixed, and so is its heap; its owner's partition counts and
+    buffer sizes stay."""
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
         INITIAL_PARTITION_NUM,
         get_spark,
     )
 
-    keys = ("spark.sql.shuffle.partitions", INITIAL_PARTITION_NUM)
+    keys = ("spark.sql.shuffle.partitions", INITIAL_PARTITION_NUM) + BUFFER_KEYS
     before = [spark.conf.get(k) for k in keys]
+    page_before = page_size_bytes(spark)
+    # A heap that would size a new session's pages differently (8m).
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "64g")
     assert get_spark("rtsm-refetch", cpus=2, shuffle_partitions=3) is spark
     assert [spark.conf.get(k) for k in keys] == before
+    assert page_size_bytes(spark) == page_before
+
+
+def page_size_bytes(spark) -> int:
+    return spark._jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes()
+
+
+def test_buffer_confs_cover_unified_memory_with_small_pages():
+    """The page is the smallest power of two of at least 2 MB whose 8,192
+    page-table entries still cover the unified memory, so a task can use
+    all of it; broadcast blocks stay below half a 1 MB G1 region."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.session import (
+        buffer_confs,
+    )
+
+    mb = 1024 * 1024
+    for heap, heap_mb, page_mb in (("2g", 2048, 2), ("16g", 16384, 2), ("64g", 65536, 8)):
+        confs = buffer_confs(heap)
+        page = int(confs["spark.buffer.pageSize"].removesuffix("m")) * mb
+        unified = (heap_mb - 300) * mb * 0.6
+        assert page == page_mb * mb, (heap, confs)
+        assert page >= 2 * mb and 8192 * page >= unified, heap
+        assert page == 2 * mb or 8192 * page // 2 < unified, heap  # the smallest such
+        assert confs["spark.broadcast.blockSize"] == "256k"
+
+
+def test_session_sizes_pages_and_broadcast_blocks_for_micro_batches(spark):
+    """The suite's ``local[8]`` session (8g-16g heap) runs 2 MB Tungsten
+    pages, where Spark's heap-derived default would be 32-64 MB, and
+    256 KB broadcast blocks instead of 4 MB."""
+    assert page_size_bytes(spark) == 2 * 1024 * 1024
+    assert spark.sparkContext.getConf().get("spark.broadcast.blockSize") == "256k"

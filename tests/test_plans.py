@@ -12,6 +12,11 @@ no job runs.
 
 from __future__ import annotations
 
+import glob
+import os
+import subprocess
+import sys
+
 import pytest
 
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans import (
@@ -256,6 +261,41 @@ def test_bucketed_landing_distinct_dirs_same_basename(spark, monkeypatch, tmp_pa
     monq.monitor_cpu_mem_alerts_bucketed(spark, str(tmp_path / "runB" / "sfX"))
     # each dir lands its own cpu+mem pair under a path-specific tag
     assert len(tables) == 4 and len(set(tables)) == 4, tables
+
+
+def test_bucketed_landing_removed_at_exit(tmp_path):
+    """A process that lands the bucketed layout leaves nothing behind once
+    it exits: the landed tables live under one temporary directory per
+    process, removed at exit."""
+    script = (
+        "import glob, os, tempfile\n"
+        "from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark"
+        ".session import get_spark\n"
+        "from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark"
+        ".queries.monitoring import monitor_cpu_mem_alerts_bucketed\n"
+        f"monitor_cpu_mem_alerts_bucketed(get_spark('rtsm-landing', cpus=1), {SF_DIR!r}).count()\n"
+        "pattern = f'rtsm_bucketed_{os.getpid()}*'\n"
+        "landed = glob.glob(os.path.join(tempfile.gettempdir(), pattern))"
+        " + glob.glob(os.path.join('/tmp', pattern))\n"
+        "print(os.getpid(), len(landed))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYTHONPATH": root,
+        "TMPDIR": str(tmp_path),
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    pid, n_landed = out.stdout.split()[-2:]
+    assert int(n_landed) == 1  # the landing existed while the process ran
+    pattern = f"rtsm_bucketed_{pid}*"
+    assert glob.glob(os.path.join(tmp_path, pattern)) == []
+    assert glob.glob(os.path.join("/tmp", pattern)) == []
 
 
 def test_curation_pipeline_no_nested_loops(reports):
