@@ -70,26 +70,6 @@ class PipelineConfig:
 DEFAULT_CONFIG = PipelineConfig()
 
 
-def preflights_enabled() -> bool:
-    """Whether warning-only pre-flight guardrails (noise-floor /
-    signature-saturation estimates) may run eager Spark jobs at query
-    CONSTRUCTION time. Default on — the guardrails are cheap bounded
-    sample jobs and benches are measured with them in place. Set
-    ``SPARK_GRAFT_PREFLIGHT=0`` for explain-only / dry-run / plan-census
-    flows where construction must stay lazy (ADVICE r10 #2). Gating a
-    pre-flight NEVER changes a query's plan or output — only whether the
-    advisory warning can fire; load-bearing derivations (occupancy-held
-    LSH widths, noise-floor-bounded thresholds) ignore this flag.
-    """
-    import os
-
-    return os.environ.get("SPARK_GRAFT_PREFLIGHT", "1").lower() not in (
-        "0",
-        "false",
-        "off",
-    )
-
-
 def from_yaml(path: str) -> PipelineConfig:
     """Load a reference-layout ``config.yaml`` (so an existing user's config
     file works verbatim: kafka.broker_ip/topics, spark_jobs.window_duration/

@@ -26,8 +26,6 @@ The threshold is a constant, 1 GiB of scanned input bytes: every testdata
 SF scans well under it, so bench plans are the measured window form, while
 any corpus where hot-key skew could bite (≫ the threshold on one machine's
 worth of input) plans the skew-splittable join form.
-``SPARK_GRAFT_HOT_KEY_MODE`` (window|join|auto) overrides outright — also
-how the equivalence tests drive both plans over the same data.
 """
 
 from __future__ import annotations
@@ -68,7 +66,4 @@ def hot_key_agg_mode(df: DataFrame) -> str:
     attached to the rows of an UNBOUNDED-frequency key column. See the
     module docstring for the regime analysis.
     """
-    mode = os.environ.get("SPARK_GRAFT_HOT_KEY_MODE", "auto")
-    if mode in ("window", "join"):
-        return mode
     return "window" if _input_bytes(df) < HOT_KEY_JOIN_BYTES else "join"

@@ -184,9 +184,8 @@ def resolve_noise_floor_bound(
     ``hold_occupancy``: the configured value is the floor, the derived
     value takes over exactly where the configured one stops scaling.
 
-    Returns (effective_threshold, fired). Not gated by
-    ``SPARK_GRAFT_PREFLIGHT`` — when a caller opts in, this is
-    load-bearing plan derivation, not an advisory warning.
+    Returns (effective_threshold, fired). Unlike the warning-only
+    pre-flights, this is load-bearing plan derivation.
     """
     if n_rows is None:
         n_rows = corpus_count(vectors, id_col)
@@ -232,15 +231,9 @@ def warn_if_threshold_in_noise_floor(
     dim=768 (production text embeddings) sd ~ 0.036 and a 0.45 threshold
     clears ~12 sigma, so real corpora pass silently.
 
-    Skipped (returns inf, no Spark job) when ``SPARK_GRAFT_PREFLIGHT=0``
-    — explain-only / dry-run flows must not execute work at query
-    construction time (ADVICE r10 #2). Warning-only: gating never
-    changes a plan or output.
+    It runs a bounded sample job when called, at query construction time.
+    Warning-only: it never changes a plan or output.
     """
-    from ..config import preflights_enabled
-
-    if not preflights_enabled():
-        return math.inf
     mean, sd = _noise_floor_cached(vectors, id_col, vec_col, sample)
     if sd == 0.0:
         return math.inf

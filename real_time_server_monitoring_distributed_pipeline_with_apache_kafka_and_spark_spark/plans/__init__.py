@@ -11,9 +11,6 @@ same way wrong results do.
 """
 
 from .inspect import (
-    broadcast_join_count,
-    codegen_stage_count,
-    count_exchanges,
     formatted_plan,
     plan_report,
     pushed_filters,
@@ -25,7 +22,4 @@ __all__ = [
     "plan_report",
     "pushed_filters",
     "read_schema_columns",
-    "count_exchanges",
-    "broadcast_join_count",
-    "codegen_stage_count",
 ]

@@ -8,10 +8,9 @@ difference between a job that runs and one that doesn't:
   never deserialized, row groups skipped via min/max stats.
 - ``read_schema_columns``: column pruning — a 7-column scan for a
   2-column query pays 3.5x the I/O.
-- ``count_exchanges``: every exchange is a full shuffle of its input;
-  the dominant cost at scale.
-- ``broadcast_join_count``: dim joins that avoid shuffling the fact side.
-- ``codegen_stage_count``: fewer, wider WholeStageCodegen spans = less
+- ``plan_report``: those two plus node counts. Every exchange is a full
+  shuffle of its input, the dominant cost at scale; broadcast joins avoid
+  shuffling the fact side; fewer, wider WholeStageCodegen spans mean less
   row materialization between operators.
 """
 
@@ -63,33 +62,6 @@ def _exchange_node_ids(plan: str, node_name: str) -> set[str]:
     return set(re.findall(rf"\((\d+)\)\s+{re.escape(node_name)}(?![\w])", plan))
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Number of Exchange operators (shuffles + broadcasts) in the plan."""
-    plan = formatted_plan(df)
-    return len(_exchange_node_ids(plan, "Exchange")) + len(
-        _exchange_node_ids(plan, "BroadcastExchange")
-    )
-
-
-def shuffle_exchange_count(df: DataFrame) -> int:
-    """Shuffle exchanges only (node name exactly ``Exchange``), explicitly
-    excluding ``BroadcastExchange`` which moves only the small side."""
-    return len(_exchange_node_ids(formatted_plan(df), "Exchange"))
-
-
-def broadcast_exchange_count(df: DataFrame) -> int:
-    """BroadcastExchange operators only."""
-    return len(_exchange_node_ids(formatted_plan(df), "BroadcastExchange"))
-
-
-def broadcast_join_count(df: DataFrame) -> int:
-    return len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", formatted_plan(df)))
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))
-
-
 def plan_report(df: DataFrame) -> dict:
     """One-call summary used by tests and by hand during tuning."""
     plan = formatted_plan(df)
@@ -101,7 +73,7 @@ def plan_report(df: DataFrame) -> dict:
         "broadcast_joins": len(re.findall(r"BroadcastHashJoin", plan)),
         "sort_merge_joins": len(re.findall(r"SortMergeJoin", plan)),
         "nested_loop_joins": len(re.findall(r"BroadcastNestedLoopJoin|CartesianProduct", plan)),
-        "codegen_stages": codegen_stage_count(df),
+        "codegen_stages": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
         # Every Python-stage physical node Spark 4 can plan, so none is
         # invisible to the census (found r11: the MMR rerank planned with
         # python_stages=0 because applyInPandas/FlatMapGroupsInPandas

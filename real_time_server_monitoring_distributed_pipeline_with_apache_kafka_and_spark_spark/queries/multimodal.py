@@ -101,14 +101,9 @@ def _preflight_signature_saturation(docs: DataFrame, max_hamming: int = 6) -> No
     sampled hamming<=t collision rate implies super-linear pair output at
     this corpus size. The probe size and the estimator's ``sample`` are
     single-sourced here so they cannot silently diverge. Warning only —
-    callers' plans and oracle hashes are unchanged. Skipped when
-    ``SPARK_GRAFT_PREFLIGHT=0`` (explain-only / dry-run flows must not
-    execute work at construction time — ADVICE r10 #2)."""
-    from ..config import preflights_enabled
+    callers' plans and oracle hashes are unchanged. It runs its sample
+    jobs at query construction time."""
     from ..operators.dedup import warn_if_signature_space_saturated
-
-    if not preflights_enabled():
-        return
 
     probe = docs.orderBy(F.md5(F.col("doc_id").cast("string"))).limit(
         _SIG_SAT_SAMPLE

@@ -29,11 +29,9 @@ TABLES = (
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    # DuckDB defaults to ALL cores per process; under run_suite.sh's
-    # seven concurrent pytest groups (each already holding a local[8]
-    # Spark JVM) that oversubscribed the 32-core box ~3x and inflated
-    # every group's wall time (r13 rebalance measurement). Oracle SQL at
-    # sf0.01 is sub-second either way — cap it.
+    # DuckDB defaults to ALL cores per process, on top of the cores the
+    # suite's Spark JVM already uses. Oracle SQL at sf0.01 is sub-second
+    # either way — cap it.
     con.execute("SET threads = 4")
     for t in TABLES:
         con.execute(

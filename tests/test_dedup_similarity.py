@@ -640,32 +640,6 @@ def test_ivf_build_memo_evicts_dead_entries(spark):
     s.clear_ivf_build_cache()
 
 
-def test_preflight_env_gate_keeps_construction_lazy(spark, monkeypatch):
-    """ADVICE r10 #2: with SPARK_GRAFT_PREFLIGHT=0 the warning-only
-    guardrails must not run eager Spark jobs at query-construction time
-    (explain-only flows). The gate never changes a plan or output — only
-    whether the advisory sample job runs."""
-    import warnings
-
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.config import preflights_enabled
-
-    assert preflights_enabled()
-    monkeypatch.setenv("SPARK_GRAFT_PREFLIGHT", "0")
-    assert not preflights_enabled()
-    # a frame whose evaluation would throw proves no job ran
-    poisoned = spark.createDataFrame(
-        [(1, [0.0])], "vec_id: long, embedding: array<double>"
-    ).filter(F.expr("assert_true(vec_id < 0) IS NULL OR vec_id >= 0"))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", s.NoiseFloorWarning)
-        assert s.warn_if_threshold_in_noise_floor(poisoned, 0.45) == float("inf")
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries.multimodal import (
-        _preflight_signature_saturation,
-    )
-
-    _preflight_signature_saturation(poisoned)  # must not touch the frame
-
-
 def test_noise_floor_bound_inert_at_oracle_sfs(spark):
     """VERDICT r10 #1 inertness pin: the bounded-output resolution must
     NOT fire at the oracle-checked SFs — every recorded hash depends on

@@ -134,10 +134,6 @@ def test_bucketed_join_no_exchange(spark, tmp_path):
     monitoring join's shuffle entirely: the bucket-to-bucket join plans
     with ZERO exchanges (the 100 TB fix called out in
     operators/monitoring.py's scale notes)."""
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.inspect import (
-        broadcast_exchange_count,
-        shuffle_exchange_count,
-    )
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.sources.readers import (
         write_bucketed_table,
     )
@@ -157,8 +153,9 @@ def test_bucketed_join_no_exchange(spark, tmp_path):
         joined = spark.table("b_cpu").join(
             spark.table("b_mem"), on=["ts", "server_id"], how="inner"
         )
-        assert shuffle_exchange_count(joined) == 0, "bucketed join must not shuffle"
-        assert broadcast_exchange_count(joined) == 0
+        report = plan_report(joined)
+        assert report["exchanges"] == 0, "bucketed join must not shuffle"
+        assert report["broadcast_exchanges"] == 0
         assert joined.count() == cpu.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
@@ -173,10 +170,6 @@ def test_bucketed_flagship_job_no_exchange(spark, job):
     any kind: hash(user_id) bucketing satisfies both the join's
     (ts, user_id) and the agg's (user_id, window) clustering, so the
     per-query shuffles become a one-time landing cost."""
-    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.inspect import (
-        broadcast_exchange_count,
-        shuffle_exchange_count,
-    )
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries import (
         monitoring as monq,
     )
@@ -189,8 +182,9 @@ def test_bucketed_flagship_job_no_exchange(spark, job):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
     try:
         df = bucketed(spark, SF_DIR)
-        assert shuffle_exchange_count(df) == 0, "bucketed flagship must not shuffle"
-        assert broadcast_exchange_count(df) == 0
+        report = plan_report(df)
+        assert report["exchanges"] == 0, "bucketed flagship must not shuffle"
+        assert report["broadcast_exchanges"] == 0
         got = sorted(tuple(r) for r in df.collect())
         want = sorted(tuple(r) for r in plain(spark, SF_DIR).collect())
         assert got == want

@@ -1,7 +1,7 @@
 """Checks on the repository's own scaffolding rather than the engine.
 
-- ``tests/run_suite.sh`` runs every test file, and its shards cover each
-  sharded file completely;
+- the benchmark's self-tests pass, so the suite command covers them too;
+- the plan dump's normaliser makes two builds of one plan read the same;
 - no test module shadows one test definition with another of the same name;
 - ``bench.py``'s output line fits the driver's stdout budget with the full
   headline set;
@@ -15,6 +15,8 @@ import glob
 import json
 import os
 import re
+import subprocess
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,66 +51,43 @@ def test_registry_is_the_modules_tables_in_order():
     assert list(all_queries()) == [name for m in _MODULES for name in m.QUERIES]
 
 
-def test_suite_runner_covers_every_test_file():
-    """tests/run_suite.sh partitions the suite into parallel pytest groups
-    by EXPLICIT file list — a newly added test file that is not placed in
-    a group would silently never run in the suite lane (found nearly-live
-    in r07: test_streaming_stores.py split out of test_streaming.py had to
-    be added to a group by hand). Pin: every tests/test_*.py appears in
-    the runner exactly once, unsharded — OR in several groups whose
-    SPARK_GRAFT_FILE_SHARD specs form a COMPLETE cover (same n, shards
-    0..n-1): a duplicate without complete shards would either re-run
-    tests (wasted wall) or, worse, a missing shard would silently never
-    run part of the file."""
-    script = open(os.path.join(REPO, "tests", "run_suite.sh")).read()
-    listed = re.findall(r"tests/(test_\w+\.py)", script)
-    on_disk = sorted(
-        os.path.basename(p) for p in glob.glob(os.path.join(REPO, "tests", "test_*.py"))
+def test_benchmark_self_tests_pass():
+    """The benchmark's self-tests import the alert jobs the engine defines,
+    so a change there must keep the benchmark's gate working. They run in
+    their own process: perfbench's conftest builds its own ``local[2]``
+    session named ``spark`` and stops it at teardown."""
+    proc = subprocess.run(
+        [sys.executable, "-m", "pytest", "perfbench/tests", "-q", "-p", "no:cacheprovider"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=1200,
     )
-    missing = [f for f in on_disk if f not in listed]
-    assert not missing, f"test files absent from run_suite.sh groups: {missing}"
+    tail = "\n".join((proc.stdout + proc.stderr).splitlines()[-40:])
+    assert proc.returncode == 0, f"perfbench/tests failed:\n{tail}"
 
-    shard_m = re.search(r"\bshards=\(([^)]*)\)", script)
-    shard_list = re.findall(r'"([^"]*)"', shard_m.group(1)) if shard_m else []
-    # (spec, group) per file: a group's spec shards every file it lists.
-    file_shards: dict[str, list[tuple[str, int]]] = {}
-    group_files: dict[int, list[str]] = {}
-    for num, body in re.findall(r'GROUP(\d+)="([^"]*)"', script, re.S):
-        idx = int(num) - 1
-        spec = shard_list[idx] if idx < len(shard_list) else ""
-        group_files[idx] = re.findall(r"tests/(test_\w+\.py)", body)
-        for f in group_files[idx]:
-            file_shards.setdefault(f, []).append((spec, idx))
-    for f, entries in file_shards.items():
-        specs = [s for s, _ in entries]
-        if len(entries) == 1:
-            # Single-listed: it must NOT be sharded, or part of the file
-            # silently never runs (r14 review: the old pin skipped this).
-            assert not specs[0], (
-                f"{f} is listed once but sharded {specs[0]} — its other "
-                "shards run nowhere"
-            )
-            continue
-        parsed = sorted(tuple(int(x) for x in s.split("/")) for s in specs if s)
-        assert len(parsed) == len(specs), (
-            f"{f} listed in more than one group without shard specs "
-            f"(specs per group: {entries})"
-        )
-        ns = {n for _, n in parsed}
-        assert len(ns) == 1 and [s for s, _ in parsed] == list(range(parsed[0][1])), (
-            f"{f}: shard specs {specs} do not form a complete 0..n-1 cover"
-        )
-        # The shard is by COLLECTION INDEX across the whole group
-        # (conftest): a 0..n-1 spec cover only covers the ITEMS if every
-        # group in the cover collects the identical item sequence, i.e.
-        # byte-identical file lists, order included. A reordered twin
-        # would drop some items into no shard while this pin stayed green.
-        lists = {i: group_files[i] for _, i in entries}
-        first = next(iter(lists.values()))
-        assert all(fl == first for fl in lists.values()), (
-            f"{f}: shard cover groups {sorted(lists)} list different file "
-            f"sequences — the index-based shards are not complements: {lists}"
-        )
+
+def test_plan_dump_normalises_two_builds_of_one_plan(spark):
+    """``tools/plan_dump.py`` compares trees by ``diff -r`` of normalised
+    plans. The bucketed flagship names its tables by pid, lands under a
+    temp directory and plans exchanges, and each build draws new
+    expression ids: two raw builds differ, their normalised texts must not,
+    and no ``_<pid>`` table suffix may survive."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.inspect import (
+        formatted_plan,
+    )
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries.monitoring import (
+        monitor_cpu_mem_alerts_bucketed,
+    )
+    from tools.plan_dump import normalise
+
+    from .conftest import SF_SMOKE
+
+    a, b = (formatted_plan(monitor_cpu_mem_alerts_bucketed(spark, SF_SMOKE)) for _ in range(2))
+    pid_suffix = re.compile(rf"_{os.getpid()}(?!\d)")
+    assert a != b and pid_suffix.search(a)
+    assert normalise(a) == normalise(b)
+    assert not pid_suffix.search(normalise(a))
 
 
 def test_no_shadowed_test_definitions():

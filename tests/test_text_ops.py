@@ -868,6 +868,9 @@ def test_hot_key_regime_split_plans_differ_results_agree(spark, monkeypatch):
     query: the two modes must return identical rows (the switch may
     never change results), and their plans must actually differ (else
     the switch is dead code and the at-scale regime silently vanished)."""
+    from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.functions import (
+        scale,
+    )
     from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.inspect import (
         plan_report,
     )
@@ -886,7 +889,9 @@ def test_hot_key_regime_split_plans_differ_results_agree(spark, monkeypatch):
     ]
     outs = {}
     for mode in ("window", "join"):
-        monkeypatch.setenv("SPARK_GRAFT_HOT_KEY_MODE", mode)
+        if mode == "join":
+            # Every input is past a 0-byte threshold: the at-scale regime.
+            monkeypatch.setattr(scale, "HOT_KEY_JOIN_BYTES", 0)
         for n in names:
             spark.catalog.clearCache()
             df = q[n](spark, SF_SMOKE)

@@ -1,61 +1,83 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for registry queries into plans/r16/.
+"""Dump registry queries' ``explain("formatted")`` for plan-identity checks.
 
-Usage: python tools/plan_dump.py <suffix> [q1,q2,...]
-Writes plans/r16/<query>_<suffix>.txt (suffix = before|after) with the
-formatted physical plan plus the plans.inspect.plan_report summary line,
-so optimization claims ("2 Exchange -> 1", "SortMergeJoin ->
-BroadcastHashJoin") are checkable against committed files without a
-Spark install. Default query set: the bench HEADLINE list.
+Usage: python tools/plan_dump.py OUT_DIR [--sf-dir DIR] [NAME ...]
 
-NOTE: queries that execute inside their builder (rel_observe_metrics,
-dedup_stream_store_recheck) return a local 1-row frame; their dumped
-plan is the trivial LocalTableScan — the load-bearing internal plans
-are census-guarded in tests instead (ADVICE r14 #3 pattern).
+Builds each named registry query (default: all of them) over DIR (default:
+the sf0.001 test data) in one session and writes its formatted physical
+plan to OUT_DIR/<name>.txt, through :func:`normalise`. Two trees plan
+identically when ``diff -r`` of their dumps is empty, so dump the parent
+and the change with the same $SPARK_GRAFT_CPUS. The cache is cleared
+before each query, so no plan reads another query's cached data.
+Queries that execute inside their builder return a local frame; their dump
+is that frame's trivial plan. Nothing is left outside OUT_DIR.
 """
 from __future__ import annotations
 
-import json
+import argparse
 import os
+import re
 import sys
+import tempfile
+import warnings
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-import bench  # noqa: E402
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark import (  # noqa: E402
     session,
 )
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.plans.inspect import (  # noqa: E402
     formatted_plan,
-    plan_report,
 )
 from real_time_server_monitoring_distributed_pipeline_with_apache_kafka_and_spark_spark.queries import (  # noqa: E402
     all_queries,
 )
 
 
+def normalise(plan: str, pid: int | None = None) -> str:
+    """``plan`` with what differs between two builds of one plan replaced:
+    temp-directory names (``<tmp>``, the path below them kept), the
+    ``_<pid>`` suffix of per-process table names, expression ids (``#123``)
+    and exchange ``plan_id``s."""
+    pid = os.getpid() if pid is None else pid
+    plan = re.sub(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]\)]+", "<tmp>", plan)
+    plan = re.sub(rf"_{pid}(?!\d)", "_<pid>", plan)
+    plan = re.sub(r"#\d+", "#", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=", plan)
+
+
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2].split(",") if len(sys.argv) > 2 else list(bench.HEADLINE)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("out_dir")
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+
+    # Python workers import the package from PYTHONPATH, whatever the cwd.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
     )
-    os.makedirs(out_dir, exist_ok=True)
-    spark = session.get_spark(app_name="rtsm-plan-dump")
-    spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    for name in names:
-        df = queries[name](spark, sf_dir)
-        report = plan_report(df)
-        text = (
-            f"# {name} @ {sf_dir} — plan_report: {json.dumps(report)}\n\n"
-            + formatted_plan(df)
-        )
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(text)
-        print(f"{name}: {json.dumps(report)}", flush=True)
-    spark.stop()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    out_dir, sf_dir = os.path.abspath(args.out_dir), os.path.abspath(args.sf_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    # Spark creates its warehouse directory in the working directory.
+    with tempfile.TemporaryDirectory() as cwd:
+        os.chdir(cwd)
+        spark = session.get_spark(app_name="rtsm-plan-dump")
+        spark.sparkContext.setLogLevel("ERROR")
+        for name in args.names or queries:
+            spark.catalog.clearCache()
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                plan = formatted_plan(queries[name](spark, sf_dir))
+            with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+                f.write(normalise(plan))
+            print(name, flush=True)
+        spark.stop()
 
 
 if __name__ == "__main__":
